@@ -1,36 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark runner: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":…,"value":…,"queries":{…},"sf":…}.
   *
   * Honesty rules: results are fully materialized through the `noop` sink
   * (every row is produced, nothing is skipped by count-only shortcuts), and
   * one warmup query amortizes JVM/codegen startup out of the first
-  * measurement. Config mirrors the 100 TB design defaults: AQE on,
+  * measurement. The session comes from [[Engine.create]]: AQE on,
   * shuffle partitions sized to the executor thread count (not 200).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // config experiments (e.g. state-store provider A/B runs):
-    // SPARK_GRAFT_CONF="k=v;k=v" overrides/extends the defaults above
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => System.err.println(s"[bench] ignoring malformed conf entry: $kv")
-        }
-      })
-    val spark = builder.getOrCreate()
+    val spark = Engine.create(s"local[$cpus]", federation = false)
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(name: String): Unit =

@@ -2,11 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-call engine bootstrap — SURVEY.md §7.2 M0's `EngineSession`: builds
-  * the session the way every driver entry point (Bench/Verify) configures
-  * it, registers the catalog (the analog of the reference's
-  * `load_catalog`, `src/sqldb/postgres/mod.rs:67-125`), and optionally
-  * installs the federated pushdown rule + strategy.
+/** The session factory: every entry point (Bench, Verify, PlanDump,
+  * PlanAudit) builds its session here, so the config they run under is
+  * defined once. Builds the session, registers the SQL surface of the
+  * native functions and, with `federation`, installs the pushdown rules
+  * and strategy and the `graft_db` catalog (the analog of the reference's
+  * `make_rdbms_context` + `load_catalog`, `src/lib.rs:22-32`,
+  * `src/sqldb/postgres/mod.rs:67-125`).
+  *
+  * `federation = false` is the plain session the oracle-checked entries
+  * run under. The rules then stay out of the session; the entries that
+  * need them scope them to a child session (`GraftExtensions.newSession`,
+  * `MaterializedViews.install`).
   *
   * A user of the reference switches to this engine with:
   * {{{
@@ -19,7 +26,11 @@ object Engine {
 
   /** Session defaults that embody the scale design (SCALE.md): AQE on for
     * runtime coalescing/skew handling, shuffle partitions sized to cores
-    * (not the 200 default), UTC so timestamp semantics match the oracle. */
+    * (not the 200 default), UTC so timestamp semantics match the oracle.
+    * `federation` installs the graft rules as `extraOptimizations`, which
+    * run after V2 scan pushdown; [[graft.plans.GraftExtensions]] puts them
+    * in the operator-optimization batch, before it. The two placements fuse
+    * different plans, so both are kept. */
   def create(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Option[Int] = None,
       federation: Boolean = true): SparkSession = {

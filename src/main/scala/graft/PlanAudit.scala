@@ -395,13 +395,10 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static plans: an unexecuted AdaptiveSparkPlan prints the
-      // pre-codegen initial plan, hiding WholeStageCodegen spans
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Engine.create("local[8]", federation = false)
+    // static plans: an unexecuted AdaptiveSparkPlan prints the
+    // pre-codegen initial plan, hiding WholeStageCodegen spans
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     // `--shuffle <dir>`: measure shuffle records for the budgeted entries
     // (coefficient calibration / manual re-check); default: plan sweep

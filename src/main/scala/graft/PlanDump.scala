@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool (r19 optimization round): dump `.explain("formatted")` for
@@ -9,9 +8,9 @@ import java.nio.file.{Files, Paths}
   *
   * args: <sfDir> <outDir> <suffix> [entryName...]
   * writes <outDir>/<entry>_<suffix>.txt for each entry (all entries when
-  * none are named). Session config mirrors graft.Bench (same master /
-  * shuffle-partition / AQE settings) so the captured plan is the plan the
-  * bench executes.
+  * none are named). The session is built like graft.Bench's (both go
+  * through [[Engine.create]]), so the captured plan is the plan the bench
+  * executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,13 +19,7 @@ object PlanDump {
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.create(s"local[$cpus]", federation = false)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

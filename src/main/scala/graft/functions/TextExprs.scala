@@ -327,16 +327,18 @@ case class SpanShingleHashes(child: Expression, k: Int)
           s"$prettyName expects string or array<string>, got ${other.simpleString(10)}")
     }
 
-  // def, not val: child.dataType is unresolved at construction time
-  private def fromText = child.dataType == StringType
+  // def, not val: child.dataType is unresolved at construction time. Not
+  // named `fromText`: a class member of that name suppresses the companion's
+  // static forwarder that doGenCode's generated Java calls.
+  private def isTextInput = child.dataType == StringType
 
   override def nullSafeEval(in: Any): Any =
-    if (fromText) SpanShingleHashes.fromText(in.asInstanceOf[UTF8String], k)
+    if (isTextInput) SpanShingleHashes.fromText(in.asInstanceOf[UTF8String], k)
     else SpanShingleHashes.fromTokens(in.asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val helper =
-      if (fromText) "graft.functions.SpanShingleHashes.fromText"
+      if (isTextInput) "graft.functions.SpanShingleHashes.fromText"
       else "graft.functions.SpanShingleHashes.fromTokens"
     nullSafeCodeGen(ctx, ev, c => s"""
       |${CodeGenerator.javaType(dataType)} r = $helper($c, $k);

@@ -1275,8 +1275,9 @@ object Dedup {
         // because edges carry both directions, so the id set is identical
         // to the old distinct().
         var lab = edges
-          .groupBy(col("src").as("id"))
-          .agg(least(col("id"), min(col("dst"))).as("label"))
+          .groupBy("src")
+          .agg(least(col("src"), min(col("dst"))).as("label"))
+          .withColumnRenamed("src", "id")
           .localCheckpoint()
         var changed = 1L
         var i = 0

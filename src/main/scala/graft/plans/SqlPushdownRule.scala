@@ -534,45 +534,12 @@ object GraftExtensions {
     * V2ScanRelationPushDown — which [[install]]'s `extraOptimizations`
     * placement cannot do. Required for MV rewrite over federated bases
     * with filters: after pushdown the scan has absorbed them and the
-    * rewrite must decline. `getOrCreate` only applies builder extensions
-    * to a new session, so the active/default slots are cleared for the
-    * call and restored after.
-    *
-    * CONCURRENCY CAVEAT: the lock below serializes newSession() callers
-    * only. An UNRELATED concurrent `SparkSession.builder().getOrCreate()`
-    * elsewhere in the process does not take it and can observe the
-    * cleared slots (building a session it didn't need) or capture the
-    * extensions-laden session as its own default. Fine for the
-    * single-threaded entry/test usage this serves; a long-lived
-    * multi-tenant process should build its sessions up front instead of
-    * interleaving getOrCreate with this call. */
-  def newSession(): SparkSession = synchronized {
-    // synchronized: the active/default slots are process-global — two
-    // concurrent builders interleaving clear/restore would leak the
-    // wrong session into one of them
-    val active = SparkSession.getActiveSession
-    val default = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try SparkSession.builder()
-      .withExtensions(new GraftExtensions().apply(_))
-      .getOrCreate()
-    finally {
-      // restore EXACTLY the prior state: getOrCreate installed the new
-      // session into both slots, so when a slot was previously empty it
-      // must be CLEARED, not left pointing at the extension session —
-      // otherwise every later plain getOrCreate() in the process would
-      // silently inherit the graft optimizer rules
-      default match {
-        case Some(s) => SparkSession.setDefaultSession(s)
-        case None => SparkSession.clearDefaultSession()
-      }
-      active match {
-        case Some(s) => SparkSession.setActiveSession(s)
-        case None => SparkSession.clearActiveSession()
-      }
-    }
-  }
+    * rewrite must decline. `create()` always builds a new session, and it
+    * fills the default and active session slots only where they are
+    * empty, so the sessions already in place are left as they are. Its
+    * own `newSession()` children inherit the rules. */
+  def newSession(): SparkSession =
+    SparkSession.builder().withExtensions(new GraftExtensions).create()
 
   /** Runtime installation on an existing session. */
   def install(spark: SparkSession): Unit = {

@@ -599,14 +599,23 @@ object WarcIngest {
       .flatMap(parseAnyArchive _)
       .toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val valid = rows.filter(col("errorClass") === "")
-      .select(col("docId").as("doc_id"), col("text"), col("lang"),
-        col("targetUri").as("target_uri"))
     val quarantine = rows.filter(col("errorClass") =!= "")
       .select(col("targetUri").as("target_uri"),
         col("errorClass").as("error_class"))
-    (valid, quarantine)
+    (validChannel(rows), quarantine)
   }
+
+  /** The valid channel of parsed rows. The parser quarantines every record
+    * without a doc id, so a valid row with a null `docId` is a parser bug:
+    * it fails the action instead of leaking a null `doc_id` into the
+    * downstream dedup and join keys. */
+  private[graft] def validChannel(rows: DataFrame): DataFrame =
+    rows.filter(col("errorClass") === "")
+      .select(
+        when(col("docId").isNull,
+          raise_error(lit("WARC parser emitted a valid row without a doc id")))
+          .otherwise(col("docId")).as("doc_id"),
+        col("text"), col("lang"), col("targetUri").as("target_uri"))
 
   val entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // the valid channel: full text round-trips the HTTP payload, so the

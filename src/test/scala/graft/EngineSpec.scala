@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The one-call bootstrap must yield a session that answers corpus SQL and
   * carries the pushdown rule. (Reuses the shared test session's JVM; the
@@ -48,5 +50,67 @@ class EngineSpec extends AnyFunSuite {
       .orderBy("o_orderpriority")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got == want && got.nonEmpty)
+  }
+
+  test("Engine.create(federation = false) is the plain session config, in a fresh JVM") {
+    // a fresh JVM, as for Bench/Verify/PlanDump/PlanAudit: in this one the
+    // shared test session (which other specs extend) would be returned
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(javaBin, "-Xmx1g") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.EngineContractMain")
+    val out = new StringBuilder
+    val err = new StringBuilder
+    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => err.append(l).append('\n')))
+    assert(code == 0, err.takeRight(4000).toString)
+    val Contract = """contract:([^=]+)=(.*)""".r
+    val got = out.toString.linesIterator.collect { case Contract(k, v) => k -> v }.toMap
+    assert(got == Map(
+      "shuffle.partitions" -> "3",
+      "adaptive.enabled" -> "true",
+      "session.timeZone" -> "UTC",
+      "ui.enabled" -> "false",
+      "extraOptimizations" -> "",
+      "extraStrategies" -> "",
+      "sql.extensions" -> "None",
+      "catalog.graft_db" -> "None"), out.toString)
+  }
+
+  test("src/main builds sessions only through Engine.create and GraftExtensions.newSession") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50)
+    def hits(f: Path, needle: String) = Files.readAllLines(f).asScala.zipWithIndex
+      .collect { case (l, i) if l.contains(needle) => (f.getFileName.toString, i + 1, l.trim) }
+    val builders = files.flatMap(hits(_, "SparkSession.builder(")).filterNot {
+      case (file, _, line) => file == "Engine.scala" ||
+        line == "SparkSession.builder().withExtensions(new GraftExtensions).create()"
+    }
+    assert(builders.isEmpty, s"build sessions through Engine.create: $builders")
+    val slots = files.flatMap(f =>
+      hits(f, "setDefaultSession") ++ hits(f, "clearDefaultSession"))
+    assert(slots.isEmpty, s"no code may swap the default session: $slots")
+  }
+}
+
+/** Child-JVM side of the session-contract test: prints what a fresh
+  * `Engine.create("local[3]", federation = false)` session carries. */
+object EngineContractMain {
+  def main(args: Array[String]): Unit = {
+    val spark = Engine.create("local[3]", federation = false)
+    def show(k: String, v: Any): Unit = println(s"contract:$k=$v")
+    show("shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions"))
+    show("adaptive.enabled", spark.conf.get("spark.sql.adaptive.enabled"))
+    show("session.timeZone", spark.conf.get("spark.sql.session.timeZone"))
+    show("ui.enabled", spark.sparkContext.getConf.get("spark.ui.enabled", "true"))
+    show("extraOptimizations", spark.experimental.extraOptimizations.mkString(","))
+    show("extraStrategies", spark.experimental.extraStrategies.mkString(","))
+    show("sql.extensions", spark.conf.getOption("spark.sql.extensions"))
+    show("catalog.graft_db", spark.conf.getOption("spark.sql.catalog.graft_db"))
+    spark.stop()
   }
 }

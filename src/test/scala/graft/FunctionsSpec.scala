@@ -324,4 +324,25 @@ class FunctionsSpec extends AnyFunSuite {
     val diff = old.exceptAll(neu).union(neu.exceptAll(old))
     assert(diff.count() === 0, s"seg_count diverged: ${diff.collect().mkString(", ")}")
   }
+
+  test("span_shingles compiles under CODEGEN_ONLY on string and array<string> input") {
+    // no silent interpreted fallback: a compile error in doGenCode (e.g. a
+    // missing static helper) must fail the query, not just log
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    // repartition keeps the projection out of ConvertToLocalRelation,
+    // which would evaluate it interpreted at optimization time
+    val df = s.createDataFrame(Seq(
+      Tuple1("alpha beta gamma delta"), Tuple1("one two"),
+      Tuple1("\u4e2d\u6587 mixed \u5b57 text with tokens"))).toDF("text").repartition(1)
+    val fromText = df.select(span_shingles(col("text"), 3).as("sh"))
+    val fromTokens = df.select(span_shingles(split(col("text"), " "), 3).as("sh"))
+    for (q <- Seq(fromText, fromTokens)) {
+      val rows = q.collect()
+      assert(rows.length == 3)
+      assert(rows(1).isNullAt(0), "fewer than k tokens is null")
+      assert(rows(0).getSeq[AnyRef](0).size == 2)
+    }
+  }
 }

@@ -301,4 +301,15 @@ class WarcIngestSpec extends AnyFunSuite {
         .orderBy("target_uri").collect().toSeq
     assert(drift(qGz) == drift(qZst))
   }
+
+  test("a valid row without a doc id fails the action instead of yielding a null doc_id") {
+    import spark.implicits._
+    val rows = Seq(
+      WarcIngest.WarcRow(Some(1L), "kept", "en", "http://example.com/doc/1", ""),
+      WarcIngest.WarcRow(None, "orphan", "en", "http://example.com/doc/x", "")).toDF()
+    val err = intercept[Exception](WarcIngest.validChannel(rows).collect())
+    assert(err.getMessage.contains("without a doc id"), err.getMessage)
+    // the same channel over well-formed rows is untouched
+    assert(WarcIngest.validChannel(rows.limit(1)).collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
 }
