@@ -28,9 +28,10 @@ object Engine {
     * runtime coalescing/skew handling, shuffle partitions sized to cores
     * (not the 200 default), UTC so timestamp semantics match the oracle.
     * `federation` installs the graft rules as `extraOptimizations`, which
-    * run after V2 scan pushdown; [[graft.plans.GraftExtensions]] puts them
-    * in the operator-optimization batch, before it. The two placements fuse
-    * different plans, so both are kept. */
+    * run after V2 scan pushdown and fuse whatever the scan left;
+    * [[graft.plans.GraftExtensions]] puts them in the operator-optimization
+    * batch, before it, where the MV rewrite over filtered federated bases
+    * needs them. */
   def create(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Option[Int] = None,
       federation: Boolean = true): SparkSession = {

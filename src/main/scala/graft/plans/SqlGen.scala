@@ -78,7 +78,9 @@ object SqlGen {
       * set as [[typeName]]: a type can be creatable but not a legal cast
       * target (Derby forbids numeric→VARCHAR). The V2 renderer enforces
       * that only casts Spark deems lossless (canUpCast) reach this hook —
-      * ANSI mode offers every cast, semantics-divergent ones included. */
+      * ANSI mode offers every cast, semantics-divergent ones included.
+      * [[SqlGen]] spells its own CAST targets with it too, where it names
+      * the type ([[castAllowed]] decides which casts render there). */
     def castTypeName(dt: DataType): Option[String] = typeName(dt)
     /** Remainder rendering; None = residual (Derby spells it MOD() with
       * integer-only, differently-signed semantics — not worth guessing). */
@@ -117,9 +119,15 @@ object SqlGen {
       * generator emits (e.g. "ROUND", "STDDEV_SAMP"). Backends with gaps
       * override with their probed surface. */
     def supportsFunction(name: String): Boolean = true
+    /** Rendering of a scalar call the generator emits as `NAME(args…)`
+      * (pre-rendered arguments); None keeps it in Spark. Dialects that
+      * spell a function differently rewrite it here (Postgres has no
+      * YEAR/MONTH/DAY). */
+    def functionCall(name: String, args: Seq[String]): Option[String] =
+      if (supportsFunction(name)) Some(s"$name(${args.mkString(", ")})") else None
     /** Whether CAST(from AS to) parses AND preserves Spark's semantics on
       * this backend (Derby rejects string→numeric outright; its DECIMAL
-      * ceiling is 31). The generic type spelling is still [[SqlGen]]'s. */
+      * ceiling is 31). */
     def castAllowed(from: DataType, to: DataType): Boolean = true
     /** SUM/AVG argument rewrites for dialects whose aggregates keep the
       * argument's type instead of widening like Spark (Derby AVG(INT)
@@ -303,6 +311,24 @@ object SqlGen {
     case Deduplicate(keys, child) if keys.map(_.exprId).toSet == child.output.map(_.exprId).toSet =>
       gen(child, R).map(c => s"SELECT DISTINCT * FROM ($c) ${nextAlias()}")
 
+    // Spark plans a single-column NOT IN as a null-aware anti join: keep
+    // a left row iff `a = b` is FALSE for every right row, i.e. the
+    // condition `a = b OR isnull(a = b)` is never TRUE. That is exactly
+    // `a NOT IN (SELECT b …)` under three-valued logic — an empty right
+    // side keeps every row, a NULL on either side keeps none — and
+    // backends run NOT IN as one hashed subplan where the NOT EXISTS form
+    // below re-evaluates the OR for every pair.
+    case Join(left, right, LeftAnti, Some(cond), _)
+        if notInKeys(cond, left, right).isDefined =>
+      val (a, b) = notInKeys(cond, left, right).get
+      for {
+        l <- gen(left, R)
+        r <- gen(right, R)
+        as <- expr(a)
+        bs <- expr(b)
+      } yield s"SELECT * FROM ($l) ${nextAlias()} WHERE $as NOT IN " +
+        s"(SELECT $bs FROM ($r) ${nextAlias()})"
+
     // Semi/anti joins render as (NOT) EXISTS — the reference *rejects*
     // these join types outright (`src/parser.rs:1180-1190`); rendering them
     // pushes a subtree it cannot. Output is the left side only, so the
@@ -310,8 +336,8 @@ object SqlGen {
     // its predicate — the unique `c<exprId>` renaming makes the outer
     // references unambiguous by construction. NULL semantics line up
     // exactly: LeftAnti keeps a row iff no right row satisfies the
-    // condition, which is NOT EXISTS verbatim (incl. the null-aware
-    // `k = k OR k IS NULL` conditions Spark plans for NOT IN).
+    // condition, which is NOT EXISTS verbatim (incl. null-aware conditions
+    // the single-key NOT IN arm above does not take).
     case Join(left, right, jt @ (LeftSemi | LeftAnti), condition, _) =>
       for {
         l <- gen(left, R)
@@ -413,6 +439,25 @@ object SqlGen {
       } yield s"SELECT *, ${items.mkString(", ")} FROM ($c) ${nextAlias()}"
 
     case other => Left(Unsupported(s"plan node ${other.nodeName}"))
+  }
+
+  /** (left key, right key) of a null-aware anti-join condition
+    * `a = b OR isnull(a = b)` (either operand order, either side order),
+    * when `a` reads only the left side and `b` only the right. */
+  private def notInKeys(cond: Expression, left: LogicalPlan,
+      right: LogicalPlan): Option[(Expression, Expression)] = {
+    val eq = cond match {
+      case Or(e: EqualTo, IsNull(n)) if e.semanticEquals(n) => Some(e)
+      case Or(IsNull(n), e: EqualTo) if e.semanticEquals(n) => Some(e)
+      case _ => None
+    }
+    def reads(e: Expression, side: LogicalPlan) =
+      e.deterministic && e.references.subsetOf(side.outputSet)
+    eq.flatMap { case EqualTo(x, y) =>
+      if (reads(x, left) && reads(y, right)) Some((x, y))
+      else if (reads(y, left) && reads(x, right)) Some((y, x))
+      else None
+    }
   }
 
   private def setOp(left: LogicalPlan, right: LogicalPlan, kw: String,
@@ -536,6 +581,16 @@ object SqlGen {
       }
     case Like(l, r, '\\') =>
       for { ls <- expr(l); rs <- expr(r) } yield s"($ls LIKE $rs)"
+    // the optimizer turns `LIKE 'p%'` into StartsWith (and `'%p'`, `'%p%'`
+    // into EndsWith / Contains); back to LIKE only for a literal free of
+    // LIKE metacharacters, whose escape syntax differs across backends
+    // (binary collation only: a collated StartsWith compares differently)
+    case StartsWith(l, Literal(v: org.apache.spark.unsafe.types.UTF8String, _))
+        if likeSafe(l, v) => likeLiteral(l, s"$v%")
+    case EndsWith(l, Literal(v: org.apache.spark.unsafe.types.UTF8String, _))
+        if likeSafe(l, v) => likeLiteral(l, s"%$v")
+    case Contains(l, Literal(v: org.apache.spark.unsafe.types.UTF8String, _))
+        if likeSafe(l, v) => likeLiteral(l, s"%$v%")
     case CaseWhen(branches, elseValue) =>
       for {
         bs <- sequence(branches.map { case (c, v) =>
@@ -648,10 +703,6 @@ object SqlGen {
     case ae: AggregateExpression =>
       val dial = currentDialect.get
       val d = if (ae.isDistinct) "DISTINCT " else ""
-      def statFn(name: String, args: Expression*): Res[String] =
-        if (!dial.supportsFunction(name))
-          Left(Unsupported(s"function $name on this dialect"))
-        else sequence(args.map(expr)).map(ss => s"$name(${ss.mkString(", ")})")
       val base: Res[String] = ae.aggregateFunction match {
         // try_sum / try_avg (EvalMode.TRY inside NumericEvalContext) return
         // NULL where these would error — no shared SQL form, stay in Spark
@@ -678,13 +729,13 @@ object SqlGen {
         // statistical aggregates (reference surface parser.rs:879-891,
         // enumerated todo!() there) — names shared by Spark/DuckDB/Postgres
         // and (minus CORR/COVAR) Derby 10.16, hence the per-name gate
-        case StddevSamp(c, _) => statFn("STDDEV_SAMP", c)
-        case StddevPop(c, _) => statFn("STDDEV_POP", c)
-        case VarianceSamp(c, _) => statFn("VAR_SAMP", c)
-        case VariancePop(c, _) => statFn("VAR_POP", c)
-        case Corr(l, r, _) => statFn("CORR", l, r)
-        case CovSample(l, r, _) => statFn("COVAR_SAMP", l, r)
-        case CovPopulation(l, r, _) => statFn("COVAR_POP", l, r)
+        case StddevSamp(c, _) => fnCall("STDDEV_SAMP", c)
+        case StddevPop(c, _) => fnCall("STDDEV_POP", c)
+        case VarianceSamp(c, _) => fnCall("VAR_SAMP", c)
+        case VariancePop(c, _) => fnCall("VAR_POP", c)
+        case Corr(l, r, _) => fnCall("CORR", l, r)
+        case CovSample(l, r, _) => fnCall("COVAR_SAMP", l, r)
+        case CovPopulation(l, r, _) => fnCall("COVAR_POP", l, r)
         case la: ListAgg =>
           for {
             a <- expr(la.child)
@@ -720,7 +771,7 @@ object SqlGen {
     case Month(c) => fnCall("MONTH", c)
     case DayOfMonth(c) => fnCall("DAY", c)
     case Round(c, IntegerLiteral(n), _) =>
-      gate("ROUND")(expr(c).map(s => s"ROUND($s, $n)"))
+      expr(c).flatMap(s => call("ROUND", Seq(s, n.toString)))
     case Substring(str, pos, len) => fnCall("SUBSTRING", str, pos, len)
     // Spark's concat is NULL-propagating; so is infix `||` on every ANSI
     // backend, while CONCAT() skips NULLs on DuckDB/Postgres — so the
@@ -758,8 +809,7 @@ object SqlGen {
     // parser.rs:768-806)
     case TruncTimestamp(Literal(fmt: org.apache.spark.unsafe.types.UTF8String, _), c, _)
         if SharedTruncParts.contains(fmt.toString.toLowerCase) =>
-      gate("DATE_TRUNC")(
-        expr(c).map(s => s"DATE_TRUNC(${sqlString(fmt.toString.toLowerCase)}, $s)"))
+      expr(c).flatMap(s => call("DATE_TRUNC", Seq(sqlString(fmt.toString.toLowerCase), s)))
 
     // ---- array/struct/JSON access (SURVEY C12) — Spark-dialect only.
     // Indexing bases (0 vs 1), out-of-bounds behavior (NULL vs error) and
@@ -782,13 +832,13 @@ object SqlGen {
     case other => Left(Unsupported(s"expression ${other.getClass.getSimpleName}"))
   }
 
-  /** `NAME(args…)` through the dialect's per-function gate. */
+  /** `NAME(args…)` as the dialect spells it, or declined by its gate. */
   private def fnCall(name: String, args: Expression*): Res[String] =
-    gate(name)(sequence(args.map(expr)).map(ss => s"$name(${ss.mkString(", ")})"))
+    sequence(args.map(expr)).flatMap(call(name, _))
 
-  private def gate(name: String)(r: => Res[String]): Res[String] =
-    if (currentDialect.get.supportsFunction(name)) r
-    else Left(Unsupported(s"function $name on this dialect"))
+  private def call(name: String, args: Seq[String]): Res[String] =
+    currentDialect.get.functionCall(name, args)
+      .toRight(Unsupported(s"function $name on this dialect"))
 
   /** LAG/LEAD(input [, offset [, default]]) [IGNORE NULLS]; a NULL default
     * is omitted. IGNORE NULLS is shared Spark/DuckDB/Postgres-15+ syntax. */
@@ -841,6 +891,13 @@ object SqlGen {
   }
 
   private def sqlString(s: String): String = "'" + s.replace("'", "''") + "'"
+
+  private def likeSafe(subject: Expression,
+      v: org.apache.spark.unsafe.types.UTF8String): Boolean =
+    subject.dataType == StringType && graft.sources.FilterSql.likeSafe(v.toString)
+
+  private def likeLiteral(subject: Expression, pattern: String): Res[String] =
+    expr(subject).map(s => s"($s LIKE ${sqlString(pattern)})")
 
   private def literal(l: Literal): Res[String] = (l.value, l.dataType) match {
     // typed where the dialect can name the type: a bare NULL in a SELECT
@@ -895,20 +952,22 @@ object SqlGen {
     case (v, dt) => Left(Unsupported(s"literal $v: ${dt.simpleString}"))
   }
 
-  private def sqlType(dt: DataType): Res[String] = dt match {
+  /** CAST target spelling: the dialect's own name for a type the
+    * generator can cast to (Postgres has no DOUBLE, only DOUBLE
+    * PRECISION), else the shared spelling below. */
+  private def sqlType(dt: DataType): Res[String] = (dt match {
     case BooleanType => Right("BOOLEAN")
     case ShortType => Right("SMALLINT")
     case IntegerType => Right("INTEGER")
     case LongType => Right("BIGINT")
     case FloatType => Right("REAL")
     case DoubleType => Right("DOUBLE")
-    case _: StringType => Right(
-      // Spark's parser rejects bare VARCHAR (wants a length); DuckDB and
-      // Postgres accept it and treat STRING as unknown
-      if (currentDialect.get == SparkSqlDialect) "STRING" else "VARCHAR")
+    // DuckDB and Postgres accept bare VARCHAR and treat STRING as unknown;
+    // Spark's parser wants a length, and its dialect spells STRING
+    case _: StringType => Right("VARCHAR")
     case DateType => Right("DATE")
     case TimestampType => Right("TIMESTAMP")
     case d: DecimalType => Right(s"DECIMAL(${d.precision}, ${d.scale})")
     case other => Left(Unsupported(s"cast to ${other.simpleString}"))
-  }
+  }).map(shared => currentDialect.get.castTypeName(dt).getOrElse(shared))
 }

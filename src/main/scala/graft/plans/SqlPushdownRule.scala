@@ -4,6 +4,7 @@ import graft.sources.{GraftScan, SqlBackend}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.expressions.PredicateHelper
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
@@ -21,8 +22,20 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
   * fusion instead of being lost (the reference recovers its connector by
   * downcasting the scan's TableSource, `src/parser.rs:96-109,404-419` —
   * here the scan object itself carries the SQL).
+  *
+  * For `scanPreferred` (remote) backends the rule runs in one of two
+  * placements and decides differently in each:
+  *  - before V2 scan pushdown ([[GraftExtensions]], leaves are
+  *    `DataSourceV2Relation`): it cannot see what the scan will absorb, so
+  *    [[scanSurfaceCovers]] predicts it and leaves those subtrees alone;
+  *  - after V2 scan pushdown and dynamic pruning (`extraOptimizations`,
+  *    leaves are `DataSourceV2ScanRelation`): the scan has already taken
+  *    what it can, so every Aggregate, Join or subquery still above it is a
+  *    piece the scan declined, and it fuses within the fetch budget. Only a
+  *    bare Project/Filter/Sort/Limit chain over one scan, or a Union with
+  *    such a branch, keeps the partitioned read ([[scanChain]]).
   */
-object SqlPushdownRule extends Rule[LogicalPlan] {
+object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     attempt(rewriteFullJoins(plan))
@@ -39,8 +52,10 @@ object SqlPushdownRule extends Rule[LogicalPlan] {
     * LEFT branch takes DSv2 join pushdown WITH key-range slicing (N
     * partition queries), and the anti branch whole-plan-fuses to one
     * NOT-EXISTS backend query — N + 1 partitions that union to exactly
-    * the FULL join. On dialects WITHOUT native FULL JOIN (Derby) this is
-    * also what makes a federated FULL join expressible at all. */
+    * the FULL join (pre-pushdown placement; after pushdown the scan has
+    * already declined the join, so both branches fuse within the fetch
+    * budget). On dialects WITHOUT native FULL JOIN (Derby) this is also
+    * what makes a federated FULL join expressible at all. */
   private def rewriteFullJoins(plan: LogicalPlan): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter}
@@ -70,6 +85,10 @@ object SqlPushdownRule extends Rule[LogicalPlan] {
 
   private def attempt(p: LogicalPlan): LogicalPlan = p match {
     case _: PushedSqlQuery => p
+    // the optimizer's wrapper around a subquery plan has no SQL form; its
+    // child is the query to try
+    case s: org.apache.spark.sql.catalyst.plans.logical.Subquery =>
+      s.withNewChildren(Seq(attempt(s.child)))
     case _ =>
       convert(p).getOrElse(p.withNewChildren(p.children.map(attempt)))
   }
@@ -113,27 +132,38 @@ object SqlPushdownRule extends Rule[LogicalPlan] {
     }
   }
 
-  /** For `scanPreferred` (remote JDBC) backends: true when the subtree is
-    * within the grammar the DSv2 scan surface already negotiates —
-    * project/filter/limit/offset/top-N, basic aggregates, and INNER/LEFT/
-    * RIGHT joins (`SupportsPushDownJoin` with parallel key-range splits).
-    * Fusing those into a [[PushedSqlQuery]] would trade a partitioned
-    * parallel read for a single-stream fetch — a downgrade at scale — so
-    * they stay on the scan path. Anything OUTSIDE the grammar (semi/anti
+  /** True when no expression in `e` holds an EXISTS / IN / scalar subquery
+    * (a dynamic-pruning subquery is the scan's runtime filter and does not
+    * count). */
+  private def noSubqueryExpr(e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) = {
+    import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery, ScalarSubquery}
+    !e.exists(_.exists {
+      case _: Exists | _: InSubquery | _: ScalarSubquery => true
+      case _ => false
+    })
+  }
+
+  /** PREDICTION for the pre-pushdown placement only (leaves are
+    * `DataSourceV2Relation`, rules injected by [[GraftExtensions]]), for
+    * `scanPreferred` (remote JDBC) backends: true when the subtree is
+    * within the grammar the DSv2 scan surface should negotiate once
+    * V2 scan pushdown runs — project/filter/limit/offset/top-N, basic
+    * aggregates, and INNER/LEFT/RIGHT joins (`SupportsPushDownJoin` with
+    * parallel key-range splits). Fusing those into a [[PushedSqlQuery]]
+    * would trade a partitioned parallel read for a single-stream fetch, so
+    * they are left for the scan. Anything OUTSIDE the grammar (semi/anti
     * joins, set ops, DISTINCT/FILTER/statistical aggregates, windows,
     * subquery expressions) cannot push scan-level at all; for those,
     * computing backend-side and fetching the (reduced) result single-
-    * stream moves strictly fewer bytes than fetching every input row. */
+    * stream moves strictly fewer bytes than fetching every input row.
+    *
+    * After pushdown no prediction is needed: the scan has answered, and
+    * whatever it left above itself fuses within the fetch budget (see
+    * [[scanChain]] for the one shape that stays on the scan path). */
   private def scanSurfaceCovers(p: LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery, ScalarSubquery}
     import org.apache.spark.sql.catalyst.expressions.aggregate._
     import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
     import org.apache.spark.sql.catalyst.plans.logical._
-    def noSubqueryExpr(e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-      !e.exists(_.exists {
-        case _: Exists | _: InSubquery | _: ScalarSubquery => true
-        case _ => false
-      })
     def basic(fs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]) =
       fs.forall(!_.exists {
         case ae: AggregateExpression =>
@@ -167,6 +197,50 @@ object SqlPushdownRule extends Rule[LogicalPlan] {
       case _ => false
     }
   }
+
+  /** After V2 scan pushdown: true when the subtree is only Project/Filter/
+    * Sort/Limit/Offset (no subquery expressions) over one scan, or a Union
+    * with such a branch. Its rows are the scan's own rows, so fusing buys
+    * no reduction and would trade the partitioned parallel read (and its
+    * runtime filters) for a single stream. A Union with ANY such branch
+    * must not fuse whole either; the recursion in [[attempt]] still fuses
+    * its other branches one by one (this keeps the FULL-join
+    * decomposition's LEFT branch parallel). Every other node left above a
+    * scan at this point — Aggregate, Join, semi/anti join, subquery — is
+    * one the scan declined. */
+  private def scanChain(p: LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    p match {
+      case Project(l, c) if noSubqueryExpr(l) => scanChain(c)
+      case Filter(cond, c) if noSubqueryExpr(Seq(cond)) => scanChain(c)
+      case GlobalLimit(_, c) => scanChain(c)
+      case LocalLimit(_, c) => scanChain(c)
+      case o: Offset => scanChain(o.child)
+      case Sort(_, _, c, _) => scanChain(c)
+      case SubqueryAlias(_, c) => scanChain(c)
+      case Union(children, false, false) => children.exists(scanChain)
+      case _: DataSourceV2ScanRelation => true
+      case _ => false
+    }
+  }
+
+  /** `p` with its dynamic-pruning predicates dropped. They are runtime
+    * filters planted on a join's scan side; a fused query runs that join
+    * in the backend, so the hint prunes nothing there and has no SQL
+    * form. */
+  private def withoutPruningHints(p: LogicalPlan): LogicalPlan = {
+    import org.apache.spark.sql.catalyst.expressions.{And, DynamicPruning}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    p.transformUpWithSubqueries {
+      case Filter(cond, child) if cond.exists(_.isInstanceOf[DynamicPruning]) =>
+        splitConjunctivePredicates(cond).filterNot(_.isInstanceOf[DynamicPruning])
+          .reduceOption(And).fold(child)(Filter(_, child))
+    }
+  }
+
+  private def debug(p: LogicalPlan, msg: => String): Unit =
+    if (sys.props.contains("graft.pushdown.debug"))
+      System.err.println(s"[pushdown] ${p.nodeName} $msg")
 
   /** Root chain is only NON-REDUCING nodes (projections, aliases, global
     * sorts) over a Window (or its group-limit hint): full-cardinality
@@ -278,7 +352,11 @@ object SqlPushdownRule extends Rule[LogicalPlan] {
   }
 
   private def convert(p: LogicalPlan): Option[LogicalPlan] = {
-    if (dsv2AlreadyExpresses(p)) return None
+    if (dsv2AlreadyExpresses(p)) {
+      if (!p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode])
+        debug(p, "declined: scan path: project/filter/limit over one relation")
+      return None
+    }
     // include plans nested in subquery EXPRESSIONS (EXISTS / IN / scalar):
     // they are not plan children, but SqlGen renders them into the same
     // SQL string, so their leaves must satisfy the same single-backend rule
@@ -291,39 +369,53 @@ object SqlPushdownRule extends Rule[LogicalPlan] {
     // dialects the generator can't target at all keep scan-level pushdown
     // only (unrecognized JDBC drivers)
     if (!backend.dialect.fullSqlGen) return None
-    // remote backends with partitioned scan reads: fuse only subtrees the
-    // scan surface can't express (see scanSurfaceCovers) — fusion there
-    // would downgrade a parallel read to a single-stream fetch
-    if (backend.dialect.scanPreferred && scanSurfaceCovers(p)) return None
-    // same economics for a BARE window root: its output cardinality is
-    // its full input, so fusing ships every row through one stream AND
-    // serializes the window compute backend-side — strictly worse at
-    // scale than the partitioned scan + Spark's distributed window.
-    // Window fusion stays worthwhile exactly when something REDUCING
-    // (rank filter, limit, aggregate) sits above — and then THAT node
-    // roots the attempted subtree, so this gate never fires for it
-    // (attempt() walks top-down).
-    if (backend.dialect.scanPreferred && bareWindowRoot(p)) return None
-    // statistics gate (see fitsFetchBudget): even a reducing, grammar-
-    // eligible subtree stays on the partitioned scan path when catalog
-    // stats bound its result above the single-stream fetch budget
-    if (backend.dialect.scanPreferred && !fitsFetchBudget(p)) return None
+    // V2 scan pushdown has already run when every leaf is its scan
+    // relation (extraOptimizations placement): decide from the plan in hand
+    val postPushdown = leaves.forall(_.isInstanceOf[DataSourceV2ScanRelation])
+    if (backend.dialect.scanPreferred) {
+      val declined =
+        // remote backends with partitioned scan reads: leave the scan what
+        // it expresses — after pushdown a bare chain over one scan (see
+        // scanChain), before it the predicted scan grammar (see
+        // scanSurfaceCovers); fusion there would downgrade a parallel read
+        // to a single-stream fetch
+        if (postPushdown && scanChain(p)) Some("scan path: a bare chain over one scan")
+        else if (!postPushdown && scanSurfaceCovers(p)) Some("scan path: within the DSv2 scan surface")
+        // same economics for a BARE window root: its output cardinality is
+        // its full input, so fusing ships every row through one stream AND
+        // serializes the window compute backend-side — strictly worse at
+        // scale than the partitioned scan + Spark's distributed window.
+        // Window fusion stays worthwhile exactly when something REDUCING
+        // (rank filter, limit, aggregate) sits above — and then THAT node
+        // roots the attempted subtree, so this gate never fires for it
+        // (attempt() walks top-down).
+        else if (bareWindowRoot(p)) Some("bare window: full-cardinality output")
+        // statistics gate (see fitsFetchBudget): even a reducing, grammar-
+        // eligible subtree stays on the partitioned scan path when catalog
+        // stats bound its result above the single-stream fetch budget
+        else if (!fitsFetchBudget(p)) Some("fetch budget: estimated result too large")
+        else None
+      if (declined.isDefined) {
+        debug(p, s"declined: ${declined.get}")
+        return None
+      }
+    }
 
     val resolver: SqlGen.TableResolver = pl => leafOf(pl).map(_._2)
+    val fused = if (postPushdown) withoutPruningHints(p) else p
 
-    SqlGen(p, resolver, backend.dialect) match {
+    SqlGen(fused, resolver, backend.dialect) match {
       case Right(sql) =>
         // a fused WINDOW query over a scan-preferred backend may still get
         // a partitioned parallel read: N disjoint slice queries whose
         // union is the result (see windowSlices)
         val sliceGen =
           if (backend.dialect.scanPreferred) {
-            windowSlices(p, resolver, backend).getOrElse(PushedSqlQuery.noSlices)
+            windowSlices(fused, resolver, backend).getOrElse(PushedSqlQuery.noSlices)
           } else PushedSqlQuery.noSlices
         Some(PushedSqlQuery(p.output, sql, backend)(sliceGen))
       case Left(why) =>
-        if (sys.props.contains("graft.pushdown.debug"))
-          System.err.println(s"[pushdown] ${p.nodeName} not converted: $why")
+        debug(p, s"not converted: $why")
         None
     }
   }

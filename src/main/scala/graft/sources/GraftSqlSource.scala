@@ -1106,7 +1106,7 @@ object FilterSql {
     }
   }
 
-  private[sources] def likeSafe(s: String): Boolean =
+  private[graft] def likeSafe(s: String): Boolean =
     !s.exists(c => c == '%' || c == '_' || c == '\\' || c == '\'')
 
   private val utcFmt = java.time.format.DateTimeFormatter

@@ -43,10 +43,19 @@ case object PostgresDialect extends Dialect {
   /** Gaps in the generator's emitted-name surface: INSTR does not exist
     * (Postgres spells it strpos with swapped args) and ROUND(double, n)
     * has no two-argument double overload (numeric only — rendering it
-    * would be a runtime error). Everything else the generator emits is
-    * native. */
+    * would be a runtime error). YEAR/MONTH/DAY are rewritten
+    * ([[functionCall]]); everything else the generator emits is native
+    * (`PostgresDialectSpec` checks the whole list). */
   override def supportsFunction(name: String): Boolean =
     name != "INSTR" && name != "ROUND"
+  /** No YEAR/MONTH/DAY functions exist on Postgres; EXTRACT is the native
+    * spelling. It returns NUMERIC, so the cast restores Spark's INT. */
+  override def functionCall(name: String, args: Seq[String]): Option[String] =
+    name match {
+      case "YEAR" | "MONTH" | "DAY" =>
+        Some(s"CAST(EXTRACT($name FROM ${args.head}) AS INTEGER)")
+      case _ => super.functionCall(name, args)
+    }
   /** AVG over integer types yields NUMERIC on Postgres but DOUBLE on
     * Spark; casting the argument aligns both the wire type and the
     * accumulation semantics. */

@@ -116,17 +116,125 @@ class DerbyFusionSpec extends AnyFunSuite {
     assert(rows.count(_.isNullAt(1)) == 2) // 3,4 NULL-extended
   }
 
+  /** Runs `f` with DSv2 join pushdown set as given (the shared test
+    * session leaves it at Spark's default, off; `Engine.create` turns it
+    * on). */
+  private def withJoinPushdown[A](on: Boolean)(f: => A): A = {
+    val key = "spark.sql.optimizer.datasourceV2JoinPushdown"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  private val salByDname = Map(
+    "eng" -> (1 to 40).filter(_ % 5 == 0).map(_ * 10.0).sum,
+    "ops" -> (1 to 40).filter(_ % 5 == 1).map(_ * 10.0).sum,
+    "fin" -> (1 to 40).filter(_ % 5 == 2).map(_ * 10.0).sum)
+
   test("scan-expressible shapes keep the partitioned scan path, not fusion") {
-    val e = remote("emp"); val d = remote("dep")
-    val df = e.join(d, e("dept") === d("id"))
-      .groupBy(col("dname")).agg(sum(col("sal")).as("s"))
-    assert(pushed(df).isEmpty,
-      "equi-join + basic agg belongs to the DSv2 scan path:\n" +
-        df.queryExecution.executedPlan)
-    val want = Map("eng" -> (1 to 40).filter(_ % 5 == 0).map(_ * 10.0).sum,
-      "ops" -> (1 to 40).filter(_ % 5 == 1).map(_ * 10.0).sum,
-      "fin" -> (1 to 40).filter(_ % 5 == 2).map(_ * 10.0).sum)
-    assert(df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == want)
+    // join pushdown on, as Engine.create ships it: the scan absorbs the
+    // equi-join and the aggregate above it, so nothing is left to fuse
+    withJoinPushdown(on = true) {
+      val e = remote("emp"); val d = remote("dep")
+      val df = e.join(d, e("dept") === d("id"))
+        .groupBy(col("dname")).agg(sum(col("sal")).as("s"))
+      assert(pushed(df).isEmpty,
+        "equi-join + basic agg belongs to the DSv2 scan path:\n" +
+          df.queryExecution.executedPlan)
+      assert(df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == salByDname)
+    }
+  }
+
+  test("a join + aggregate the scan declined fuses into one backend query") {
+    // join pushdown off: the scan declines the join, so the join and the
+    // aggregate above it are left over the two scans and fuse whole
+    withJoinPushdown(on = false) {
+      val e = remote("emp"); val d = remote("dep")
+      val df = e.join(d, e("dept") === d("id"))
+        .groupBy(col("dname")).agg(sum(col("sal")).as("s"))
+      val p = pushed(df)
+      assert(p.size == 1 && scans(df).isEmpty, df.queryExecution.executedPlan.toString)
+      assert(p.head.sql.contains(" JOIN ") && p.head.sql.contains("GROUP BY"), p.head.sql)
+      assert(df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == salByDname)
+    }
+  }
+
+  test("an aggregate over an expression the scan declined fuses into one query") {
+    // the scan's aggregate pushdown takes bare columns only, so
+    // SUM(sal * (1 - bonus)) stays above the scan; the rule fuses it
+    val df = remote("emp").groupBy(col("dept"))
+      .agg(sum(col("sal") * (lit(1) - col("bonus"))).as("s"))
+    val p = pushed(df)
+    assert(p.size == 1, df.queryExecution.executedPlan.toString)
+    assert(scans(df).isEmpty, df.queryExecution.executedPlan.toString)
+    assert(p.head.sql.contains("GROUP BY"), p.head.sql)
+    val want = (1 to 40).groupBy(_ % 5).map { case (k, is) =>
+      k -> is.map(i => i * 10.0 * (1 - i % 3)).sum
+    }
+    assert(df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap == want)
+  }
+
+  test("a same-backend join carrying a dynamic-pruning filter fuses without it") {
+    // the aggregated side keeps its HAVING-style filter in Spark, which is
+    // what makes dynamic pruning plant a runtime filter on the dep scan;
+    // the scan cannot join an aggregated side, so the join is left over
+    def query(s: org.apache.spark.sql.SparkSession) = {
+      def rd(t: String) = s.read.format("graft-sqldb").option("url", Url)
+        .option("table", t).load()
+      val e = rd("emp"); val d = rd("dep")
+      val heavy = e.groupBy(col("dept")).agg(sum(col("sal")).as("s"))
+        .filter(col("s") > 1500.0)
+      d.join(heavy, d("id") === heavy("dept")).select(d("id"), col("dname"), col("s"))
+    }
+    // a session without the graft rules shows the filter the rule meets
+    TestSpark.spark
+    val plain = query(spark.newSession()).queryExecution.optimizedPlan
+    assert(plain.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruning]))),
+      "no dynamic-pruning filter was planted:\n" + plain)
+    GraftExtensions.install(spark)
+    val df = query(spark)
+    val p = pushed(df)
+    assert(p.size == 1 && scans(df).isEmpty, df.queryExecution.executedPlan.toString)
+    assert(p.head.sql.contains(" JOIN ") && !p.head.sql.contains("DynamicPruning"), p.head.sql)
+    // dept sums: 0 → 1800, 1 → 1480, 2 → 1560; dep has ids 0..2
+    assert(df.collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).sorted.toSeq ==
+      Seq((0, "eng", 1800.0), (2, "fin", 1560.0)))
+  }
+
+  test("NOT IN fuses as NOT IN and matches local Spark with NULL keys and an empty side") {
+    val c = DriverManager.getConnection(Url)
+    try {
+      val st = c.createStatement()
+      st.executeUpdate("""CREATE TABLE "nl" ("id" INTEGER NOT NULL PRIMARY KEY, "k" INTEGER)""")
+      Seq("nr", "nr_null", "ne").foreach(t => st.executeUpdate(s"""CREATE TABLE "$t" ("k" INTEGER)"""))
+      st.executeUpdate("""INSERT INTO "nl" VALUES (1, 1), (2, 2), (3, NULL), (4, 4), (5, 5)""")
+      st.executeUpdate("""INSERT INTO "nr" VALUES (1), (4)""")
+      st.executeUpdate("""INSERT INTO "nr_null" VALUES (1), (NULL)""")
+    } finally c.close()
+    val s = spark
+    import s.implicits._
+    Seq[(Int, Option[Int])]((1, Some(1)), (2, Some(2)), (3, None), (4, Some(4)), (5, Some(5)))
+      .toDF("id", "k").createOrReplaceTempView("loc_nl")
+    remote("nl").createOrReplaceTempView("fed_nl")
+    val rights = Map("nr" -> Seq(Some(1), Some(4)), "nr_null" -> Seq(Some(1), None),
+      "ne" -> Seq.empty[Option[Int]])
+    val q = "SELECT id FROM %s WHERE k NOT IN (SELECT k FROM %s)"
+    val kept = rights.map { case (t, rows) =>
+      remote(t).createOrReplaceTempView("fed_r")
+      rows.toDF("k").createOrReplaceTempView("loc_r")
+      val df = spark.sql(q.format("fed_nl", "fed_r"))
+      val p = pushed(df)
+      assert(p.size == 1 && scans(df).isEmpty, df.queryExecution.executedPlan.toString)
+      assert(p.head.sql.contains("NOT IN") && !p.head.sql.contains("EXISTS"), p.head.sql)
+      val got = df.collect().map(_.getInt(0)).sorted.toSeq
+      val local = spark.sql(q.format("loc_nl", "loc_r")).collect().map(_.getInt(0)).sorted.toSeq
+      assert(got == local, s"$t: Derby NOT IN $got vs local Spark $local")
+      t -> got
+    }
+    // a NULL on the right drops every row; an empty right side keeps the
+    // NULL-keyed row too
+    assert(kept == Map("nr" -> Seq(2, 5), "nr_null" -> Seq(), "ne" -> Seq(1, 2, 3, 4, 5)))
   }
 
   test("a gated function above a fusable subtree leaves only that step in Spark") {

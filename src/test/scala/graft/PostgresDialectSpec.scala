@@ -4,6 +4,7 @@ import graft.plans.SqlGen
 import graft.sources.{ConservativeAnsiDialect, DerbyDialect, FilterSql, JdbcBackend, PostgresDialect, V2PredicateSql}
 import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expressions, Literal => V2Literal}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
@@ -305,5 +306,115 @@ class PostgresDialectSpec extends AnyFunSuite {
             s"$name: decline without a message")
       }
     }
+  }
+
+  // ---- scenario: "fused SQL only calls what Postgres 15 has" ----
+
+  /** Calls Postgres 15 has natively, probed on 15.18 with arguments of the
+    * types the generator passes, plus the keywords the rewrites use. */
+  private val PgNative = Set("UPPER", "LOWER", "LENGTH", "ABS", "SQRT", "CEIL",
+    "FLOOR", "SUBSTRING", "COALESCE", "TRIM", "REPLACE", "LTRIM", "RTRIM",
+    "LPAD", "RPAD", "LEAST", "GREATEST", "POWER", "LN", "EXP", "SIGN", "SIN",
+    "COS", "TAN", "ASIN", "ACOS", "ATAN", "ATAN2", "DATE_TRUNC", "STDDEV_SAMP",
+    "STDDEV_POP", "VAR_SAMP", "VAR_POP", "CORR", "COVAR_SAMP", "COVAR_POP",
+    "CAST", "EXTRACT")
+
+  private lazy val fnInput = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Seq(("ab", 1.5, 2.0, 3, java.sql.Date.valueOf("2024-05-06"),
+      java.sql.Timestamp.valueOf("2024-05-06 07:08:09")))
+      .toDF("s", "x", "y", "i", "d", "t")
+  }
+  private val fnResolver: SqlGen.TableResolver = {
+    case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some("t")
+    case _ => None
+  }
+
+  test("every function name SqlGen emits is native on Postgres 15 or declined/rewritten") {
+    val s = col("s"); val x = col("x"); val y = col("y"); val dt = col("d")
+    // (name the generator emits, a column that makes it emit the name,
+    // whether it is an aggregate, verdict on Postgres 15)
+    val table: Seq[(String, org.apache.spark.sql.Column, Boolean, String)] = Seq(
+      ("UPPER", upper(s), false, "native"),
+      ("LOWER", lower(s), false, "native"),
+      ("LENGTH", length(s), false, "native"),
+      ("ABS", abs(x), false, "native"),
+      ("SQRT", sqrt(x), false, "native"),
+      ("CEIL", ceil(x), false, "native"),
+      ("FLOOR", floor(x), false, "native"),
+      ("YEAR", year(dt), false, "rewritten"),
+      ("MONTH", month(dt), false, "rewritten"),
+      ("DAY", dayofmonth(dt), false, "rewritten"),
+      ("ROUND", round(x, 1), false, "declined"),
+      ("SUBSTRING", substring(s, 1, 1), false, "native"),
+      ("COALESCE", coalesce(s, functions.lit("z")), false, "native"),
+      ("TRIM", trim(s), false, "native"),
+      ("REPLACE", expr("replace(s, 'a', 'b')"), false, "native"),
+      ("INSTR", instr(s, "b"), false, "declined"),
+      ("LTRIM", ltrim(s), false, "native"),
+      ("RTRIM", rtrim(s), false, "native"),
+      ("LPAD", lpad(s, 4, "x"), false, "native"),
+      ("RPAD", rpad(s, 4, "x"), false, "native"),
+      ("LEAST", least(x, y), false, "native"),
+      ("GREATEST", greatest(x, y), false, "native"),
+      ("POWER", pow(x, y), false, "native"),
+      ("LN", log(x), false, "native"),
+      ("EXP", exp(x), false, "native"),
+      ("SIGN", signum(x), false, "native"),
+      ("SIN", sin(x), false, "native"),
+      ("COS", cos(x), false, "native"),
+      ("TAN", tan(x), false, "native"),
+      ("ASIN", asin(x), false, "native"),
+      ("ACOS", acos(x), false, "native"),
+      ("ATAN", atan(x), false, "native"),
+      ("ATAN2", atan2(x, y), false, "native"),
+      ("DATE_TRUNC", date_trunc("month", col("t")), false, "native"),
+      ("STDDEV_SAMP", stddev_samp(x), true, "native"),
+      ("STDDEV_POP", stddev_pop(x), true, "native"),
+      ("VAR_SAMP", var_samp(x), true, "native"),
+      ("VAR_POP", var_pop(x), true, "native"),
+      ("CORR", corr(x, y), true, "native"),
+      ("COVAR_SAMP", covar_samp(x, y), true, "native"),
+      ("COVAR_POP", covar_pop(x, y), true, "native"))
+    val call = """\b([A-Z_][A-Z_0-9]*)\(""".r
+    table.foreach { case (name, c, isAgg, verdict) =>
+      val df = if (isAgg) fnInput.agg(c.as("o")) else fnInput.select(c.as("o"))
+      val got = SqlGen(df.queryExecution.analyzed, fnResolver, d)
+      if (verdict == "declined") assert(got.isLeft, s"$name must stay in Spark: $got")
+      else {
+        val sql = got.fold(u => fail(s"$name: $u"), identity)
+        val called = call.findAllMatchIn(sql).map(_.group(1)).toSet
+        assert(called.subsetOf(PgNative),
+          s"$name renders calls Postgres 15 lacks: ${called -- PgNative}\n$sql")
+        assert(called.contains(name) == (verdict == "native"), s"$name ($verdict): $sql")
+      }
+    }
+    // the table covers every name the generator routes through the
+    // dialect's function gate
+    val gen = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/plans/SqlGen.scala")), "UTF-8")
+    val emitted = """(?:fnCall|call)\("([A-Z_0-9]+)"""".r
+      .findAllMatchIn(gen).map(_.group(1)).toSet
+    assert(emitted.nonEmpty && emitted == table.map(_._1).toSet,
+      s"untested: ${emitted -- table.map(_._1)}; stale: ${table.map(_._1).toSet -- emitted}")
+  }
+
+  test("YEAR/MONTH/DAY render as EXTRACT cast back to INTEGER") {
+    val df = fnInput.select(year(col("d")).as("y"), month(col("t")).as("m"),
+      dayofmonth(col("d")).as("dd"))
+    val sql = SqlGen(df.queryExecution.analyzed, fnResolver, d)
+      .fold(u => fail(u.toString), identity)
+    Seq("YEAR", "MONTH", "DAY").foreach { f =>
+      assert(sql.contains(s"CAST(EXTRACT($f FROM "), sql)
+      assert(!sql.contains(s"$f("), sql)
+    }
+  }
+
+  test("fused CASTs use Postgres type names: DOUBLE PRECISION, never bare DOUBLE") {
+    val df = fnInput.select((col("x") * col("i")).as("o"))
+    val sql = SqlGen(df.queryExecution.analyzed, fnResolver, d)
+      .fold(u => fail(u.toString), identity)
+    assert(sql.contains("AS DOUBLE PRECISION)") && !sql.contains("AS DOUBLE)"), sql)
   }
 }

@@ -248,6 +248,69 @@ class SqlGenSpec extends AnyFunSuite {
     roundTrip(df)
   }
 
+  test("single-key null-aware anti join renders NOT IN (golden)") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, IsNull, Or}
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LocalRelation}
+    import org.apache.spark.sql.types.IntegerType
+    val a = AttributeReference("a", IntegerType)()
+    val b = AttributeReference("b", IntegerType)()
+    val l = LocalRelation(a); val r = LocalRelation(b)
+    val resolver: SqlGen.TableResolver =
+      p => if (p eq l) Some("lt") else if (p eq r) Some("rt") else None
+    def norm(sql: String) = sql.replace(s"\"c${a.exprId.id}\"", "A")
+      .replace(s"\"c${b.exprId.id}\"", "B").replaceAll("gq_\\d+", "gq")
+    val want = """SELECT A AS "a" FROM (SELECT * FROM (SELECT "a" AS A FROM "lt") gq """ +
+      """WHERE A NOT IN (SELECT B FROM (SELECT "b" AS B FROM "rt") gq)) gq_out"""
+    // Spark's NOT IN condition, in either OR order and either key order
+    val eq = EqualTo(a, b); val flipped = EqualTo(b, a)
+    for (cond <- Seq(Or(eq, IsNull(eq)), Or(IsNull(eq), eq), Or(flipped, IsNull(flipped))))
+      SqlGen(Join(l, r, LeftAnti, Some(cond), JoinHint.NONE), resolver) match {
+        case Right(sql) => assert(norm(sql) == want, sql)
+        case Left(u) => fail(u.toString)
+      }
+    // any other anti-join condition keeps the NOT EXISTS form
+    val plain = SqlGen(Join(l, r, LeftAnti, Some(eq), JoinHint.NONE), resolver)
+    assert(plain.exists(s => s.contains("NOT EXISTS") && !s.contains("NOT IN")), plain)
+  }
+
+  test("NOT IN rendering keeps the anti join's rows: NULL keys either side, empty right") {
+    import spark.implicits._
+    Seq[(Int, Option[Int])]((1, Some(1)), (2, Some(2)), (3, None), (4, Some(4)))
+      .toDF("id", "a").createOrReplaceTempView("nin_l")
+    val rights = Map(
+      "nin_r_plain" -> Seq(Some(1), Some(4)),
+      "nin_r_null" -> Seq(Some(1), None),
+      "nin_r_empty" -> Seq.empty[Option[Int]])
+    rights.foreach { case (name, rows) => rows.toDF("b").createOrReplaceTempView(name) }
+    val kept = rights.keys.map { name =>
+      val l = spark.table("nin_l"); val r = spark.table(name)
+      val eq = l("a") === r("b")
+      val df = l.join(r, eq || eq.isNull, "left_anti")
+      val sql = SqlGen(df.queryExecution.analyzed,
+        dialect = SqlGen.SparkSqlDialect).toOption.get
+      assert(sql.contains("NOT IN"), sql)
+      roundTrip(df)
+      name -> df.count()
+    }.toMap
+    // a NULL key on the left never survives a non-empty right side, a NULL
+    // on the right drops every row, and an empty right side keeps them all
+    assert(kept == Map("nin_r_plain" -> 1L, "nin_r_null" -> 0L, "nin_r_empty" -> 4L))
+  }
+
+  test("startsWith/endsWith/contains render as LIKE; LIKE metacharacters stay in Spark") {
+    val df = t("part").select(col("p_partkey"),
+      col("p_type").startsWith("PROMO").as("sw"),
+      col("p_type").endsWith("TIN").as("ew"),
+      col("p_name").contains("green").as("ct"))
+    val sql = SqlGen(df.queryExecution.analyzed, dialect = SqlGen.Ansi).toOption.get
+    assert(sql.contains("LIKE 'PROMO%'") && sql.contains("LIKE '%TIN'") &&
+      sql.contains("LIKE '%green%'"), sql)
+    roundTrip(df)
+    assert(SqlGen(t("part").filter(col("p_type").startsWith("PRO_"))
+      .queryExecution.analyzed).isLeft)
+  }
+
   test("date + year-month interval arithmetic renders infix +") {
     roundTrip(t("orders").select(col("o_orderkey"),
       (col("o_orderdate") + expr("INTERVAL '3' MONTH")).as("plus3m")))
