@@ -31,7 +31,21 @@ object Engine {
     * run after V2 scan pushdown and fuse whatever the scan left;
     * [[graft.plans.GraftExtensions]] puts them in the operator-optimization
     * batch, before it, where the MV rewrite over filtered federated bases
-    * needs them. */
+    * needs them.
+    *
+    * Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`)
+    * holds [[CodegenCacheEntries]] classes instead of its default 100. The
+    * cache is keyed on (context class loader, generated source), and in
+    * local mode executor tasks compile under a different loader than the
+    * planning thread, so one generated class can take two entries. A
+    * composed op such as `e2e_crawl_to_chunks` then needs more entries
+    * than the default holds: each repeat of an identical op evicted classes the next one
+    * needed and recompiled them in Janino, which the JIT then compiled
+    * again. This is a static conf that `CodeGenerator` reads once, when
+    * the JVM's first generated class is compiled; it takes effect only if
+    * this session is built before any codegen in the JVM, as Bench,
+    * Verify, PlanDump, PlanAudit and the benchmark harness do. A session
+    * that already exists (`getOrCreate` returns it) keeps its cache size. */
   def create(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Option[Int] = None,
       federation: Boolean = true): SparkSession = {
@@ -47,6 +61,7 @@ object Engine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     // SQL-surface registration of the native expressions (dot_i8,
     // cosine_f32, minhash_sig, …): a spark.sql user gets the full
@@ -69,6 +84,10 @@ object Engine {
   }
 
   private val LocalN = """local\[(\d+)\]""".r
+
+  /** Compiled-class cache size: covers a warm composed crawl op with both
+    * loaders' copies of its classes (see [[create]]). */
+  val CodegenCacheEntries = 1000
 
   /** Register every table under `dir` as a temp view (parquet footers are
     * the schema source — no information_schema round trip needed) and

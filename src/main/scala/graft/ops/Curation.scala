@@ -49,6 +49,9 @@ object Curation {
   // lifetime. Each call therefore releases the previous call's cache, so
   // at most one curated kept-set is pinned at any time, and
   // [[releaseCache]] lets a caller drop even that once its action is done.
+  // The release comes BEFORE the call persists its own: Spark finds a
+  // cache by its plan, and a repeat call persists the same plans, so a
+  // release after the persist dropped the new cache too.
   /** Fluency keep threshold for the cascade, in score ppm — a fixed
     * integer against [[Fluency]]'s exact-integer score (the corpus
     * distribution spans ~28k–44k ppm with median ~35.6k, so ~25–30% of
@@ -65,26 +68,25 @@ object Curation {
   private[ops] val CascadeDupTokenPctMax = 65
   private[ops] val CascadeTopBigramPctMax = 18
 
+  /** The relations one call persisted, newest first, so each is released
+    * before the relations it reads (unpersisting a relation re-caches any
+    * cached relation that still reads it). */
+  private final class Slot {
+    private[this] var held: List[DataFrame] = Nil
+    def hold(df: DataFrame): DataFrame = synchronized { held = df :: held; df }
+    def release(): Unit = synchronized {
+      held.foreach(_.unpersist(blocking = false))
+      held = Nil
+    }
+  }
   // (declared ahead of `val oracle`, which reads them at object init)
-  private[this] var lastKept: Option[DataFrame] = None
-  private def trackKept(kept: DataFrame): DataFrame = synchronized {
-    lastKept.foreach(_.unpersist(blocking = false))
-    lastKept = Some(kept)
-    kept
-  }
-  // second tracked slot (r20): the crawl composition's extracted-prose
-  // cache — same one-at-a-time discipline as the kept set
-  private[this] var lastExtracted: Option[DataFrame] = None
-  private def trackExtracted(df: DataFrame): DataFrame = synchronized {
-    lastExtracted.foreach(_.unpersist(blocking = false))
-    lastExtracted = Some(df)
-    df
-  }
-  def releaseCache(): Unit = synchronized {
-    lastKept.foreach(_.unpersist(blocking = false))
-    lastKept = None
-    lastExtracted.foreach(_.unpersist(blocking = false))
-    lastExtracted = None
+  // the kept set and the near-dup stage's MinHash signatures over it
+  private[this] val keptSlot = new Slot
+  // (r20) the crawl composition's extracted prose, which the kept set reads
+  private[this] val extractedSlot = new Slot
+  def releaseCache(): Unit = {
+    keptSlot.release()
+    extractedSlot.release()
   }
 
   /** ENTRY scaffolding (the production pipeline curates real data with
@@ -123,10 +125,11 @@ object Curation {
         col("quality_score") >= minQuality)
       .select(col("doc_id"), col("lang"), col("text"),
         col("n_tokens"), col("quality_score"))
+    keptSlot.release()
     // exact keep-first: text rides inside the min_by struct (identical
     // within a hash group) so the near-dup stage can shingle it without
     // a join back to the source
-    val kept = gated
+    val kept = keptSlot.hold(gated
       .groupBy(sha2(col("text"), 256).as("content_hash"))
       .agg(
         min_by(struct(col("doc_id"), col("lang"), col("text"),
@@ -139,12 +142,11 @@ object Curation {
       // consumer aggregates or chunks): without this, the quality gate +
       // hash dedup shuffle — the expensive half at corpus scale —
       // recomputes for each consumer
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackKept(kept)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // near-dup keep-first: every LSH pair (doc_a < doc_b) marks doc_b
-    val removed = Dedup.minHashPairs(kept, nearBands, nearThreshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-    (kept, removed)
+    val (pairs, sigs) = Dedup.minHashPairsOwned(kept, nearBands, nearThreshold)
+    keptSlot.hold(sigs)
+    (kept, pairs.select(col("doc_b").as("doc_id")).distinct())
   }
 
   def curate(docs: DataFrame, minTokens: Int = 20, maxTokens: Int = 2000,
@@ -234,7 +236,8 @@ object Curation {
     * ([[graft.streaming.EventStreams.crawlChunks]]), so the always-on
     * form cannot drift from the oracle-pinned batch stages. */
   def crawlToChunks(valid: DataFrame): DataFrame = {
-    val extracted = valid
+    releaseCache()
+    val extracted = extractedSlot.hold(valid
       .select(col("doc_id"), col("lang"),
         expr(TextAnalysis.htmlPageTemplateExpr).as("html"))
       .select(col("doc_id"), col("lang"),
@@ -244,8 +247,7 @@ object Curation {
       // parse (a per-archive flatMap), so each re-derivation re-parses
       // whole archives. Persist the parsed PROSE (doc_id, lang, text):
       // one parse per action instead of one per consumer.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackExtracted(extracted)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val keepers = Urls.fetchLog(extracted)
       .groupBy(graft.functions.GraftFunctions.url_normalize(col("url")).as("url_norm"))
       .agg(count(lit(1)).as("n_fetches"), min(col("fetch_id")).as("keeper"))

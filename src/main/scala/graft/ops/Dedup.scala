@@ -97,8 +97,18 @@ object Dedup {
     * numHashes=64 split into `bands` bands of 64/bands rows; two documents
     * become candidates iff some band agrees (bucket join on (band, hash));
     * candidates are then scored by signature agreement (Jaccard estimate)
-    * and thresholded. Output: doc_a < doc_b, est_jaccard. */
-  def minHashPairs(docs: DataFrame, bands: Int = 16, threshold: Double = 0.5): DataFrame = {
+    * and thresholded. Output: doc_a < doc_b, est_jaccard. The persisted
+    * signature rows stay cached until the session's cache is cleared; a
+    * caller that runs repeatedly in one session uses [[minHashPairsOwned]]
+    * and releases them. */
+  def minHashPairs(docs: DataFrame, bands: Int = 16, threshold: Double = 0.5): DataFrame =
+    minHashPairsOwned(docs, bands, threshold)._1
+
+  /** [[minHashPairs]] plus the persisted signature rows it reads 3×: the
+    * caller owns that cache and unpersists it after its last action over
+    * the pairs. */
+  private[ops] def minHashPairsOwned(docs: DataFrame, bands: Int,
+      threshold: Double): (DataFrame, DataFrame) = {
     val numHashes = 64
     // a non-divisor would silently drop signature rows; bands > 64 would
     // make every band hash the empty slice — i.e. a full cross join
@@ -118,7 +128,7 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
-    candidates
+    val pairs = candidates
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), Seq("doc_a"))
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), Seq("doc_b"))
       .withColumn("est_jaccard", // r19: native slot-agreement count (the
@@ -128,6 +138,7 @@ object Dedup {
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
       .orderBy("doc_a", "doc_b")
+    (pairs, sigs)
   }
 
   /** SimHash near-dup pairs. 64-bit signature; candidate generation by the

@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   * means a 100 TB crawl is ~100k files, far above any executor count.
   * The read is `binaryFile` (one row per archive) and the parse is one
   * map-side pass per archive: no shuffle anywhere before the consumer's
-  * own plan. Memory is bounded by one archive per task (the same bound
-  * the per-record-gzip layout imposes on ANY reader). Framing contract:
+  * own plan, unless there are fewer archives than cores (then one
+  * round-robin spread, [[WarcIngest.parseRows]]). Memory is bounded by
+  * one archive per task (the same bound the per-record-gzip layout
+  * imposes on ANY reader). Framing contract:
   * the primary walk is Content-Length-driven (a WELL-FORMED payload may
   * contain anything, including the record magic); only when a record's
   * claimed length does not land on the `\r\n\r\n` separator does the
@@ -573,7 +575,8 @@ object WarcIngest {
 
   /** Parse every archive under `path`: (valid docs, quarantined records).
     * `binaryFile` read + one flatMap per archive — parallel across
-    * archives, zero shuffles. Plain, per-record-gzip and zstd-framed
+    * archives, and spread across cores when there are fewer archives than
+    * cores ([[parseRows]]). Plain, per-record-gzip and zstd-framed
     * archives are sniffed per file, so mixed directories read with one
     * call. */
   def readWithQuarantine(spark: SparkSession, path: String)
@@ -584,21 +587,47 @@ object WarcIngest {
   /** The channel split over ANY DataFrame bearing archive bytes in a
     * `content` column — shared by the batch read above and the streaming
     * crawl twin's micro-batches, so the two arrival paths cannot drift
-    * on framing or triage rules. */
-  def parseChannels(archives: DataFrame): (DataFrame, DataFrame) = {
+    * on framing or triage rules. Both channels read the persisted rows of
+    * [[parseRows]]; a caller that must release that cache (a long-running
+    * stream, [[graft.streaming.EventStreams.crawlChunks]]) calls
+    * [[parseRows]] and [[channels]] itself and unpersists the rows. */
+  def parseChannels(archives: DataFrame): (DataFrame, DataFrame) =
+    channels(parseRows(archives))
+
+  /** The parsed rows of every archive, persisted: one [[WarcRow]] per
+    * record. The caller owns the cache and unpersists it after its last
+    * action over either channel.
+    *
+    * Spread rule: an archive cannot be split, so the parse yields one
+    * partition per archive (`binaryFile` reads one row per file). With
+    * fewer archives than `defaultParallelism`, every narrow stage after the
+    * parse (extraction, gates, hashing) would run as that many tasks while
+    * the other cores idle; the rows are then round-robin repartitioned to
+    * `defaultParallelism` before the persist. A drop with at least as many
+    * archives as cores keeps the one-task-per-archive plan. The partition
+    * count comes from the planned RDD, without running a job. */
+  private[graft] def parseRows(archives: DataFrame): DataFrame = {
     val spark = archives.sparkSession
     import spark.implicits._
+    val parsed = archives
+      .select("content").as[Array[Byte]]
+      .flatMap(parseAnyArchive _)
+      .toDF()
+    val cores = spark.sparkContext.defaultParallelism
+    val spread =
+      if (parsed.rdd.getNumPartitions < cores) parsed.repartition(cores)
+      else parsed
     // r20: persist the parsed rows at the object boundary (the JSONL
     // bronze-sink pattern, JsonlIngest.readWithQuarantine) — without it the
     // presentation sort's range-sampling pass, and any consumer touching
     // both channels, re-ran the whole per-archive parse (a serial flatMap
     // over each archive's bytes). The channel split becomes a column
     // filter over the cached rows instead of a second object pipeline.
-    val rows = archives
-      .select("content").as[Array[Byte]]
-      .flatMap(parseAnyArchive _)
-      .toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** (valid, quarantine) channels over parsed rows. */
+  private[graft] def channels(rows: DataFrame): (DataFrame, DataFrame) = {
     val quarantine = rows.filter(col("errorClass") =!= "")
       .select(col("targetUri").as("target_uri"),
         col("errorClass").as("error_class"))

@@ -620,7 +620,7 @@ object EventStreams {
     * whole-path gate `e2e_crawl_to_chunks`: WARC archives LAND as files
     * in a monitored drop directory (`binaryFile` file-stream source) and
     * each micro-batch runs the SHARED crawl pipeline
-    * ([[graft.sources.WarcIngest.parseChannels]] →
+    * ([[graft.sources.WarcIngest.parseRows]] → the channel split →
     * [[graft.ops.Curation.crawlToChunks]]: framing triage, HTML
     * extraction, the two-fetch URL-dedup gate, planted-dup curation,
     * chunk windows) and APPENDS its chunk rows through
@@ -695,16 +695,32 @@ object EventStreams {
       .option("pathGlobFilter", "*.warc").load(drop)
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val (valid, _) = graft.sources.WarcIngest.parseChannels(batch.toDF())
-        ExactlyOnceSink(url, "crawl_chunks")(
-          graft.ops.Curation.crawlToChunks(valid), bid)
-        ()
+        landCrawlBatch(url, "crawl_chunks")(batch.toDF(), bid)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
     spark.read.format("graft-sqldb").option("url", url)
       .option("table", "crawl_chunks").load()
       .orderBy("doc_id", "chunk_id")
+  }
+
+  /** One crawl micro-batch: parse → the shared crawl pipeline → the
+    * exactly-once sink into `table` at `url`. The batch-scoped caches (the
+    * parsed rows, and [[graft.ops.Curation]]'s extracted-prose, kept-set
+    * and signature slots) are released once the sink has landed, so a
+    * long-running stream pins nothing per micro-batch. */
+  private[graft] def landCrawlBatch(url: String, table: String)(
+      batch: DataFrame, bid: Long): Unit = {
+    val rows = graft.sources.WarcIngest.parseRows(batch)
+    try {
+      val (valid, _) = graft.sources.WarcIngest.channels(rows)
+      ExactlyOnceSink(url, table)(graft.ops.Curation.crawlToChunks(valid), bid)
+    } finally {
+      // what reads the rows goes first, so no unpersist re-caches a
+      // relation about to be dropped
+      graft.ops.Curation.releaseCache()
+      rows.unpersist(blocking = false)
+    }
   }
 
   val entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

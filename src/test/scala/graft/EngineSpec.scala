@@ -54,7 +54,9 @@ class EngineSpec extends AnyFunSuite {
 
   test("Engine.create(federation = false) is the plain session config, in a fresh JVM") {
     // a fresh JVM, as for Bench/Verify/PlanDump/PlanAudit: in this one the
-    // shared test session (which other specs extend) would be returned
+    // shared test session (which other specs extend) would be returned; the
+    // compiled-class cache size is a static conf, so only a JVM whose first
+    // session is Engine.create's shows it
     val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
@@ -75,7 +77,9 @@ class EngineSpec extends AnyFunSuite {
       "extraOptimizations" -> "",
       "extraStrategies" -> "",
       "sql.extensions" -> "None",
-      "catalog.graft_db" -> "None"), out.toString)
+      "catalog.graft_db" -> "None",
+      "codegen.cache.maxEntries" -> Engine.CodegenCacheEntries.toString,
+      "codegen.compiles.warm_run" -> "0"), out.toString)
   }
 
   test("src/main builds sessions only through Engine.create and GraftExtensions.newSession") {
@@ -98,7 +102,9 @@ class EngineSpec extends AnyFunSuite {
 }
 
 /** Child-JVM side of the session-contract test: prints what a fresh
-  * `Engine.create("local[3]", federation = false)` session carries. */
+  * `Engine.create("local[3]", federation = false)` session carries, and
+  * how many classes a warm run of an identical composed op compiles
+  * (every one should come from the compiled-class cache). */
 object EngineContractMain {
   def main(args: Array[String]): Unit = {
     val spark = Engine.create("local[3]", federation = false)
@@ -111,6 +117,24 @@ object EngineContractMain {
     show("extraStrategies", spark.experimental.extraStrategies.mkString(","))
     show("sql.extensions", spark.conf.getOption("spark.sql.extensions"))
     show("catalog.graft_db", spark.conf.getOption("spark.sql.catalog.graft_db"))
+    show("codegen.cache.maxEntries", spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    // the crawl op as the benchmark repeats it: the persisted
+    // intermediates are dropped between runs, so each run plans afresh
+    val op = SparkEntry.queries("e2e_crawl_to_chunks")
+    def compiles(): Long = {
+      val compileCount =
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compileCount.getCount
+      op(spark, TestSpark.Sf0001).collect()
+      spark.sharedState.cacheManager.clearCache()
+      compileCount.getCount - before
+    }
+    // AQE numbers codegen stages in the order its query stages finish, so
+    // a warm run can meet a new numbering (a new class source) once; a
+    // cache too small for the op recompiles on every run. So the contract
+    // is the fewest compiles over warm runs 3 to 5.
+    compiles(); compiles()
+    show("codegen.compiles.warm_run", Seq.fill(3)(compiles()).min)
     spark.stop()
   }
 }

@@ -668,6 +668,26 @@ class OpsSpec extends AnyFunSuite {
     out.foreach(r => assert(r.getDouble(6) > 0 && r.getDouble(6) <= 1.0))
   }
 
+  test("a repeated curate call reads its own cached kept set and signatures") {
+    // the harness and the bench repeat identical ops, so each call persists
+    // the plans the previous call persisted; releasing the previous call's
+    // caches must not drop the new ones
+    val planted = graft.ops.Curation.withPlantedDups(
+      Tables.load(spark, TestSpark.Sf0001, "documents"))
+    def cachedReads(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+      }.distinct.size
+    val first = graft.ops.Curation.curate(planted)
+    first.collect()
+    val second = graft.ops.Curation.curate(planted)
+    assert(second.collect().toSeq == first.collect().toSeq)
+    // the kept set (read by the split) and the MinHash signatures (read
+    // by the pair join-backs)
+    assert(cachedReads(second) == 2)
+    graft.ops.Curation.releaseCache()
+  }
+
   test("PII scrub counts and redacts emails, IPs, and long digit runs") {
     val d = docs(
       1L -> "mail me at a.b+c@x-corp.io or 192.168.0.1 card 4111111111111111",

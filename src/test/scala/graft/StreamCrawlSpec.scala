@@ -75,4 +75,44 @@ class StreamCrawlSpec extends AnyFunSuite {
     val batchRows = Curation.crawlToChunks(validReplay).count()
     assert(afterFirst == batchRows)
   }
+
+  test("a multi-batch crawl stream leaves none of its batch caches persisted") {
+    SparkSession.setActiveSession(spark)
+    // two archives, one per trigger: two micro-batches through the
+    // production batch body
+    val one = new java.io.File(
+      WarcIngest.ensureWarcDrop(spark, TestSpark.Sf0001), "crawl.warc")
+    val drop = java.nio.file.Files.createTempDirectory("crawl_leak")
+    Seq("a", "b").foreach(n =>
+      java.nio.file.Files.copy(one.toPath, drop.resolve(s"crawl_$n.warc")))
+    val url = "jdbc:derby:memory:graft_crawl_leak;create=true"
+    val backend = JdbcBackend.forUrl(url)
+    Seq("crawl_leak", "crawl_leak__staging", "crawl_leak__batches").foreach { t =>
+      try backend.executeUpdate(s"""DROP TABLE "$t"""")
+      catch { case _: Exception => () }
+    }
+    backend.executeUpdate(
+      """CREATE TABLE "crawl_leak" ("doc_id" BIGINT, "lang" VARCHAR(16), """ +
+        """"chunk_id" BIGINT, "chunk_start" BIGINT, "chunk_tokens" BIGINT, """ +
+        """"chunk_text" VARCHAR(4000))""")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val q = spark.readStream.format("binaryFile")
+      .schema(EventStreams.BinaryFileSchema)
+      .option("pathGlobFilter", "*.warc").option("maxFilesPerTrigger", "1")
+      .load(drop.toString)
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        EventStreams.landCrawlBatch(url, "crawl_leak")(b.toDF(), id)
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2, "one archive per micro-batch")
+    val leaked = spark.sparkContext.getPersistentRDDs -- before
+    assert(leaked.isEmpty, s"persisted after the stream: ${leaked.values.map(_.name)}")
+    // and both batches landed in full
+    val landed = backend.executeSql("""SELECT COUNT(*) FROM "crawl_leak"""")
+      .head.get(0).asInstanceOf[Number].longValue
+    val (valid, _) = WarcIngest.readWithQuarantine(spark, one.getParent)
+    assert(landed == 2 * Curation.crawlToChunks(valid).count())
+  }
 }

@@ -1,6 +1,12 @@
 package graft
 
 import graft.sources.WarcIngest
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 class WarcIngestSpec extends AnyFunSuite {
@@ -311,5 +317,51 @@ class WarcIngestSpec extends AnyFunSuite {
     assert(err.getMessage.contains("without a doc id"), err.getMessage)
     // the same channel over well-formed rows is untouched
     assert(WarcIngest.validChannel(rows.limit(1)).collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  /** Round-robin exchanges anywhere in `df`'s physical plan, including
+    * inside adaptive plans and the plans of cached relations it reads. */
+  private def roundRobins(df: DataFrame): Seq[ShuffleExchangeExec] = {
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
+        e +: walk(e.child)
+      case other => other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  private def validRows(df: DataFrame) = df.collect().toSeq
+    .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).sorted
+
+  test("a one-archive drop is spread across defaultParallelism partitions, rows unchanged") {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1, "the spread needs a multi-core session")
+    val drop = WarcIngest.ensureWarcDrop(spark, TestSpark.Sf0001)
+    val archives = new java.io.File(drop).listFiles().filter(_.getName.endsWith(".warc"))
+    assert(archives.length == 1)
+    val (valid, _) = WarcIngest.readWithQuarantine(spark, drop)
+    assert(valid.rdd.getNumPartitions == cores)
+    assert(roundRobins(valid).map(_.outputPartitioning.numPartitions) == Seq(cores))
+    // the unspread read: the same archive parsed in one pass
+    val unspread = WarcIngest.parseAnyArchive(java.nio.file.Files.readAllBytes(archives.head.toPath))
+      .filter(_.errorClass.isEmpty)
+      .map(r => (r.docId.get, r.text, r.lang, r.targetUri)).sorted
+    assert(unspread.nonEmpty)
+    assert(validRows(valid) == unspread)
+  }
+
+  test("a drop with at least defaultParallelism archives keeps one task per archive, no exchange") {
+    val cores = spark.sparkContext.defaultParallelism
+    val one = new java.io.File(WarcIngest.ensureWarcDrop(spark, TestSpark.Sf0001), "crawl.warc")
+    val dir = java.nio.file.Files.createTempDirectory("warc_many")
+    (0 until cores).foreach(i =>
+      java.nio.file.Files.copy(one.toPath, dir.resolve(s"crawl_$i.warc")))
+    val (valid, _) = WarcIngest.readWithQuarantine(spark, dir.toString)
+    assert(roundRobins(valid).isEmpty, valid.queryExecution.executedPlan)
+    assert(valid.rdd.getNumPartitions == cores)
+    val (single, _) = WarcIngest.readWithQuarantine(spark, one.getParent)
+    assert(validRows(valid) == validRows(single).flatMap(Seq.fill(cores)(_)).sorted)
   }
 }
