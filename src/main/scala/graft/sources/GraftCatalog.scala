@@ -19,9 +19,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The backing store is resolved per *query*, not per catalog instance: the
   * session conf `graft.catalog.dir` (falling back to the plugin option
   * `dir`) names the backend, so one registered catalog serves every scale
-  * factor the driver points it at. Tables load through [[GraftSqlTable]] —
-  * the same DSv2 path as `spark.read.format("graft-sqldb")`, so column
-  * pruning, filter/limit/aggregate pushdown, and whole-subtree SQL fusion
+  * factor the driver points it at. The backend itself is one instance per
+  * address and may keep the metadata it has discovered (the wire backend
+  * keeps table list, schemas and row counts), so choosing it per query
+  * costs no catalog read; `REFRESH TABLE` ([[invalidateTable]]) and
+  * `SHOW TABLES` ([[listTables]]) make it read them again. Tables load
+  * through [[GraftSqlTable]] — the same DSv2 path as
+  * `spark.read.format("graft-sqldb")`, so column pruning,
+  * filter/limit/aggregate pushdown, and whole-subtree SQL fusion
   * ([[graft.plans.SqlPushdownRule]]) all apply to catalog-resolved scans.
   *
   * Read-only by design, like the reference's (its catalog registers
@@ -96,9 +101,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   // ---- tables ----
 
+  /** An explicit discovery: re-reads the backend's catalog. */
   override def listTables(ns: Array[String]): Array[Identifier] =
-    if (ok(ns)) backend.tables.map(t => Identifier.of(Namespace, t)).toArray
-    else throw new NoSuchNamespaceException(ns.toSeq)
+    if (ok(ns)) {
+      val b = backend
+      b.refresh()
+      b.tables.map(t => Identifier.of(Namespace, t)).toArray
+    } else throw new NoSuchNamespaceException(ns.toSeq)
+
+  /** Spark's `REFRESH TABLE` hook: the backend drops its kept metadata. */
+  override def invalidateTable(ident: Identifier): Unit = backend.refresh()
 
   override def tableExists(ident: Identifier): Boolean =
     ok(ident.namespace) && backend.tableExists(ident.name)

@@ -30,8 +30,21 @@ import graft.plans.SqlGen.Dialect
   * text-format rows through schema-compiled decoders, so result size is
   * bounded by executor memory (the same executor-side model as
   * `JdbcTaskConnection`); the driver only ever runs scalar planning
-  * probes. Sessions are per-call — the protocol is one-query-in-flight,
-  * and a pooled production deployment would wrap `PgWire.withSession`. */
+  * probes.
+  *
+  * Catalog: the table list, each table's columns and its row-count
+  * estimate are read once and kept for the backend's lifetime, as the
+  * reference's `load_catalog` reads information_schema once at start, so
+  * analysing a query resolves its tables without a wire round trip. Only
+  * fetches, planning probes and re-discovery open sessions (one each; the
+  * protocol is one-query-in-flight, and a pooled deployment would wrap
+  * `PgWire.withSession`). Staleness contract: a table created after
+  * discovery resolves on its first reference ([[tableExists]] re-reads the
+  * list once on a miss); a changed column needs [[refresh]] (`REFRESH
+  * TABLE`, or `SHOW TABLES`); a column whose wire type no longer matches
+  * the kept schema fails the read loudly
+  * ([[PgWireTaskConnection.checkWireTypes]]) instead of decoding wrong
+  * values. */
 object PgWireBackend {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, PgWireBackend]()
 
@@ -191,35 +204,54 @@ class PgWireBackend private (val address: String) extends SqlBackend {
     PgWire.withSession(host, port, database, user,
       PgWire.configuredPassword)(_.query(sql))
 
+  /** Discovery-time table list; null until read, and again after
+    * [[refresh]]. */
+  @transient private lazy val tableList =
+    new java.util.concurrent.atomic.AtomicReference[Seq[String]]()
+  @transient private lazy val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   /** Catalog discovery via hand-written information_schema SQL — the
     * reference's own approach (`mod.rs:67-125`); the JDBC backend's
     * DatabaseMetaData portability layer doesn't exist on a raw wire. */
-  override def tables: Seq[String] =
-    q("""SELECT "table_name" FROM "information_schema"."tables" WHERE "table_schema" = 'public' ORDER BY "table_name"""")
+  private def discoverTables(): Seq[String] = {
+    val names = q("""SELECT "table_name" FROM "information_schema"."tables" WHERE "table_schema" = 'public' ORDER BY "table_name"""")
       ._2.flatMap(_.head).toSeq
-
-  override def tableExists(table: String): Boolean = tables.contains(table)
-
-  override def schema(table: String): StructType = {
-    val lit = table.replace("'", "''")
-    val rows = q(
-      s"""SELECT "column_name", "data_type", "numeric_precision", "numeric_scale", "is_nullable", "ordinal_position"
-         |FROM "information_schema"."columns" WHERE "table_schema" = 'public' AND "table_name" = '$lit'
-         |ORDER BY "ordinal_position"""".stripMargin)._2
-    require(rows.nonEmpty, s"no such table in $name: $table")
-    StructType(rows.map { r =>
-      StructField(r(0).get,
-        sparkType(r(1).get, r(2).map(_.toInt), r(3).map(_.toInt)),
-        nullable = !r(4).contains("NO"))
-    }.toSeq)
+    tableList.set(names)
+    names
   }
 
+  override def tables: Seq[String] =
+    Option(tableList.get).getOrElse(discoverTables())
+
+  /** A miss re-reads the list once, so a table created after discovery
+    * resolves on its first reference. */
+  override def tableExists(table: String): Boolean = {
+    val known = tableList.get
+    (known != null && known.contains(table)) || discoverTables().contains(table)
+  }
+
+  override def schema(table: String): StructType =
+    schemaCache.computeIfAbsent(table, t => {
+      val lit = t.replace("'", "''")
+      val rows = q(
+        s"""SELECT "column_name", "data_type", "numeric_precision", "numeric_scale", "is_nullable", "ordinal_position"
+           |FROM "information_schema"."columns" WHERE "table_schema" = 'public' AND "table_name" = '$lit'
+           |ORDER BY "ordinal_position"""".stripMargin)._2
+      require(rows.nonEmpty, s"no such table in $name: $t")
+      StructType(rows.map { r =>
+        StructField(r(0).get,
+          sparkType(r(1).get, r(2).map(_.toInt), r(3).map(_.toInt)),
+          nullable = !r(4).contains("NO"))
+      }.toSeq)
+    })
+
   /** Planner-stats estimate from pg_class.reltuples — metadata, not a
-    * scan; -1 means never analyzed (no stats). Memoized per table for
-    * the backend's lifetime (the same staleness tradeoff as
-    * SparkViewBackend.rowCounts): the optimizer consults this once per
-    * graft leaf per subtree level, and an unmemoized lookup would pay a
-    * synchronous wire round-trip at every one of them. */
+    * scan; -1 means never analyzed (no stats). Kept per table like the
+    * schema (the same staleness tradeoff as SparkViewBackend.rowCounts):
+    * the optimizer consults this once per graft leaf per subtree level,
+    * and an unmemoized lookup would pay a synchronous wire round-trip at
+    * every one of them. */
   @transient private lazy val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
   override def estimatedRowCount(table: String): Option[Long] =
@@ -229,6 +261,12 @@ class PgWireBackend private (val address: String) extends SqlBackend {
         q(s"""SELECT "reltuples" FROM "pg_class" WHERE "relname" = '$lit'""")
           ._2.headOption.flatMap(_.head).map(_.toDouble.toLong).filter(_ >= 0)
       } catch { case _: Exception => None }) // no pg_catalog on minimal fakes
+
+  override def refresh(): Unit = {
+    tableList.set(null)
+    schemaCache.clear()
+    rowCountCache.clear()
+  }
 
   override def executeSql(sql: String): Seq[Row] = {
     val (fields, rows) = q(sql)
@@ -283,23 +321,19 @@ case class PgWireTaskConnection(address: String,
     else textFetch(session, sql, schema, exhausted)
   }
 
-  /** Binary COPY read. A uuid column is StringType Spark-side but ships
-    * as 16 raw bytes — learned (like the JDBC path's Describe probe) from
-    * a LIMIT-0 RowDescription probe, issued only when the schema has
-    * string columns that COULD be uuid; the probe doubles as an early
-    * width check before the COPY starts. */
+  /** Binary COPY read. A LIMIT-0 RowDescription probe on the same
+    * session runs first: it checks the result's width and each column's
+    * type OID against the plan's schema ([[PgWireTaskConnection.checkWireTypes]]),
+    * and names the uuid columns, which are StringType Spark-side but ship
+    * as 16 raw bytes (like the JDBC path's Describe probe). */
   private def binaryFetch(session: PgWire.Session, sql: String,
       schema: StructType,
       exhausted: java.util.concurrent.atomic.AtomicBoolean): Iterator[Row] = {
-    val uuidCols: Set[String] =
-      if (schema.fields.exists(_.dataType == StringType)) {
-        val fs = session.fields(s"""SELECT * FROM ($sql) "__graft_probe" LIMIT 0""")
-        require(fs.size == schema.size,
-          s"pgwire result width ${fs.size} != expected ${schema.size} for: $sql")
-        fs.iterator.zipWithIndex.collect {
-          case (f, i) if f.typeOid == PgWire.Oid.Uuid => schema.fields(i).name
-        }.toSet
-      } else Set.empty
+    val fs = session.fields(s"""SELECT * FROM ($sql) "__graft_probe" LIMIT 0""")
+    PgWireTaskConnection.checkWireTypes(fs, schema, sql)
+    val uuidCols = fs.iterator.zip(schema.fields.iterator).collect {
+      case (f, sf) if f.typeOid == PgWire.Oid.Uuid => sf.name
+    }.toSet
     val in = session.copyOut(s"COPY ($sql) TO STDOUT (FORMAT binary)")
     val rows = PgCopyDecoder.rows(in, schema, uuidCols)
     new Iterator[Row] {
@@ -337,4 +371,47 @@ object PgWireTaskConnection {
     * binary COPY by default. */
   private[graft] def binaryCopyDefault: Boolean =
     sys.props.getOrElse("graft.pgwire.binaryCopy", "true").toBoolean
+
+  /** The RowDescription type OIDs that the [[PgCopyDecoder]] reader of a
+    * Spark type decodes; None for types with no entry (arrays, records,
+    * intervals, time), which stay unchecked. Both timestamp OIDs carry 8
+    * bytes of microseconds from 2000-01-01, and the dialect casts either
+    * Spark timestamp type to `TIMESTAMP`, so either reader takes either. */
+  private def wireOids(dt: DataType): Option[Set[Int]] = {
+    import PgWire.Oid._
+    dt match {
+      case BooleanType => Some(Set(Bool))
+      case ShortType => Some(Set(Int2))
+      case IntegerType => Some(Set(Int4))
+      case LongType => Some(Set(Int8))
+      case FloatType => Some(Set(Float4))
+      case DoubleType => Some(Set(Float8))
+      case _: DecimalType => Some(Set(Numeric))
+      case StringType => Some(Set(Text, Varchar, Bpchar, Uuid))
+      case BinaryType => Some(Set(Bytea))
+      case DateType => Some(Set(Date))
+      case TimestampType | TimestampNTZType => Some(Set(Timestamp, Timestamptz))
+      case _ => None
+    }
+  }
+
+  /** Width and per-column type check of a probed result against the
+    * plan's schema. The decoder's fixed-width length checks cannot see a
+    * same-width change (int4 → float4, int8 → timestamp), so a schema
+    * kept from before such a change would decode wrong values silently;
+    * this fails the read instead and names the way out. */
+  private[graft] def checkWireTypes(fields: Seq[PgWire.Field],
+      schema: StructType, sql: String): Unit = {
+    require(fields.size == schema.size,
+      s"pgwire result width ${fields.size} != expected ${schema.size} for: $sql")
+    fields.lazyZip(schema.fields).foreach { (f, sf) =>
+      wireOids(sf.dataType).foreach { ok =>
+        if (!ok.contains(f.typeOid)) throw new IllegalStateException(
+          s"pgwire column '${sf.name}' arrives as type oid ${f.typeOid}, but the " +
+            s"plan expects ${sf.dataType.simpleString}. If the table changed after " +
+            "its schema was read, run REFRESH TABLE on it and re-plan; otherwise " +
+            s"the backend computes this column in another type than Spark: $sql")
+      }
+    }
+  }
 }

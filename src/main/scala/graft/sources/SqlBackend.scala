@@ -17,11 +17,18 @@ trait SqlBackend extends Serializable {
   /** Identifier quoting of the backend's dialect. */
   def dialect: graft.plans.SqlGen.Dialect
   /** Available table names (the catalog surface, analog of
-    * `load_catalog`, `src/sqldb/postgres/mod.rs:67-125`). */
+    * `load_catalog`, `src/sqldb/postgres/mod.rs:67-125`). A backend may
+    * serve a discovery-time snapshot, kept until [[refresh]]. */
   def tables: Seq[String]
   /** Existence check that also sees tables created AFTER discovery (DDL
-    * through [[executeUpdate]]); `tables` is the discovery-time snapshot. */
+    * through [[executeUpdate]], or by another client), even where `tables`
+    * is a snapshot. */
   def tableExists(table: String): Boolean = tables.contains(table)
+  /** Drop whatever catalog metadata the backend keeps (table list,
+    * schemas, row-count estimates), so the next lookup reads the backend
+    * again. Called for Spark's `REFRESH TABLE` and for `SHOW TABLES`;
+    * backends that keep nothing leave the default. */
+  def refresh(): Unit = {}
   /** Tables DDL must not touch (the double's read-only parquet views); a
     * real RDBMS backend owns all its tables and protects none. */
   def protectedTables: Seq[String] = Nil

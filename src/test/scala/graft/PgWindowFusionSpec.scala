@@ -98,19 +98,27 @@ class PgWindowFusionSpec extends AnyFunSuite {
     case other => other.toString
   }
 
-  private lazy val server: MiniPgServer = {
+  /** The wire double over [[delegate]]: `tables` is the catalog it
+    * serves, and `catalogReads` counts the information_schema queries it
+    * answers, under "tables" and "columns:<table>". */
+  private final class PgDouble(@volatile var tables: Seq[String]) {
     val srv = new MiniPgServer
-    val counts = Map("emp" -> 40L, "dep" -> 3L) // precomputed: no delegate job
+    val catalogReads = scala.collection.concurrent.TrieMap.empty[String, Int]
+    def reads(key: String): Int = catalogReads.getOrElse(key, 0)
+    private def count(key: String): Unit =
+      catalogReads.updateWith(key)(n => Some(n.getOrElse(0) + 1))
+    private val counts = Map("emp" -> 40L, "dep" -> 3L) // precomputed: no delegate job
     srv.queryExecutor = sql => {
       val tableRe = "\"table_name\" = '([^']+)'".r
       val relRe = "\"relname\" = '([^']+)'".r
       if (sql.contains("\"information_schema\".\"tables\"")) {
-        val names = Seq("dep", "emp", "sparse", "typed")
+        count("tables")
         Some(MiniPgServer.QueryResult(
           Seq(("table_name", PgWire.Oid.Varchar)),
-          names.map(n => Seq(Some(n)))))
+          tables.map(n => Seq(Some(n)))))
       } else if (sql.contains("\"information_schema\".\"columns\"")) {
         val t = tableRe.findFirstMatchIn(sql).get.group(1)
+        count(s"columns:$t")
         val sch = delegate.table(t).schema
         Some(MiniPgServer.QueryResult(
           Seq(("column_name", PgWire.Oid.Varchar), ("data_type", PgWire.Oid.Varchar),
@@ -162,8 +170,10 @@ class PgWindowFusionSpec extends AnyFunSuite {
         case None => SparkSession.clearActiveSession()
       }
     }
-    srv
   }
+
+  private lazy val server: MiniPgServer =
+    new PgDouble(Seq("dep", "emp", "sparse", "typed")).srv
 
   private def remote(table: String): DataFrame = {
     GraftExtensions.install(spark)
@@ -532,8 +542,17 @@ class PgWindowFusionSpec extends AnyFunSuite {
       Row(null, null, null))
     server.copyOut.put("COPY (SELECT array_fixture) TO STDOUT (FORMAT binary)",
       PgCopyEncoder.bytes(rows, schema))
+    // the binary read's RowDescription probe: int8[], int4[], interval
+    // (types the wire type check leaves to the decoder)
+    val old = server.queryExecutor
+    server.queryExecutor = sql =>
+      if (sql.contains("__graft_probe") && sql.contains("SELECT array_fixture"))
+        Some(MiniPgServer.QueryResult(
+          Seq(("xs", 1016), ("grid", 1007), ("dur", 1186)), Nil))
+      else old(sql)
     val conn = PgWireTaskConnection(s"127.0.0.1:${server.port}/testdb")
-    val got = conn.fetch(0L, "SELECT array_fixture", schema).toVector
+    val got = try conn.fetch(0L, "SELECT array_fixture", schema).toVector
+      finally server.queryExecutor = old
     assert(got.size == 3)
     assert(got(0).getSeq[Long](0) == Seq(1L, 2L, 3L))
     assert(got(0).getSeq[Seq[Int]](1).map(_.toSeq) == Seq(Seq(1, 2), Seq(3, 4)))
@@ -599,5 +618,135 @@ class PgWindowFusionSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("requires authentication"), e.getMessage)
     } finally authSrv.stop()
+  }
+
+  // ---- catalog kept per backend: each test gets its own double (and its
+  // own address, so its own backend and catalog instance) ----
+
+  private def catalogOn(d: PgDouble, name: String): String = {
+    GraftExtensions.install(spark)
+    spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$name.pgwire", s"127.0.0.1:${d.srv.port}/$name")
+    spark.conf.set(s"spark.sql.catalog.$name.partitions", "2") // see the scheduler note
+    name
+  }
+
+  private def deptCounts(cat: String): Set[(String, Long)] = spark.sql(
+    s"""SELECT d.dname, count(*) AS n FROM $cat.main.emp e
+       |JOIN $cat.main.dep d ON e.dept = d.id GROUP BY d.dname""".stripMargin)
+    .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+
+  private val wantDeptCounts = Set(("eng", 8L), ("ops", 8L), ("fin", 8L))
+
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+
+  test("the wire catalog is discovered once: repeated queries read no information_schema") {
+    val d = new PgDouble(Seq("dep", "emp"))
+    try {
+      val cat = catalogOn(d, "pg_meta_once")
+      (1 to 5).foreach(_ => assert(deptCounts(cat) == wantDeptCounts))
+      assert(d.reads("tables") == 1, d.catalogReads)
+      assert(d.reads("columns:emp") == 1 && d.reads("columns:dep") == 1, d.catalogReads)
+    } finally d.srv.stop()
+  }
+
+  test("REFRESH TABLE and SHOW TABLES make the wire catalog read again") {
+    val d = new PgDouble(Seq("dep", "emp"))
+    try {
+      val cat = catalogOn(d, "pg_meta_refresh")
+      assert(deptCounts(cat) == wantDeptCounts)
+      spark.sql(s"REFRESH TABLE $cat.main.emp")
+      assert(deptCounts(cat) == wantDeptCounts)
+      assert(d.reads("tables") == 2, d.catalogReads)
+      assert(d.reads("columns:emp") == 2 && d.reads("columns:dep") == 2, d.catalogReads)
+      val listed = spark.sql(s"SHOW TABLES IN $cat.main").collect().map(_.getString(1)).toSet
+      assert(listed == Set("dep", "emp"))
+      assert(d.reads("tables") == 3, d.catalogReads)
+    } finally d.srv.stop()
+  }
+
+  test("a table created after discovery resolves on its first reference") {
+    val d = new PgDouble(Seq("dep", "emp"))
+    try {
+      val cat = catalogOn(d, "pg_meta_late")
+      assert(deptCounts(cat) == wantDeptCounts)
+      locally {
+        val s = delegate
+        import s.implicits._
+        Seq(1, 2, 3).toDF("k").createOrReplaceTempView("late")
+      }
+      d.tables = d.tables :+ "late"
+      assert(spark.sql(s"SELECT sum(k) FROM $cat.main.late").collect().head.getLong(0) == 6L)
+      assert(d.reads("tables") == 2, "a miss re-reads the list once: " + d.catalogReads)
+      // a name the backend does not have is still not found
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT * FROM $cat.main.nowhere").collect()
+      }
+      assert(e.getMessage.contains("nowhere"), e.getMessage)
+    } finally d.srv.stop()
+  }
+
+  test("a same-width type change fails the read naming REFRESH TABLE, then reads right after it") {
+    def plant(bonus: String): Unit = delegate.sql(
+      s"""CREATE OR REPLACE TEMP VIEW drift AS
+         |SELECT CAST(id AS INT) AS id, $bonus AS bonus FROM range(1, 11)""".stripMargin)
+    plant("CAST(id % 3 AS INT)")
+    val d = new PgDouble(Seq("drift"))
+    try {
+      val cat = catalogOn(d, "pg_meta_drift")
+      def read() = spark.sql(s"SELECT id, bonus FROM $cat.main.drift ORDER BY id").collect()
+      assert(read().map(r => (r.getInt(0), r.getInt(1))).toSeq ==
+        (1 to 10).map(i => (i, i % 3)))
+      // int4 -> float4: 4 wire bytes either way, so only the type check
+      // stands between the kept IntegerType schema and wrong values
+      plant("CAST(id % 3 AS REAL) + CAST(0.25 AS REAL)")
+      val e = intercept[Exception](read())
+      assert(messages(e).exists(m => m != null && m.contains("'bonus'") &&
+        m.contains("REFRESH TABLE")), messages(e).mkString("\n"))
+      spark.sql(s"REFRESH TABLE $cat.main.drift")
+      assert(read().map(r => (r.getInt(0), r.getFloat(1))).toSeq ==
+        (1 to 10).map(i => (i, i % 3 + 0.25f)))
+    } finally d.srv.stop()
+  }
+
+  test("the wire type check accepts exactly the type OIDs each binary reader decodes") {
+    import graft.sources.PgWireTaskConnection.checkWireTypes
+    import PgWire.Oid._
+    val cases: Seq[(DataType, Int, Boolean)] = Seq(
+      (BooleanType, Bool, true), (BooleanType, Int2, false),
+      (ShortType, Int2, true), (ShortType, Int4, false),
+      (IntegerType, Int4, true), (IntegerType, Float4, false), (IntegerType, Int8, false),
+      (LongType, Int8, true), (LongType, Timestamp, false), (LongType, Float8, false),
+      (FloatType, Float4, true), (FloatType, Int4, false),
+      (DoubleType, Float8, true), (DoubleType, Int8, false), (DoubleType, Numeric, false),
+      (DecimalType(12, 2), Numeric, true), (DecimalType(12, 2), Float8, false),
+      (StringType, Text, true), (StringType, Varchar, true), (StringType, Bpchar, true),
+      (StringType, Uuid, true), (StringType, Bytea, false), (StringType, Int4, false),
+      (BinaryType, Bytea, true), (BinaryType, Text, false),
+      (DateType, Date, true), (DateType, Int4, false),
+      (TimestampType, Timestamptz, true), (TimestampType, Timestamp, true),
+      (TimestampNTZType, Timestamp, true), (TimestampNTZType, Timestamptz, true),
+      (TimestampType, Int8, false), (TimestampNTZType, Float8, false))
+    cases.foreach { case (dt, oid, accepted) =>
+      val schema = StructType(Seq(StructField("c", dt)))
+      val fields = Seq(PgWire.Field("c", oid))
+      if (accepted) checkWireTypes(fields, schema, "q")
+      else {
+        val e = intercept[IllegalStateException](checkWireTypes(fields, schema, "q"))
+        assert(e.getMessage.contains("'c'") && e.getMessage.contains(s"oid $oid") &&
+          e.getMessage.contains(dt.simpleString) && e.getMessage.contains("REFRESH TABLE"),
+          e.getMessage)
+      }
+    }
+    // types with no entry are left to the decoder
+    Seq(ArrayType(LongType), DayTimeIntervalType(),
+      StructType(Seq(StructField("x", IntegerType)))).foreach { dt =>
+      checkWireTypes(Seq(PgWire.Field("c", 1016)), StructType(Seq(StructField("c", dt))), "q")
+    }
+    val e = intercept[IllegalArgumentException](checkWireTypes(
+      Seq(PgWire.Field("a", Int4)), StructType(Seq(StructField("a", IntegerType),
+        StructField("b", IntegerType))), "q"))
+    assert(e.getMessage.contains("width 1 != expected 2"), e.getMessage)
   }
 }

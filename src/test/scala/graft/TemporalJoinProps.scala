@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.TemporalJoins
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -10,9 +11,32 @@ import org.scalacheck.Prop.forAll
   * simultaneous timestamps, sparse keys, and band-boundary gaps. */
 object TemporalJoinProps extends Properties("TemporalJoins") {
 
-  private lazy val spark = TestSpark.spark
+  /** A session of its own with the interpreted fallback off, at both the
+    * expression factories and whole-stage codegen: a class the generated
+    * code cannot compile against fails the property instead of running
+    * interpreted. */
+  private lazy val spark = {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
 
-  private case class Ev(id: Long, user: Long, sec: Long, value: Double)
+  /** Runs a property with [[spark]] active: the expression factories read
+    * the active session's conf. */
+  private def strict[A](body: => A): A = {
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try body
+    finally prev match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None => SparkSession.clearActiveSession()
+    }
+  }
+
+  /** Public: the generated serializer calls its accessors, and Janino
+    * cannot call them on a private nested class. */
+  case class Ev(id: Long, user: Long, sec: Long, value: Double)
 
   private val genEvents: Gen[List[Ev]] = for {
     n <- Gen.choose(0, 40)
@@ -31,7 +55,7 @@ object TemporalJoinProps extends Properties("TemporalJoins") {
   }
 
   property("asofBackward equals brute-force latest-at-or-before") =
-    forAll(genEvents, genEvents) { (ls, rs) =>
+    forAll(genEvents, genEvents) { (ls, rs) => strict {
       val left = toDF(ls)
       val right = toDF(rs).select(col("user"), col("ts"), col("value"))
       val got = TemporalJoins.asofBackward(
@@ -48,10 +72,10 @@ object TemporalJoinProps extends Properties("TemporalJoins") {
         l.id -> best.map(_.value)
       }.toMap
       got == expected
-    }
+    } }
 
   property("timeBandPairs equals brute-force gap filter") =
-    forAll(genEvents, Gen.oneOf(30L, 60L, 97L)) { (evs, band) =>
+    forAll(genEvents, Gen.oneOf(30L, 60L, 97L)) { (evs, band) => strict {
       val got = TemporalJoins.timeBandPairs(
           toDF(evs), Seq("user"), "ts", "id", band)
         .select("id_a", "id_b", "gap_s")
@@ -63,5 +87,5 @@ object TemporalJoinProps extends Properties("TemporalJoins") {
         if gap >= 1 && gap <= band
       } yield (a.id, b.id, gap)).toSet
       got == expected
-    }
+    } }
 }
