@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * `federation = false` is the plain session the oracle-checked entries
   * run under. The rules then stay out of the session; the entries that
-  * need them scope them to a child session (`GraftExtensions.newSession`,
-  * `MaterializedViews.install`).
+  * need them install them on a child session (`newSession()` plus
+  * `GraftExtensions.install` or `MaterializedViews.install`).
   *
   * A user of the reference switches to this engine with:
   * {{{
@@ -28,10 +28,9 @@ object Engine {
     * runtime coalescing/skew handling, shuffle partitions sized to cores
     * (not the 200 default), UTC so timestamp semantics match the oracle.
     * `federation` installs the graft rules as `extraOptimizations`, which
-    * run after V2 scan pushdown and fuse whatever the scan left;
-    * [[graft.plans.GraftExtensions]] puts them in the operator-optimization
-    * batch, before it, where the MV rewrite over filtered federated bases
-    * needs them.
+    * run after V2 scan pushdown: the MV rewrite reads back the filters a
+    * federated scan absorbed, and the pushdown rule fuses whatever the
+    * scan left. This is the only placement the rules have.
     *
     * Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`)
     * holds [[CodegenCacheEntries]] classes instead of its default 100. The

@@ -66,12 +66,14 @@ case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
   override def nullSafeEval(in: Any): Any =
     MinHashSignature.sig(in.asInstanceOf[ArrayData], numHashes, seed)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, c => s"""
-      |${CodeGenerator.javaType(dataType)} r =
+      |${CodeGenerator.javaType(dataType)} $r =
       |  graft.functions.MinHashSignature.sig($c, $numHashes, ${seed}L);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
+      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
       |""".stripMargin)
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -162,12 +164,14 @@ case class WordShingleHashes(child: Expression, n: Int)
   override def nullSafeEval(in: Any): Any =
     WordShingleHashes.hashes(in.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, c => s"""
-      |${CodeGenerator.javaType(dataType)} r =
+      |${CodeGenerator.javaType(dataType)} $r =
       |  graft.functions.WordShingleHashes.hashes($c, $n);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
+      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
       |""".stripMargin)
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -340,9 +344,10 @@ case class SpanShingleHashes(child: Expression, k: Int)
     val helper =
       if (isTextInput) "graft.functions.SpanShingleHashes.fromText"
       else "graft.functions.SpanShingleHashes.fromTokens"
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, c => s"""
-      |${CodeGenerator.javaType(dataType)} r = $helper($c, $k);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
+      |${CodeGenerator.javaType(dataType)} $r = $helper($c, $k);
+      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
       |""".stripMargin)
   }
 
@@ -440,11 +445,13 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def nullSafeEval(in: Any): Any =
     SimHash64.hash(in.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, c => s"""
-      |java.lang.Long r = graft.functions.SimHash64.hash($c);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.longValue(); }
+      |java.lang.Long $r = graft.functions.SimHash64.hash($c);
+      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
       |""".stripMargin)
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -499,12 +506,14 @@ case class WinnowingFingerprint(child: Expression, k: Int, w: Int)
   override def nullSafeEval(in: Any): Any =
     WinnowingFingerprint.fp(in.asInstanceOf[UTF8String], k, w)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, c => s"""
-      |${CodeGenerator.javaType(dataType)} r =
+      |${CodeGenerator.javaType(dataType)} $r =
       |  graft.functions.WinnowingFingerprint.fp($c, $k, $w);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
+      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
       |""".stripMargin)
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -977,11 +986,13 @@ case class SigAgreement(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any =
     SigAgreement.agree(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val res = ctx.freshName("res")
     nullSafeCodeGen(ctx, ev, (l, r) => s"""
-      |java.lang.Integer res = graft.functions.SigAgreement.agree($l, $r);
-      |if (res == null) { ${ev.isNull} = true; } else { ${ev.value} = res.intValue(); }
+      |java.lang.Integer $res = graft.functions.SigAgreement.agree($l, $r);
+      |if ($res == null) { ${ev.isNull} = true; } else { ${ev.value} = $res.intValue(); }
       |""".stripMargin)
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

@@ -356,12 +356,13 @@ case class NearestCentroids(vec: Expression, qnorm: Expression,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("nearestCentroids", this,
       classOf[NearestCentroids].getName)
+    val r = ctx.freshName("r")
     val assign =
-      if (spill == 1) s"${ev.value} = ((java.lang.Long) r).longValue();"
-      else s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) r;"
+      if (spill == 1) s"${ev.value} = ((java.lang.Long) $r).longValue();"
+      else s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r;"
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      |Object r = $ref.score($a, $b);
-      |if (r == null) { ${ev.isNull} = true; } else { $assign }
+      |Object $r = $ref.score($a, $b);
+      |if ($r == null) { ${ev.isNull} = true; } else { $assign }
       |""".stripMargin)
   }
 
@@ -459,12 +460,13 @@ case class NearestCentroidsF32(vec: Expression,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("nearestCentroidsF32", this,
       classOf[NearestCentroidsF32].getName)
+    val r = ctx.freshName("r")
     val assign =
-      if (spill == 1) s"${ev.value} = ((java.lang.Long) r).longValue();"
-      else s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) r;"
+      if (spill == 1) s"${ev.value} = ((java.lang.Long) $r).longValue();"
+      else s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r;"
     nullSafeCodeGen(ctx, ev, c => s"""
-      |Object r = $ref.score($c);
-      |if (r == null) { ${ev.isNull} = true; } else { $assign }
+      |Object $r = $ref.score($c);
+      |if ($r == null) { ${ev.isNull} = true; } else { $assign }
       |""".stripMargin)
   }
 

@@ -6,10 +6,12 @@ import java.security.MessageDigest
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Cast, Coalesce, Divide, Expression, Literal, NamedExpression, PlanExpression}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Cast, Coalesce, Divide, Expression, Literal, NamedExpression, PlanExpression, V2ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
@@ -104,22 +106,15 @@ object MaterializedViews {
         Some(fs.location.rootPaths.map(_.toString).toSet)
       case _ => None
     }
-    // an ANALYZED federated scan (ensure() destructures pre-optimization,
-    // so this is always the unpushed relation form)
-    case r: DataSourceV2Relation => r.table match {
-      case t: GraftSqlTable => Some(Set(fedIdentity(t.backend, t.tableName)))
-      case _ => None
-    }
-    case _ => None
+    case _ => fedLeaf(p).map { case (b, t) => Set(fedIdentity(b, t)) }
   }
 
-  /** The federated leaf's backend+table, when the base is one. */
+  /** The federated leaf's backend+table, when the base is one. ensure()
+    * reads the ANALYZED plan, so this is always the unpushed relation. */
   private def fedLeaf(p: LogicalPlan): Option[(SqlBackend, String)] = p match {
     case s: SubqueryAlias => fedLeaf(s.child)
-    case r: DataSourceV2Relation => r.table match {
-      case t: GraftSqlTable => Some((t.backend, t.tableName))
-      case _ => None
-    }
+    case DataSourceV2Relation(t: GraftSqlTable, _, _, _, _, _) =>
+      Some((t.backend, t.tableName))
     case _ => None
   }
 
@@ -384,7 +379,7 @@ object MaterializedViews {
     base.newInstance()
   }
 
-  /** Runtime installation on an existing session (mirrors
+  /** Runtime installation on an existing session (the rewrite half of
     * [[GraftExtensions.install]]). */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(MvRewriteRule))
@@ -514,14 +509,16 @@ object MaterializedViews {
       rollupQuery(li)
     }),
     // the SAME roll-up over a FEDERATED base (graft-sqldb): the rewrite
-    // rule must run BEFORE V2ScanRelationPushDown absorbs the dim filter
-    // into the scan, so this entry builds its session with class-based
-    // GraftExtensions (operator-optimization-batch injection) instead of
-    // extraOptimizations. At 100 TB the delta is even starker than the
-    // parquet pair's: the base query ships the backend's aggregate over
-    // the wire every run, the view serves 6 rows from local kilobytes.
+    // runs after V2 scan pushdown and reads the dim filter back out of the
+    // scan that absorbed it. The pushdown rule is installed too, so the
+    // view itself is built by one backend GROUP BY (a partitioned scan
+    // would sum the doubles in a different order). At 100 TB the delta is
+    // even starker than the parquet pair's: the base query ships the
+    // backend's aggregate over the wire every run, the view serves 6 rows
+    // from local kilobytes.
     "mv_rollup_fed" -> ((spark0: SparkSession, dir: String) => {
-      val spark = GraftExtensions.newSession()
+      val spark = spark0.newSession() // scope the graft rules to the entry
+      GraftExtensions.install(spark)
       val li = spark.read.format("graft-sqldb").option("dir", dir)
         .option("table", "lineitem").load()
       ensure(spark, "li_pricing_fed", li,
@@ -569,18 +566,16 @@ object MvRewriteRule extends Rule[LogicalPlan] {
   /** Aggregate(child = [attr-only Project | deterministic Filter |
     * SubqueryAlias]* over a base relation) → filters + base identity.
     *
-    * Three leaf forms. A file-source [[LogicalRelation]] and a federated
-    * [[DataSourceV2Relation]] are both PRE-pushdown: every filter in the
-    * query is still a visible Filter node above them, so the dims-only
-    * check below sees the complete predicate set. (The V2 relation form
-    * only survives to this rule when it runs in the operator-optimization
-    * batch — class-based [[GraftExtensions]] injection — which executes
-    * BEFORE V2ScanRelationPushDown.) A [[DataSourceV2ScanRelation]] is
-    * POST-pushdown (the `extraOptimizations` injection path): filters the
-    * scan absorbed are invisible here, so it matches only when the
-    * [[GraftScan]] is PRISTINE — nothing pushed — which makes the visible
-    * Filter nodes the complete set again. A non-pristine scan declines:
-    * rewriting it could silently drop absorbed predicates. */
+    * The rule runs in `extraOptimizations`, after V2 scan pushdown, so
+    * there are two leaf forms. Over a file-source [[LogicalRelation]] every
+    * filter in the query is still a visible Filter node. A federated
+    * [[DataSourceV2ScanRelation]] may have absorbed some of them: its
+    * [[GraftScan]] hands back the static predicates it pushed, which join
+    * the visible ones, so the dims-only check below sees the complete
+    * predicate set either way. The scan declines when it absorbed anything
+    * else (aggregate, limit/offset/top-N, join, runtime filter), and so
+    * does any absorbed predicate that does not convert back
+    * ([[absorbed]]): dropping one would silently widen the result. */
   private def destructure(p: LogicalPlan,
       filters: List[Expression]): Option[(List[Expression], Set[String])] =
     p match {
@@ -594,18 +589,25 @@ object MvRewriteRule extends Rule[LogicalPlan] {
         Some((filters,
           l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths
             .map(_.toString).toSet))
-      case r: DataSourceV2Relation => r.table match {
-        case t: GraftSqlTable =>
-          Some((filters, Set(MaterializedViews.fedIdentity(t.backend, t.tableName))))
-        case _ => None
-      }
       case s: DataSourceV2ScanRelation => s.scan match {
-        case g: GraftScan if g.pristine =>
-          Some((filters, Set(MaterializedViews.fedIdentity(g.backend, g.table))))
+        case g: GraftScan => g.staticPredicates.map { ps =>
+          val pushed = ps.map(absorbed(_, s.relation.output).getOrElse(return None))
+          (pushed.toList ++ filters, Set(MaterializedViews.fedIdentity(g.backend, g.table)))
+        }
         case _ => None
       }
       case _ => None
     }
+
+  /** A predicate a federated scan absorbed, back in Catalyst form over the
+    * relation's full output (the scan's own output is pruned). None when
+    * Spark cannot convert it, or when it holds a Cast: the rebuilt cast's
+    * ANSI flag need not match the query's. */
+  private def absorbed(p: Predicate, output: Seq[Attribute]): Option[Expression] =
+    V2ExpressionUtils.toCatalyst(p).map(_.transform {
+      case u: UnresolvedAttribute =>
+        output.find(a => u.nameParts == Seq(a.name)).getOrElse(return None)
+    }).filter(e => e.resolved && !e.exists(_.isInstanceOf[Cast]))
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
     val (filters, paths) = destructure(agg.child, Nil).getOrElse(return None)

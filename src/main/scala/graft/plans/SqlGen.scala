@@ -695,10 +695,16 @@ object SqlGen {
         case ae: AggregateExpression => (expr(ae), true)
         case other => (Left(Unsupported(s"window function ${other.prettyName}")): Res[String], false)
       }
+      // Spark's ranking functions are int; Postgres returns them as bigint
+      // (OID 20), which the result decoder rejects
+      val intRank = fn match {
+        case _: RowNumber | _: Rank | _: DenseRank => true
+        case _ => false
+      }
       for {
         f <- fnSql
         s <- windowSpec(spec, frameAllowed)
-      } yield s"$f OVER ($s)"
+      } yield if (intRank) s"CAST($f OVER ($s) AS INTEGER)" else s"$f OVER ($s)"
 
     case ae: AggregateExpression =>
       val dial = currentDialect.get

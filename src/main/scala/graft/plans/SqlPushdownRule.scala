@@ -3,11 +3,10 @@ package graft.plans
 import graft.sources.{GraftScan, SqlBackend}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.PredicateHelper
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
 /** Greedy largest-convertible-subtree pushdown — the Spark re-build of the
   * reference's `QueryPushdownOptimizerRule` (`src/optimizer.rs:16-39`):
@@ -23,17 +22,14 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
   * downcasting the scan's TableSource, `src/parser.rs:96-109,404-419` —
   * here the scan object itself carries the SQL).
   *
-  * For `scanPreferred` (remote) backends the rule runs in one of two
-  * placements and decides differently in each:
-  *  - before V2 scan pushdown ([[GraftExtensions]], leaves are
-  *    `DataSourceV2Relation`): it cannot see what the scan will absorb, so
-  *    [[scanSurfaceCovers]] predicts it and leaves those subtrees alone;
-  *  - after V2 scan pushdown and dynamic pruning (`extraOptimizations`,
-  *    leaves are `DataSourceV2ScanRelation`): the scan has already taken
-  *    what it can, so every Aggregate, Join or subquery still above it is a
-  *    piece the scan declined, and it fuses within the fetch budget. Only a
-  *    bare Project/Filter/Sort/Limit chain over one scan, or a Union with
-  *    such a branch, keeps the partitioned read ([[scanChain]]).
+  * The rule runs in one placement, `extraOptimizations`
+  * ([[GraftExtensions.install]]), after V2 scan pushdown and dynamic
+  * pruning, so its leaves are `DataSourceV2ScanRelation`s. For
+  * `scanPreferred` (remote) backends the scan has already taken what it
+  * can: every Aggregate, Join or subquery still above it is a piece the
+  * scan declined, and it fuses within the fetch budget. Only a bare
+  * Project/Filter/Sort/Limit chain over one scan, or a Union with such a
+  * branch, keeps the partitioned read ([[scanChain]]).
   */
 object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -44,18 +40,11 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     *
     *   A FULL JOIN B  =  (A LEFT JOIN B)  ∪ALL  (NULLs ++ (B ANTI A))
     *
-    * The reference executed every pushed query single-stream
-    * (`src/physical_plan.rs:55-61`); a native FULL fusion would inherit
-    * that, and naive key-range slicing is wrong for FULL (either side's
-    * unmatched rows would repeat per slice). The decomposition instead
-    * hands each half to the machinery that already parallelizes it: the
-    * LEFT branch takes DSv2 join pushdown WITH key-range slicing (N
-    * partition queries), and the anti branch whole-plan-fuses to one
-    * NOT-EXISTS backend query — N + 1 partitions that union to exactly
-    * the FULL join (pre-pushdown placement; after pushdown the scan has
-    * already declined the join, so both branches fuse within the fetch
-    * budget). On dialects WITHOUT native FULL JOIN (Derby) this is also
-    * what makes a federated FULL join expressible at all. */
+    * Its job is making a federated FULL join expressible on dialects
+    * WITHOUT native FULL JOIN (Derby): the anti branch renders as one
+    * NOT-EXISTS query. The rule runs after V2 scan pushdown, where the
+    * scan has already declined the join, so both branches fuse within the
+    * fetch budget. */
   private def rewriteFullJoins(plan: LogicalPlan): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter}
@@ -93,18 +82,11 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
       convert(p).getOrElse(p.withNewChildren(p.children.map(attempt)))
   }
 
-  /** A pushable leaf: (backend, FROM-fragment). Handles both optimizer
-    * stages — DataSourceV2Relation (injected rule runs before V2 scan
-    * pushdown: plain table name, pushdown still expressed as plan nodes
-    * above) and DataSourceV2ScanRelation (extraOptimizations run after:
-    * the scan's own negotiated SQL becomes the leaf subquery). */
+  /** A pushable leaf: (backend, FROM-fragment). The scan's own negotiated
+    * SQL becomes the leaf subquery. */
   private def leafOf(p: LogicalPlan): Option[(graft.sources.SqlBackend, String)] = p match {
     case r: DataSourceV2ScanRelation => r.scan match {
       case g: GraftScan => Some((g.backend, s"(${g.renderedSql})"))
-      case _ => None
-    }
-    case r: DataSourceV2Relation => r.table match {
-      case t: graft.sources.GraftSqlTable => Some((t.backend, t.tableName))
       case _ => None
     }
     case _ => None
@@ -127,7 +109,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
       case Filter(_, c) => dsv2AlreadyExpresses(c)
       case GlobalLimit(_, c) => dsv2AlreadyExpresses(c)
       case LocalLimit(_, c) => dsv2AlreadyExpresses(c)
-      case _: DataSourceV2Relation | _: DataSourceV2ScanRelation => true
+      case _: DataSourceV2ScanRelation => true
       case _ => false
     }
   }
@@ -143,71 +125,15 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     })
   }
 
-  /** PREDICTION for the pre-pushdown placement only (leaves are
-    * `DataSourceV2Relation`, rules injected by [[GraftExtensions]]), for
-    * `scanPreferred` (remote JDBC) backends: true when the subtree is
-    * within the grammar the DSv2 scan surface should negotiate once
-    * V2 scan pushdown runs — project/filter/limit/offset/top-N, basic
-    * aggregates, and INNER/LEFT/RIGHT joins (`SupportsPushDownJoin` with
-    * parallel key-range splits). Fusing those into a [[PushedSqlQuery]]
-    * would trade a partitioned parallel read for a single-stream fetch, so
-    * they are left for the scan. Anything OUTSIDE the grammar (semi/anti
-    * joins, set ops, DISTINCT/FILTER/statistical aggregates, windows,
-    * subquery expressions) cannot push scan-level at all; for those,
-    * computing backend-side and fetching the (reduced) result single-
-    * stream moves strictly fewer bytes than fetching every input row.
-    *
-    * After pushdown no prediction is needed: the scan has answered, and
-    * whatever it left above itself fuses within the fetch budget (see
-    * [[scanChain]] for the one shape that stays on the scan path). */
-  private def scanSurfaceCovers(p: LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate._
-    import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def basic(fs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]) =
-      fs.forall(!_.exists {
-        case ae: AggregateExpression =>
-          ae.isDistinct || ae.filter.isDefined || !(ae.aggregateFunction match {
-            case _: Sum | _: Average | _: Min | _: Max | _: Count => true
-            case _ => false
-          })
-        case _ => false
-      })
-    p match {
-      case Project(l, c) if noSubqueryExpr(l) => scanSurfaceCovers(c)
-      case Filter(cond, c) if noSubqueryExpr(Seq(cond)) => scanSurfaceCovers(c)
-      case GlobalLimit(_, c) => scanSurfaceCovers(c)
-      case LocalLimit(_, c) => scanSurfaceCovers(c)
-      case o: Offset => scanSurfaceCovers(o.child)
-      case Sort(_, true, c, _) => scanSurfaceCovers(c)
-      case SubqueryAlias(_, c) => scanSurfaceCovers(c)
-      case Aggregate(g, aggs, c, _)
-          if basic(aggs) && !g.exists(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.BaseGroupingSets]) =>
-        scanSurfaceCovers(c)
-      case Join(l, r, Inner | LeftOuter | RightOuter, _, _) =>
-        scanSurfaceCovers(l) && scanSurfaceCovers(r)
-      // a Union with ANY scan-expressible branch must not fuse whole —
-      // that would downgrade the branch's partitioned parallel read to a
-      // slice of a single-stream query; the recursion in [[attempt]]
-      // still fuses the non-expressible branches individually (this is
-      // what keeps the FULL-join decomposition's LEFT branch parallel)
-      case Union(children, false, false) => children.exists(scanSurfaceCovers)
-      case _: DataSourceV2Relation | _: DataSourceV2ScanRelation => true
-      case _ => false
-    }
-  }
-
-  /** After V2 scan pushdown: true when the subtree is only Project/Filter/
-    * Sort/Limit/Offset (no subquery expressions) over one scan, or a Union
-    * with such a branch. Its rows are the scan's own rows, so fusing buys
-    * no reduction and would trade the partitioned parallel read (and its
-    * runtime filters) for a single stream. A Union with ANY such branch
-    * must not fuse whole either; the recursion in [[attempt]] still fuses
-    * its other branches one by one (this keeps the FULL-join
-    * decomposition's LEFT branch parallel). Every other node left above a
-    * scan at this point — Aggregate, Join, semi/anti join, subquery — is
-    * one the scan declined. */
+  /** True when the subtree is only Project/Filter/Sort/Limit/Offset (no
+    * subquery expressions) over one scan, or a Union with such a branch.
+    * Its rows are the scan's own rows, so fusing buys no reduction and
+    * would trade the partitioned parallel read (and its runtime filters)
+    * for a single stream. A Union with ANY such branch must not fuse whole
+    * either; the recursion in [[attempt]] still fuses its other branches
+    * one by one. Every other node left above a scan at this point —
+    * Aggregate, Join, semi/anti join, subquery — is one the scan
+    * declined. */
   private def scanChain(p: LogicalPlan): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     p match {
@@ -268,10 +194,6 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
         if (s.numRows().isPresent) Some(s.numRows().getAsLong) else None
       case _ => None
     }
-    case r: DataSourceV2Relation => r.table match {
-      case t: graft.sources.GraftSqlTable => t.backend.estimatedRowCount(t.tableName)
-      case _ => None
-    }
     case _ => None
   }
 
@@ -295,8 +217,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
     import org.apache.spark.sql.catalyst.plans.logical._
     def est(q: LogicalPlan): Option[BigInt] = q match {
-      case leaf @ (_: DataSourceV2Relation | _: DataSourceV2ScanRelation) =>
-        leafRows(leaf).map(BigInt(_))
+      case leaf: DataSourceV2ScanRelation => leafRows(leaf).map(BigInt(_))
       case Project(_, c) => est(c)
       case SubqueryAlias(_, c) => est(c)
       case Filter(_, c) => est(c)
@@ -369,18 +290,12 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     // dialects the generator can't target at all keep scan-level pushdown
     // only (unrecognized JDBC drivers)
     if (!backend.dialect.fullSqlGen) return None
-    // V2 scan pushdown has already run when every leaf is its scan
-    // relation (extraOptimizations placement): decide from the plan in hand
-    val postPushdown = leaves.forall(_.isInstanceOf[DataSourceV2ScanRelation])
     if (backend.dialect.scanPreferred) {
       val declined =
         // remote backends with partitioned scan reads: leave the scan what
-        // it expresses — after pushdown a bare chain over one scan (see
-        // scanChain), before it the predicted scan grammar (see
-        // scanSurfaceCovers); fusion there would downgrade a parallel read
-        // to a single-stream fetch
-        if (postPushdown && scanChain(p)) Some("scan path: a bare chain over one scan")
-        else if (!postPushdown && scanSurfaceCovers(p)) Some("scan path: within the DSv2 scan surface")
+        // it expresses, a bare chain over one scan (see scanChain); fusion
+        // there would downgrade a parallel read to a single-stream fetch
+        if (scanChain(p)) Some("scan path: a bare chain over one scan")
         // same economics for a BARE window root: its output cardinality is
         // its full input, so fusing ships every row through one stream AND
         // serializes the window compute backend-side — strictly worse at
@@ -402,7 +317,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     }
 
     val resolver: SqlGen.TableResolver = pl => leafOf(pl).map(_._2)
-    val fused = if (postPushdown) withoutPruningHints(p) else p
+    val fused = withoutPruningHints(p)
 
     SqlGen(fused, resolver, backend.dialect) match {
       case Right(sql) =>
@@ -468,7 +383,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
       case wg: WindowGroupLimit => partitionSpecs += wg.partitionSpec; allowed(wg.child)
       case Join(l, r, Inner | LeftOuter | RightOuter, Some(_), _) =>
         allowed(l) && allowed(r)
-      case _: DataSourceV2Relation | _: DataSourceV2ScanRelation => true
+      case _: DataSourceV2ScanRelation => true
       case _ => false
     }
     if (!allowed(p) || partitionSpecs.isEmpty) return None
@@ -607,33 +522,11 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 
-/** `SparkSessionExtensions` wiring (config
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) — analog of
+/** Installs the graft rules and strategy on a session — the analog of
   * `make_rdbms_context` registering planner + optimizer rule
-  * (`src/lib.rs:22-32`). For an already-built session use
-  * [[GraftExtensions.install]]. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => MvRewriteRule)
-    e.injectOptimizerRule(_ => SqlPushdownRule)
-    e.injectPlannerStrategy(_ => PushedSqlStrategy)
-  }
-}
-
+  * (`src/lib.rs:22-32`). The rules go in `extraOptimizations`, which run
+  * after V2 scan pushdown; installing twice is a no-op. */
 object GraftExtensions {
-  /** A NEW session (sharing the current context) whose optimizer runs the
-    * graft rules in the OPERATOR-OPTIMIZATION batch — i.e. before
-    * V2ScanRelationPushDown — which [[install]]'s `extraOptimizations`
-    * placement cannot do. Required for MV rewrite over federated bases
-    * with filters: after pushdown the scan has absorbed them and the
-    * rewrite must decline. `create()` always builds a new session, and it
-    * fills the default and active session slots only where they are
-    * empty, so the sessions already in place are left as they are. Its
-    * own `newSession()` children inherit the rules. */
-  def newSession(): SparkSession =
-    SparkSession.builder().withExtensions(new GraftExtensions).create()
-
-  /** Runtime installation on an existing session. */
   def install(spark: SparkSession): Unit = {
     MaterializedViews.install(spark)
     if (!spark.experimental.extraOptimizations.contains(SqlPushdownRule))

@@ -455,7 +455,7 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
       // range, or ordered windows when that table is keyless)
       if (aggSql.isDefined) 1 else numPartitions,
       aggSql.map { case (selects, _) => (selects, aggGroupBy) },
-      orderBy, offset, joinedFrom, joinSplit, pushedV2Sql)
+      orderBy, offset, joinedFrom, joinSplit, pushedV2Sql, pushedV2.toSeq)
 }
 
 /** V2 expression → backend SQL — used for join-pushdown conditions AND the
@@ -583,21 +583,24 @@ class GraftScan(val table: String, val backend: SqlBackend,
     val orderBy: Seq[String] = Nil, val offset: Option[Int] = None,
     val joinedFrom: Option[String] = None,
     val joinSplit: Option[JoinSplit] = None,
-    val preRendered: Seq[String] = Nil)
+    val preRendered: Seq[String] = Nil,
+    pushed: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate] = Nil)
     extends Scan with Batch
     with SupportsReportStatistics with SupportsRuntimeFiltering {
 
   override def readSchema(): StructType = required
 
-  /** True iff NOTHING was pushed into this scan — no filters (static or
-    * runtime), no aggregate, no limit/offset/top-N, no join fragment.
-    * Column pruning alone keeps a scan pristine: dropping a projection
-    * changes no row semantics. [[graft.plans.MvRewriteRule]] keys on this
-    * to rewrite a post-pushdown federated relation safely — any absorbed
-    * state would be invisible to the rule and silently dropped. */
-  def pristine: Boolean =
-    preRendered.isEmpty && runtimeFilters.isEmpty && aggregation.isEmpty &&
-      limit.isEmpty && offset.isEmpty && orderBy.isEmpty && joinedFrom.isEmpty
+  /** The static predicates this scan absorbed, when they are ALL it
+    * absorbed: None once an aggregate, limit/offset/top-N, join fragment
+    * or runtime filter was pushed too. Column pruning changes no row
+    * semantics and does not count. [[graft.plans.MvRewriteRule]] re-applies
+    * these predicates when it serves the query from a view instead of
+    * this scan; any other absorbed state would be silently dropped. */
+  def staticPredicates
+      : Option[Seq[org.apache.spark.sql.connector.expressions.filter.Predicate]] =
+    if (runtimeFilters.isEmpty && aggregation.isEmpty && limit.isEmpty &&
+        offset.isEmpty && orderBy.isEmpty && joinedFrom.isEmpty) Some(pushed)
+    else None
 
   // ---- statistics (SupportsReportStatistics) ----
   // Sourced from the backend's CATALOG stats (no per-query probe), so

@@ -82,7 +82,7 @@ class EngineSpec extends AnyFunSuite {
       "codegen.compiles.warm_run" -> "0"), out.toString)
   }
 
-  test("src/main builds sessions only through Engine.create and GraftExtensions.newSession") {
+  test("src/main builds sessions only through Engine.create") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
     val files = Files.walk(root).iterator.asScala
@@ -91,8 +91,7 @@ class EngineSpec extends AnyFunSuite {
     def hits(f: Path, needle: String) = Files.readAllLines(f).asScala.zipWithIndex
       .collect { case (l, i) if l.contains(needle) => (f.getFileName.toString, i + 1, l.trim) }
     val builders = files.flatMap(hits(_, "SparkSession.builder(")).filterNot {
-      case (file, _, line) => file == "Engine.scala" ||
-        line == "SparkSession.builder().withExtensions(new GraftExtensions).create()"
+      case (file, _, _) => file == "Engine.scala"
     }
     assert(builders.isEmpty, s"build sessions through Engine.create: $builders")
     val slots = files.flatMap(f =>

@@ -276,6 +276,29 @@ class FederationSpec extends AnyFunSuite {
     assert(df.collect().map(_.toString).sorted.toSeq == want)
   }
 
+  test("PushedSqlQuery identity ignores its slice thunk, and tree copies carry it") {
+    GraftExtensions.install(spark)
+    val df = remote("nation")
+      .join(remote("region"), col("n_regionkey") === col("r_regionkey"))
+      .groupBy(col("r_name")).agg(count(lit(1)).as("n_nations"))
+    val pushed = df.queryExecution.optimizedPlan.collect { case p: PushedSqlQuery => p }
+    assert(pushed.size == 1, df.queryExecution.optimizedPlan.toString)
+    // sliceGen is NOT part of plan identity: two logically identical
+    // pushed plans must compare equal (and sameResult) even when their
+    // slice thunks are distinct closures — otherwise ReuseExchange/
+    // ReuseSubquery can never dedup a pushed subtree
+    val p = pushed.head
+    val qa = PushedSqlQuery(p.output, p.sql, p.backend)(() => Seq("x"))
+    val qb = PushedSqlQuery(p.output, p.sql, p.backend)(() => Seq("y"))
+    assert(qa == qb, "closures in a product field defeat plan equality")
+    assert(qa.sameResult(qb))
+    // …while tree copies (transform/withNewChildren paths) still carry
+    // the thunk through otherCopyArgs
+    val copied = qa.makeCopy(Array(qa.output, qa.sql, qa.backend))
+      .asInstanceOf[PushedSqlQuery]
+    assert(copied.sliceGen() == Seq("x"))
+  }
+
   test("concurrent federated queries complete without starving the scheduler") {
     // two engine queries race: each factory's driver-side prefetch must
     // finish even while the other query's scan tasks occupy slots (no

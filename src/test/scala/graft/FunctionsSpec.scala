@@ -345,4 +345,40 @@ class FunctionsSpec extends AnyFunSuite {
       assert(rows(0).getSeq[AnyRef](0).size == 2)
     }
   }
+
+  test("graft expressions evaluated twice in one stage compile under CODEGEN_ONLY") {
+    // Filter isnotnull(f(x)) under Project f(x): one stage evaluates f
+    // twice, and with the consume split off both evaluations land in one
+    // Java method (Spark also inlines them whenever a split is not
+    // possible). Over non-nullable inputs nullSafeCodeGen emits each body
+    // unscoped, so a fixed Java local would be defined twice; fallback off
+    // turns that compile error into a failure instead of a silent
+    // interpreted run. A range input keeps the plan out of the optimizer's
+    // local evaluation.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s.conf.set("spark.sql.codegen.splitConsumeFuncByOperator", "false")
+    val df = s.range(1, 3).select(
+      concat(lit("alpha beta gamma delta "), col("id").cast("string")).as("text"),
+      array(col("id"), col("id") + 1).as("hs"),
+      array(col("id").cast("tinyint"), lit(3).cast("tinyint")).as("v"),
+      array(col("id").cast("float"), lit(0.5f)).as("vf"))
+    val exprs = Seq(
+      "minhash_sig" -> minhash_sig(col("hs"), 4),
+      "simhash64" -> simhash64(col("hs")),
+      "sig_agreement" -> sig_agreement(col("hs"), col("hs")),
+      "word_shingles" -> word_shingles(col("text"), 2),
+      "span_shingles" -> span_shingles(col("text"), 2),
+      "span_shingles(tokens)" -> span_shingles(split(col("text"), " "), 2),
+      "winnow_fp" -> winnow_fp(col("text"), 4, 2),
+      "nearest_centroids" -> nearest_centroids(col("v"), lit(1.0), Seq(7L, 8L),
+        Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))),
+      "nearest_centroids_f32" -> nearest_centroids_f32(col("vf"), Seq(7L, 8L),
+        Seq(Seq(1f, 0f), Seq(0f, 1f))))
+    exprs.foreach { case (name, f) =>
+      val q = df.select(f.as("o")).filter(col("o").isNotNull)
+      assert(q.collect().length == 2, name)
+    }
+  }
 }

@@ -417,4 +417,19 @@ class PostgresDialectSpec extends AnyFunSuite {
       .fold(u => fail(u.toString), identity)
     assert(sql.contains("AS DOUBLE PRECISION)") && !sql.contains("AS DOUBLE)"), sql)
   }
+
+  test("ranking windows cast back to INTEGER: Postgres returns them as bigint") {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("i")).orderBy(col("x"))
+    val df = fnInput.select(row_number().over(w).as("rn"), rank().over(w).as("rk"),
+      dense_rank().over(w).as("drk"), ntile(2).over(w).as("nt"))
+    val sql = SqlGen(df.queryExecution.analyzed, fnResolver, d)
+      .fold(u => fail(u.toString), identity)
+    Seq("ROW_NUMBER()", "RANK()", "DENSE_RANK()").foreach { f =>
+      assert(sql.contains(s"CAST($f OVER (PARTITION BY"), sql)
+    }
+    assert(sql.split("AS INTEGER\\)").length == 4, sql)
+    // NTILE is already integer on Postgres
+    assert(!sql.contains("CAST(NTILE"), sql)
+  }
 }
