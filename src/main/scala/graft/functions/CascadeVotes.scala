@@ -12,12 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (clf unigram hashes, fluency unigram+bigram hashes, repetition token
   * strings, contamination trigram hashes) and ran interpreted
   * higher-order functions over the arrays. Here the text is segmented
-  * ONCE (the [[WordShingleHashes]] / [[graft.ops.Tokens]] shared rule —
-  * whitespace runs on the pinned class, CJK codepoints as single-char
-  * tokens, codepoint iteration), producing both the original-case token
-  * strings (repetition) and the lowercased FNV-1a+mix token hashes (the
-  * sketch tier), and every gate's integer arithmetic runs in tight Java
-  * loops inside whole-stage codegen.
+  * ONCE ([[graft.ops.Tokens.segString]], the shared token walk) into
+  * the original-case token strings (repetition), each hashed with
+  * [[WordShingleHashes.tokenHash]] (the sketch tier), and every gate's
+  * integer arithmetic runs in tight Java loops inside whole-stage
+  * codegen.
   *
   * Semantics are EXACTLY the four standalone operators' (vote-for-vote
   * equality against the four-frame reference is pinned in CascadeSpec):
@@ -62,65 +61,10 @@ case class CascadeVotes(child: Expression,
     StructField("cov", LongType, nullable = true)))
   override def prettyName: String = "cascade_votes"
 
-  private def isCjk(cp: Int): Boolean = {
-    val sc = Character.UnicodeScript.of(cp)
-    sc == Character.UnicodeScript.HAN || sc == Character.UnicodeScript.HIRAGANA ||
-      sc == Character.UnicodeScript.KATAKANA || sc == Character.UnicodeScript.HANGUL
-  }
-
-  /** One segmentation pass (the WordShingleHashes loop, emitting BOTH
-    * artifacts): original-case token strings + lowercased FNV-1a+mix
-    * token hashes. */
-  private def scan(s: String,
-      words: java.util.ArrayList[String],
-      hashes: java.util.ArrayList[java.lang.Long]): Unit = {
-    val len = s.length
-    var i = 0
-    while (i < len) {
-      while (i < len && graft.ops.Tokens.isWsCp(s.codePointAt(i)))
-        i += Character.charCount(s.codePointAt(i))
-      if (i < len) {
-        val start = i
-        var h = 0xCBF29CE484222325L
-        val first = s.codePointAt(i)
-        if (isCjk(first)) {
-          h ^= Character.toLowerCase(first).toLong
-          h *= 0x100000001B3L
-          i += Character.charCount(first)
-        } else {
-          var cp = first
-          while (i < len && !graft.ops.Tokens.isWsCp(cp) && !isCjk(cp)) {
-            h ^= Character.toLowerCase(cp).toLong
-            h *= 0x100000001B3L
-            i += Character.charCount(cp)
-            if (i < len) cp = s.codePointAt(i)
-          }
-        }
-        words.add(s.substring(start, i))
-        hashes.add(Mix64.mix(h))
-      }
-    }
-  }
-
-  /** n-token window combine — WordShingleHashes' positioned mix. */
-  @inline private def win(t: Array[Long], w: Int, n: Int): Long = {
-    var h = 0L
-    var j = 0
-    while (j < n) {
-      h = Mix64.mix(h ^ (t(w + j) + (j + 1) * Mix64.Golden))
-      j += 1
-    }
-    h
-  }
-
   def votesOf(in: UTF8String): InternalRow = {
-    val wl = new java.util.ArrayList[String]()
-    val hl = new java.util.ArrayList[java.lang.Long]()
-    scan(in.toString, wl, hl)
-    val m = wl.size
-    val th = new Array[Long](m)
-    var i = 0
-    while (i < m) { th(i) = hl.get(i); i += 1 }
+    val words = graft.ops.Tokens.segString(in.toString)
+    val th = words.map(w => WordShingleHashes.tokenHash(w, 0, w.length))
+    val m = words.length
 
     // ---- clf: unigram-hash bucket weights, integer mean vs threshold
     val clfKeep: Any =
@@ -143,7 +87,7 @@ case class CascadeVotes(child: Expression,
         var psum = 0L
         var j = 0
         while (j < m - 1) {
-          val bh = win(th, j, 2)
+          val bh = WordShingleHashes.window(th, j, 2)
           val bw = biW(java.lang.Math.floorMod(bh, biW.length.toLong).toInt)
           val p =
             if (bw > 0L) {
@@ -167,13 +111,13 @@ case class CascadeVotes(child: Expression,
       else {
         val distinct = new java.util.HashSet[String](m * 2)
         var j = 0
-        while (j < m) { distinct.add(wl.get(j)); j += 1 }
+        while (j < m) { distinct.add(words(j)); j += 1 }
         var top = 0L
         if (m >= 2) {
           val grams = new java.util.HashMap[String, java.lang.Long](m * 2)
           var k = 0
           while (k < m - 1) {
-            val g = wl.get(k) + " " + wl.get(k + 1)
+            val g = words(k) + " " + words(k + 1)
             val c = grams.merge(g, java.lang.Long.valueOf(1L),
               (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
             if (c.longValue > top) top = c.longValue
@@ -193,7 +137,7 @@ case class CascadeVotes(child: Expression,
         var c = 0L
         var w = 0
         while (w <= m - 3) {
-          if (java.util.Arrays.binarySearch(bench, win(th, w, 3)) >= 0) c += 1
+          if (java.util.Arrays.binarySearch(bench, WordShingleHashes.window(th, w, 3)) >= 0) c += 1
           w += 1
         }
         java.lang.Long.valueOf(c)

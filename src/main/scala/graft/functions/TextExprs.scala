@@ -78,76 +78,56 @@ case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Single-pass word-shingle hasher: lowercases, splits on whitespace runs
-  * WITH CJK per-character segmentation, hashes each token (FNV-1a 64 +
-  * mix), and emits one combined hash per n-token window (distinct
-  * multiplier per position, mixed). Replaces the `split → transform →
-  * concat_ws → slice → xxhash64` pipeline — no intermediate token/shingle
-  * strings are materialized, which is the hot path of every sketch-based
-  * dedup at corpus scale.
-  *
-  * CJK rule (r13, same semantics as [[graft.ops.Tokens]].seg): a
-  * Han/Hiragana/Katakana/Hangul character is its own token — without it a
-  * space-free CJK document is ONE token, hashes to zero shingles at any
-  * n > 1, and silently EXITS every sketch dedup (minhash, simhash,
-  * n-gram Jaccard, novelty, fluency). Iteration is per CODEPOINT (r14):
-  * script detection via `Character.UnicodeScript.of(int)` and the FNV
-  * fold over codepoint values, so a supplementary-plane ideograph
-  * (ext-B+, outside the BMP) is its own token exactly as `Tokens.seg`'s
-  * codepoint-aware Java regex and the DuckDB oracle emulation
-  * (HashOracleSql, `unicode(ch)` per codepoint) both already treat it —
-  * the three tiers share ONE segmentation contract on all planes.
+/** Single-pass word-shingle hasher: walks the [[graft.ops.Tokens]] token
+  * boundaries (whitespace runs on the pinned class, each CJK codepoint its
+  * own token, on all planes), hashes each lowercased token (FNV-1a 64 over
+  * codepoints + mix), and emits one combined hash per n-token window
+  * (distinct multiplier per position, mixed). Replaces the `split →
+  * transform → concat_ws → slice → xxhash64` pipeline — no intermediate
+  * token/shingle strings are materialized, which is the hot path of every
+  * sketch-based dedup at corpus scale. The DuckDB oracle emulation
+  * (HashOracleSql, `unicode(ch)` per codepoint) mirrors the same rule.
   * Returns null when the text has fewer than n tokens. */
 object WordShingleHashes {
+  /** Lowercased FNV-1a+mix hash of the token `s[i, e)` — shared with
+    * [[CascadeVotes]]. */
+  def tokenHash(s: String, i: Int, e: Int): Long = {
+    var h = 0xCBF29CE484222325L
+    var j = i
+    while (j < e) {
+      val cp = s.codePointAt(j)
+      h ^= Character.toLowerCase(cp).toLong
+      h *= 0x100000001B3L
+      j += Character.charCount(cp)
+    }
+    Mix64.mix(h)
+  }
+
+  /** Positioned combine of the n token hashes starting at `t(w)`. */
+  def window(t: Array[Long], w: Int, n: Int): Long = {
+    var h = 0L
+    var j = 0
+    while (j < n) {
+      h = Mix64.mix(h ^ (t(w + j) + (j + 1) * Mix64.Golden))
+      j += 1
+    }
+    h
+  }
+
   def hashes(in: UTF8String, n: Int): ArrayData = {
     val s = in.toString
-    val len = s.length
-    // 1. hash each lowercased token: whitespace-run splits, CJK
-    //    CODEPOINTS as single-char tokens (supplementary plane included).
-    //    Whitespace/CJK predicates are the shared suite contract
-    //    (Tokens.isWsCp / isCjkCp) — NOT Character.isWhitespace: the
-    //    oracle's RE2 emulation splits on RE2's \s, and isWhitespace's
-    //    extras (U+000B, the U+2000 range) would silently desegment vs it
-    val tokens = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var i = 0
-    while (i < len) {
-      while (i < len && graft.ops.Tokens.isWsCp(s.codePointAt(i)))
-        i += Character.charCount(s.codePointAt(i))
-      if (i < len) {
-        var h = 0xCBF29CE484222325L
-        val first = s.codePointAt(i)
-        if (graft.ops.Tokens.isCjkCp(first)) {
-          h ^= Character.toLowerCase(first).toLong
-          h *= 0x100000001B3L
-          i += Character.charCount(first)
-        } else {
-          var cp = first
-          while (i < len && !graft.ops.Tokens.isWsCp(cp) &&
-            !graft.ops.Tokens.isCjkCp(cp)) {
-            h ^= Character.toLowerCase(cp).toLong
-            h *= 0x100000001B3L
-            i += Character.charCount(cp)
-            if (i < len) cp = s.codePointAt(i)
-          }
-        }
-        tokens += Mix64.mix(h)
-      }
+    val tb = new scala.collection.mutable.ArrayBuilder.ofLong
+    var i = graft.ops.Tokens.tokenStart(s, 0)
+    while (i < s.length) {
+      val e = graft.ops.Tokens.tokenEnd(s, i)
+      tb += tokenHash(s, i, e)
+      i = graft.ops.Tokens.tokenStart(s, e)
     }
-    val m = tokens.length
-    if (m < n) return null
-    // 2. combine each n-token window into one shingle hash
-    val out = new Array[Long](m - n + 1)
+    val t = tb.result()
+    if (t.length < n) return null
+    val out = new Array[Long](t.length - n + 1)
     var w = 0
-    while (w <= m - n) {
-      var h = 0L
-      var j = 0
-      while (j < n) {
-        h = Mix64.mix(h ^ (tokens(w + j) + (j + 1) * Mix64.Golden))
-        j += 1
-      }
-      out(w) = h
-      w += 1
-    }
+    while (w < out.length) { out(w) = window(t, w, n); w += 1 }
     new GenericArrayData(out)
   }
 }
@@ -199,17 +179,29 @@ case class WordShingleHashes(child: Expression, n: Int)
 object SpanShingleHashes {
   // FNV-1a / xx-style second stream over one token's codepoints —
   // CASE-SENSITIVE (exact-substring semantics, unlike the lowercased
-  // Jaccard/minhash tier). Accumulators packed as (h1, h2, cpCount).
+  // Jaccard/minhash tier).
   private final val Fnv1 = 0xCBF29CE484222325L
   private final val Fnv2 = 0x27D4EB2F165667C5L
   private final val P2 = 0xC2B2AE3D27D4EB4FL
 
-  /** Per-token stream accumulator shared by both input modes. */
+  /** Per-token hash streams, shared by both input modes. */
   private final class Acc {
     var t1 = new Array[Long](16)
     var t2 = new Array[Long](16)
     var m = 0
-    def push(h1: Long, h2: Long, nCp: Int): Unit = {
+    /** Fold the token `s[i, e)` into both streams. */
+    def add(s: String, i: Int, e: Int): Unit = {
+      var h1 = Fnv1
+      var h2 = Fnv2
+      var nCp = 0
+      var j = i
+      while (j < e) {
+        val cp = s.codePointAt(j)
+        h1 ^= cp.toLong; h1 *= 0x100000001B3L
+        h2 = (h2 ^ cp.toLong) * P2
+        nCp += 1
+        j += Character.charCount(cp)
+      }
       if (m == t1.length) {
         t1 = java.util.Arrays.copyOf(t1, m * 2)
         t2 = java.util.Arrays.copyOf(t2, m * 2)
@@ -241,64 +233,27 @@ object SpanShingleHashes {
     new GenericArrayData(out)
   }
 
-  /** Tokenize per the suite segmentation contract (Tokens.seg / segString:
-    * pinned whitespace class, CJK codepoints as single-char tokens on all
-    * planes) and hash each token as it streams by. */
+  /** Hash each token of the [[graft.ops.Tokens]] walk as it streams by. */
   def fromText(in: UTF8String, k: Int): ArrayData = {
     val a = new Acc
     val s = in.toString
-    val len = s.length
-    var i = 0
-    while (i < len) {
-      while (i < len && graft.ops.Tokens.isWsCp(s.codePointAt(i)))
-        i += Character.charCount(s.codePointAt(i))
-      if (i < len) {
-        var h1 = Fnv1
-        var h2 = Fnv2
-        var n = 0
-        val first = s.codePointAt(i)
-        if (graft.ops.Tokens.isCjkCp(first)) {
-          h1 ^= first.toLong; h1 *= 0x100000001B3L
-          h2 = (h2 ^ first.toLong) * P2
-          n = 1
-          i += Character.charCount(first)
-        } else {
-          var cp = first
-          while (i < len && !graft.ops.Tokens.isWsCp(cp) &&
-            !graft.ops.Tokens.isCjkCp(cp)) {
-            h1 ^= cp.toLong; h1 *= 0x100000001B3L
-            h2 = (h2 ^ cp.toLong) * P2
-            n += 1
-            i += Character.charCount(cp)
-            if (i < len) cp = s.codePointAt(i)
-          }
-        }
-        a.push(h1, h2, n)
-      }
+    var i = graft.ops.Tokens.tokenStart(s, 0)
+    while (i < s.length) {
+      val e = graft.ops.Tokens.tokenEnd(s, i)
+      a.add(s, i, e)
+      i = graft.ops.Tokens.tokenStart(s, e)
     }
     combine(a, k)
   }
 
-  /** Hash pre-segmented tokens — the same per-token codepoint stream as
+  /** Hash pre-segmented tokens with the same per-token fold as
     * [[fromText]], so the two modes agree key-for-key. */
   def fromTokens(toks: ArrayData, k: Int): ArrayData = {
     val a = new Acc
-    val nt = toks.numElements()
     var ti = 0
-    while (ti < nt) {
+    while (ti < toks.numElements()) {
       val s = toks.getUTF8String(ti).toString
-      var h1 = Fnv1
-      var h2 = Fnv2
-      var n = 0
-      var i = 0
-      while (i < s.length) {
-        val cp = s.codePointAt(i)
-        h1 ^= cp.toLong; h1 *= 0x100000001B3L
-        h2 = (h2 ^ cp.toLong) * P2
-        n += 1
-        i += Character.charCount(cp)
-      }
-      a.push(h1, h2, n)
+      a.add(s, 0, s.length)
       ti += 1
     }
     combine(a, k)
@@ -328,7 +283,7 @@ case class SpanShingleHashes(child: Expression, k: Int)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects string or array<string>, got ${other.simpleString(10)}")
+          s"$prettyName expects string or array<string>, got ${other.simpleString}")
     }
 
   // def, not val: child.dataType is unresolved at construction time. Not
@@ -355,42 +310,21 @@ case class SpanShingleHashes(child: Expression, k: Int)
 }
 
 /** Token COUNT under the suite segmentation contract ([[graft.ops.Tokens.seg]])
-  * — the count-only twin of the in-eval tokenizers ([[SpanShingleHashes]]'s
-  * loop with the hashing removed): one codepoint pass, no regex rewrite, no
-  * token-array materialization. Replaces `size(Tokens.seg(text))` wherever
-  * only the count is consumed (span-dedup totals, BM25 document length,
-  * token-mass sampling, BPE whitespace-token accounting). LongType so call
-  * sites drop their `.cast("long")` along with the array. Counting rule,
-  * identical to seg by construction (differential-pinned in
-  * FunctionsSpec): each maximal run of non-whitespace non-CJK codepoints is
-  * one token, each CJK codepoint is its own token, whitespace is the pinned
-  * five-char class — so the count equals seg's filtered-split length on
-  * every string. */
+  * — the count-only twin of the in-eval tokenizers: one walk of the
+  * [[graft.ops.Tokens]] boundaries, no regex rewrite, no token-array
+  * materialization. Replaces `size(Tokens.seg(text))` wherever only the
+  * count is consumed (span-dedup totals, BM25 document length, token-mass
+  * sampling, BPE whitespace-token accounting). LongType so call sites drop
+  * their `.cast("long")` along with the array. Differential-pinned against
+  * seg in FunctionsSpec and WhitespaceContractSpec. */
 object SegCount {
   def count(in: UTF8String): Long = {
     val s = in.toString
-    val len = s.length
     var n = 0L
-    var i = 0
-    while (i < len) {
-      // whitespace codepoints are the pinned 5-char BMP class, so one
-      // charAt read per position suffices (r19 advisory: the codePointAt
-      // pair read each codepoint twice)
-      while (i < len && graft.ops.Tokens.isWsCp(s.charAt(i))) i += 1
-      if (i < len) {
-        val first = s.codePointAt(i)
-        if (graft.ops.Tokens.isCjkCp(first)) {
-          i += Character.charCount(first)
-        } else {
-          var cp = first
-          while (i < len && !graft.ops.Tokens.isWsCp(cp) &&
-            !graft.ops.Tokens.isCjkCp(cp)) {
-            i += Character.charCount(cp)
-            if (i < len) cp = s.codePointAt(i)
-          }
-        }
-        n += 1L
-      }
+    var i = graft.ops.Tokens.tokenStart(s, 0)
+    while (i < s.length) {
+      n += 1L
+      i = graft.ops.Tokens.tokenStart(s, graft.ops.Tokens.tokenEnd(s, i))
     }
     n
   }
@@ -930,7 +864,7 @@ case class IdWindowHashes(child: Expression, n: Int)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<int|bigint>, got ${other.simpleString(10)}")
+          s"$prettyName expects array<int|bigint>, got ${other.simpleString}")
     }
 
   private def isLong = child.dataType match {
@@ -980,7 +914,7 @@ case class SigAgreement(left: Expression, right: Expression)
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"$prettyName expects two array<bigint>, got " +
-            s"${l.simpleString(10)} / ${r.simpleString(10)}")
+            s"${l.simpleString} / ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any =

@@ -81,7 +81,7 @@ case class DotProductI8(left: Expression, right: Expression)
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"$prettyName expects array<tinyint> inputs, got " +
-            s"${l.simpleString(10)} / ${r.simpleString(10)}")
+            s"${l.simpleString} / ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -192,7 +192,7 @@ case class DotProductI8F64(left: Expression, right: Expression)
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"$prettyName expects (array<tinyint>, array<double>), got " +
-            s"${l.simpleString(10)} / ${r.simpleString(10)}")
+            s"${l.simpleString} / ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -279,7 +279,7 @@ case class NearestCentroids(vec: Expression, qnorm: Expression,
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"$prettyName expects (array<tinyint>, double), got " +
-            s"${l.simpleString(10)} / ${r.simpleString(10)}")
+            s"${l.simpleString} / ${r.simpleString}")
     }
 
   @transient private lazy val centArr: Array[Array[Double]] =
@@ -396,7 +396,7 @@ case class NearestCentroidsF32(vec: Expression,
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<float>, got ${other.simpleString(10)}")
+          s"$prettyName expects array<float>, got ${other.simpleString}")
     }
 
   @transient private lazy val centArr: Array[Array[Float]] =

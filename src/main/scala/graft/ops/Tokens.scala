@@ -24,12 +24,12 @@ import org.apache.spark.sql.functions._
   * SQL `trim` strips only spaces, so a trailing tab would otherwise
   * smuggle an empty token into the stream.
   *
-  * The 64-bit shingle-hash tier (minhash / simhash / n-gram Jaccard /
-  * novelty / fluency) tokenizes inside the native WordShingleHashes
-  * expression — which applies the SAME CJK per-character rule (and its
-  * HUGEINT oracle emulation in HashOracleSql mirrors it), so the two
-  * tokenizers agree on segmentation boundaries while hashing
-  * differently by design. */
+  * Expressions that tokenize inside their own eval (word and span
+  * shingles, seg_count, cascade_votes, the BPE/Unigram word split via
+  * [[segString]]) all walk ONE boundary pair, [[tokenStart]] /
+  * [[tokenEnd]]: the same rule as [[seg]], with no regex rewrite, and
+  * the walk itself allocates nothing. The HUGEINT oracle emulation in
+  * HashOracleSql mirrors it on the DuckDB side. */
 private[graft] object Tokens {
   /** Version of the segmentation rule itself — bump on ANY change to
     * [[seg]]/[[segString]] semantics. Folded into stored-model fingerprint
@@ -49,20 +49,51 @@ private[graft] object Tokens {
   private[graft] val WsClass = "\\t\\n\\f\\r "
   private[graft] val WsRun = s"[$WsClass]+"
 
-  /** Codepoint predicate of [[WsClass]] — for expressions that tokenize
-    * inside their own eval (WordShingleHashes). */
+  /** Codepoint predicate of [[WsClass]]. */
   private[graft] def isWsCp(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == '\f' || cp == '\r'
 
   /** Codepoint predicate of [[CjkJava]] — THE CJK segmentation contract
-    * (one Han/Hiragana/Katakana/Hangul codepoint = one token), shared by
-    * every in-eval tokenizer (WordShingleHashes, SpanShingleHashes,
-    * SegCount) so the script set cannot drift between kernels (r20,
-    * per the r19 advisory). */
-  private[graft] def isCjkCp(cp: Int): Boolean = {
+    * (one Han/Hiragana/Katakana/Hangul codepoint = one token). No
+    * codepoint of the four scripts lies below U+1100 (Hangul Jamo), so
+    * Latin text skips the script lookup; WhitespaceContractSpec pins the
+    * early-out against the plain definition on every codepoint. */
+  private[graft] def isCjkCp(cp: Int): Boolean = cp >= 0x1100 && {
     val sc = Character.UnicodeScript.of(cp)
     sc == Character.UnicodeScript.HAN || sc == Character.UnicodeScript.HIRAGANA ||
       sc == Character.UnicodeScript.KATAKANA || sc == Character.UnicodeScript.HANGUL
+  }
+
+  /** First token index at or after `i` (`s.length` when none is left).
+    * The whitespace class is BMP-only, so one `charAt` per char suffices.
+    * With [[tokenEnd]] this is THE in-eval token walk:
+    * {{{
+    * var i = tokenStart(s, 0)
+    * while (i < s.length) {
+    *   val e = tokenEnd(s, i) // the token is s[i, e)
+    *   i = tokenStart(s, e)
+    * }
+    * }}} */
+  private[graft] def tokenStart(s: String, i: Int): Int = {
+    var j = i
+    while (j < s.length && isWsCp(s.charAt(j))) j += 1
+    j
+  }
+
+  /** End of the token starting at non-whitespace index `i`: one CJK
+    * codepoint, or a maximal run of non-whitespace non-CJK codepoints. */
+  private[graft] def tokenEnd(s: String, i: Int): Int = {
+    val first = s.codePointAt(i)
+    var e = i + Character.charCount(first)
+    if (!isCjkCp(first)) {
+      var more = true
+      while (more && e < s.length) {
+        val cp = s.codePointAt(e)
+        if (isWsCp(cp) || isCjkCp(cp)) more = false
+        else e += Character.charCount(cp)
+      }
+    }
+    e
   }
 
   /** Java-regex capture of one CJK codepoint (Unicode script classes). */
@@ -81,9 +112,6 @@ private[graft] object Tokens {
     s"list_filter(string_split_regex(regexp_replace($textExpr, " +
       """'([\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}])', ' \1 ', 'g'), """ +
       """'\s+'), t -> length(t) > 0)"""
-
-  private val CjkPattern = java.util.regex.Pattern.compile(CjkJava)
-  private val WsPattern = java.util.regex.Pattern.compile(WsRun)
 
   // ------------------------------------------------- GPT-2 pre-tokenizer
 
@@ -169,12 +197,16 @@ private[graft] object Tokens {
       s" $snt), seg -> regexp_extract_all(seg, '$core'))))[1]"
   }
 
-  /** Plain-Scala form of [[seg]], for expressions that tokenize inside
-    * their own eval (the BPE subword counter): the SAME regex rule —
-    * space out CJK codepoints, split on whitespace runs, drop empties —
-    * so a doc segmented in the DataFrame layer and inside an expression
-    * sees one token stream. Patterns precompiled: this runs per row. */
-  private[graft] def segString(s: String): Array[String] =
-    WsPattern.split(CjkPattern.matcher(s).replaceAll(" $1 "))
-      .filter(_.nonEmpty)
+  /** Plain-Scala form of [[seg]] (the BPE and Unigram word split): the
+    * [[tokenStart]]/[[tokenEnd]] walk, collecting each token. */
+  private[graft] def segString(s: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = tokenStart(s, 0)
+    while (i < s.length) {
+      val e = tokenEnd(s, i)
+      out += s.substring(i, e)
+      i = tokenStart(s, e)
+    }
+    out.result()
+  }
 }

@@ -637,6 +637,9 @@ object MvRewriteRule extends Rule[LogicalPlan] {
 
     def sumOf(a: Attribute): Expression =
       Sum(a).toAggregateExpression()
+    // no later optimizer batch strips a no-op cast, so emit none
+    def asDouble(e: Expression): Expression =
+      if (e.dataType == DoubleType) e else Cast(e, DoubleType)
     def measureOf(e: Expression): Option[String] =
       mv.measureKeys.get(MaterializedViews.exprKey(e))
     // an ungrouped COUNT over an empty (or fully filtered) view must be 0,
@@ -677,8 +680,8 @@ object MvRewriteRule extends Rule[LogicalPlan] {
           // cnt_k > 0 whenever sum_k is non-null (no 0-divisor case)
           measureOf(a.child).flatMap { k =>
             (attr(s"sum_$k"), attr(s"cnt_$k")) match {
-              case (Some(s), Some(c)) => Some(Divide(
-                Cast(sumOf(s), DoubleType), Cast(sumOf(c), DoubleType)))
+              case (Some(s), Some(c)) =>
+                Some(Divide(asDouble(sumOf(s)), asDouble(sumOf(c))))
               case _ => None
             }
           }

@@ -376,9 +376,32 @@ class FunctionsSpec extends AnyFunSuite {
         Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))),
       "nearest_centroids_f32" -> nearest_centroids_f32(col("vf"), Seq(7L, 8L),
         Seq(Seq(1f, 0f), Seq(0f, 1f))))
-    exprs.foreach { case (name, f) =>
-      val q = df.select(f.as("o")).filter(col("o").isNotNull)
-      assert(q.collect().length == 2, name)
+    val cascade = org.apache.spark.sql.GraftSqlBridge.column(
+      graft.functions.CascadeVotes(
+        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
+        Array(1L), 1L, Array(1L), Array(1L), 1L, Array(0L), 18, 65))
+    // both take a non-nullable input, so isnotnull would fold away: filter
+    // on a value of the result instead
+    val nonNullable = Seq(
+      "seg_count" -> (seg_count(col("text")), col("o") > 0),
+      "cascade_votes" -> (cascade, col("o.clf_keep")))
+    (exprs.map { case (name, f) => name -> (f, col("o").isNotNull) } ++ nonNullable)
+      .foreach { case (name, (f, keep)) =>
+        val q = df.select(f.as("o")).filter(keep)
+        assert(q.collect().length == 2, name)
+      }
+  }
+
+  test("a wrongly typed call fails analysis naming the offending type") {
+    val ints = spark.range(1).select(col("id").cast("int").as("i"),
+      array(lit(1.0), lit(2.0)).as("v"))
+    val bad = Seq(
+      "int" -> (() => ints.select(span_shingles(col("i"), 2))),
+      "array<double>" -> (() => ints.select(nearest_centroids(col("v"), lit(1.0),
+        Seq(7L), Seq(Seq(1.0, 0.0))))))
+    bad.foreach { case (typ, q) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](q())
+      assert(e.getMessage.contains(s"got $typ"), e.getMessage)
     }
   }
 }

@@ -58,6 +58,116 @@ class WhitespaceContractSpec extends AnyFunSuite {
     }
   }
 
+  /** Inputs where the in-eval walk and the regex rule could part ways. */
+  private val Edge: Seq[String] =
+    Exotic.map(c => s"a${c}b c") ++ Seq(
+      "", " \t\n\f\r ", "a", "  lead and trail \t\r\n",
+      "\u4e2d\u6587 mixed \u5b57 text", "abc\u5b57def", "\u3042\u30ab\ud55c",
+      "x \ud842\udfb7 y", "\ud842\udfb7\ud842\udfb7z\ud840\udc00",
+      "lone\ud800high and \udc00low", "a\u000bb\u00a0c\u2028d \u3000e",
+      "rep rep rep rep \u5b57 \u5b57 \u5b57", "punct.,;:!?only")
+
+  private def edgeDf = {
+    import spark.implicits._
+    Edge.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  test("the token walk matches the regex Column form Tokens.seg") {
+    val rows = edgeDf.select(col("text"), Tokens.seg(col("text")),
+        GraftFunctions.seg_count(col("text")),
+        GraftFunctions.word_shingles(col("text"), 1)).collect()
+    assert(rows.length == Edge.length)
+    rows.foreach { r =>
+      // the text as Spark holds it: UTF-8 encoding turns a lone
+      // surrogate into '?', so compare against the stored string
+      val text = r.getString(0)
+      val segCol = r.getSeq[String](1)
+      assert(Tokens.segString(text).toSeq == segCol, s"segString on '$text'")
+      assert(r.getLong(2) == segCol.size, s"seg_count on '$text'")
+      val uni = if (r.isNullAt(3)) 0 else r.getSeq[Long](3).size
+      assert(uni == segCol.size, s"word_shingles(text, 1) on '$text'")
+    }
+  }
+
+  test("segString keeps lone surrogates where the Java regex rule does") {
+    // in-eval callers only ever see decoded UTF-8, but a direct caller
+    // can hand the walk an unpaired surrogate
+    val cjk = "([\\p{IsHan}\\p{IsHiragana}\\p{IsKatakana}\\p{IsHangul}])"
+    Edge.foreach { s =>
+      val regex = s.replaceAll(cjk, " $1 ").split(Tokens.WsRun).filter(_.nonEmpty)
+      assert(Tokens.segString(s).toSeq == regex.toSeq, s"on '$s'")
+    }
+  }
+
+  test("span_shingles over text equals span_shingles over seg(text)") {
+    (1 to 3).foreach { k =>
+      val rows = edgeDf.select(
+        GraftFunctions.span_shingles(col("text"), k),
+        GraftFunctions.span_shingles(Tokens.seg(col("text")), k)).collect()
+      rows.zip(Edge).foreach { case (r, s) =>
+        assert(r.get(0) == r.get(1), s"k=$k on '$s'")
+      }
+    }
+  }
+
+  test("cascade_votes segments and hashes like the standalone kernels") {
+    val (topPct, dupPct) = (18, 65)
+    val shingles = edgeDf.select(col("doc_id"), Tokens.seg(col("text")),
+        GraftFunctions.word_shingles(col("text"), 3)).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[String](1).size,
+        if (r.isNullAt(2)) Seq.empty[Long] else r.getSeq[Long](2)))
+      .toMap
+    // the benchmark set is every trigram the shingle kernel emits, so
+    // cov counts exactly the doc's windows iff both hash alike
+    val bench = shingles.values.flatMap(_._2).toArray.distinct.sorted
+    val votes = org.apache.spark.sql.GraftSqlBridge.column(
+      graft.functions.CascadeVotes(
+        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
+        Array(1L), 1L, Array(1L), Array(1L), 1L, bench, topPct, dupPct))
+    val standalone = graft.ops.TextAnalysis.repetitionMetricsUnordered(edgeDf,
+        topBigramPctMax = topPct, dupTokenPctMax = dupPct)
+      .select("doc_id", "is_repetitive").collect()
+      .map(r => r.getLong(0) -> !r.getBoolean(1)).toMap
+    val rows = edgeDf.select(col("doc_id"), col("text"), votes.as("v"))
+      .select("doc_id", "text", "v.clf_keep", "v.fluency_ppm",
+        "v.repetition_keep", "v.cov").collect()
+    assert(rows.length == Edge.length)
+    rows.foreach { r =>
+      val (id, text) = (r.getLong(0), r.getString(1))
+      val (m, tri) = shingles(id)
+      assert(r.isNullAt(2) == (m == 0), s"clf abstention on '$text'")
+      assert(r.isNullAt(3) == (m < 2), s"fluency abstention on '$text'")
+      assert(r.getBoolean(4) == standalone(id), s"repetition vote on '$text'")
+      if (m < 3) assert(r.isNullAt(5), s"cov abstention on '$text'")
+      else assert(r.getLong(5) == tri.size && tri.size == m - 2, s"cov on '$text'")
+    }
+    assert(!standalone.values.forall(identity), "no input is repetitive — vacuous")
+  }
+
+  test("isCjkCp equals the four-script definition on every codepoint") {
+    import Character.UnicodeScript._
+    val scripts = Set(HAN, HIRAGANA, KATAKANA, HANGUL)
+    val bad = (0 to Character.MAX_CODE_POINT).filter(cp =>
+      Tokens.isCjkCp(cp) != scripts.contains(Character.UnicodeScript.of(cp)))
+    assert(bad.isEmpty, bad.take(8).map(cp => f"U+$cp%04X"))
+  }
+
+  test("src/main segments text only through Tokens") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (cwd ${Paths.get("").toAbsolutePath})")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50)
+    val hits = files.filterNot(_.endsWith(Paths.get("ops", "Tokens.scala")))
+      .flatMap(f => Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("Character.UnicodeScript") =>
+          s"${root.relativize(f)}:${i + 1}: ${l.trim}"
+      })
+    assert(hits.isEmpty, s"script tests belong in Tokens.isCjkCp: $hits")
+  }
+
   test("gpt2 split classifies exotic whitespace as 'other' characters") {
     Exotic.foreach { c =>
       // exact token sequence: the exotic char is its own 'other'-run
