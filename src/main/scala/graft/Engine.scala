@@ -97,18 +97,4 @@ object Engine {
     Tables.registerAll(spark, dir)
     spark.conf.set("graft.catalog.dir", dir)
   }
-
-  /** Point the graft_db catalog at a live JDBC database instead of a
-    * parquet dir — `graft_db.main.<table>` then resolves through
-    * [[graft.sources.JdbcBackend]] with the full pushdown surface
-    * (projection/filter/top-N/aggregate/join) and the executor-side
-    * transactional write path.
-    *
-    * Session-conf based, so it only affects catalogs registered WITHOUT
-    * their own `dir`/`url` option (such as the one [[create]] registers):
-    * a catalog explicitly bound via `spark.sql.catalog.<name>.dir` keeps
-    * its binding — per-catalog options always win over session confs
-    * (see [[graft.sources.GraftCatalog]] resolution order). */
-  def attachJdbc(spark: SparkSession, url: String): Unit =
-    spark.conf.set("graft.catalog.url", url)
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.types._
 
+import graft.sources.FilterSql
+
 /** LogicalPlan → SQL-text generator — the Spark analog of the reference's
   * `logical_plan_to_ast` / `expr_to_sql` (`src/parser.rs:28-548,945-1095`),
   * which rewrites a DataFusion plan into a SQL AST executed wholesale on the
@@ -900,7 +902,7 @@ object SqlGen {
 
   private def likeSafe(subject: Expression,
       v: org.apache.spark.unsafe.types.UTF8String): Boolean =
-    subject.dataType == StringType && graft.sources.FilterSql.likeSafe(v.toString)
+    subject.dataType == StringType && FilterSql.likeSafe(v.toString)
 
   private def likeLiteral(subject: Expression, pattern: String): Res[String] =
     expr(subject).map(s => s"($s LIKE ${sqlString(pattern)})")

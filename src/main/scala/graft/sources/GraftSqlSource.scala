@@ -11,8 +11,8 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate._
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -93,8 +93,7 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
     with SupportsPushDownJoin {
 
   private var required: StructType = full
-  private var pushedV2: Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    Array.empty
+  private var pushedV2: Array[Predicate] = Array.empty
   private var pushedV2Sql: Seq[String] = Nil
   private var limit: Option[Int] = None
   private var offset: Option[Int] = None
@@ -179,7 +178,7 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
       joinType: org.apache.spark.sql.connector.join.JoinType,
       leftCols: Array[SupportsPushDownJoin.ColumnWithAlias],
       rightCols: Array[SupportsPushDownJoin.ColumnWithAlias],
-      condition: org.apache.spark.sql.connector.expressions.filter.Predicate): Boolean = {
+      condition: Predicate): Boolean = {
     import org.apache.spark.sql.connector.join.JoinType
     val o = other.asInstanceOf[GraftScanBuilder]
     val kw = joinType match {
@@ -391,16 +390,13 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
     * predicates — arithmetic, CAST, a whitelisted function set; the
     * reference's classifier stopped at columns/literals/binary-ops
     * (`table_provider.rs:241-306`). */
-  override def pushPredicates(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = {
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
     val rendered = predicates.map(p => p -> V2PredicateSql.render(p, backend.dialect))
     pushedV2 = rendered.collect { case (p, Some(_)) => p }
     pushedV2Sql = rendered.collect { case (_, Some(sql)) => sql }.toSeq
     rendered.collect { case (p, None) => p } // residuals
   }
-  override def pushedPredicates()
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = pushedV2
+  override def pushedPredicates(): Array[Predicate] = pushedV2
 
   /** Every static predicate this builder has accepted, rendered. */
   private def staticPredSql: Seq[String] = pushedV2Sql
@@ -458,9 +454,10 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
       orderBy, offset, joinedFrom, joinSplit, pushedV2Sql, pushedV2.toSeq)
 }
 
-/** V2 expression → backend SQL — used for join-pushdown conditions AND the
-  * `SupportsPushDownV2Filters` static-predicate path, which reaches past
-  * the V1 surface to expression filters (arithmetic, casts, a conservative
+/** V2 expression → backend SQL — the one scan-filter form: join-pushdown
+  * conditions, the `SupportsPushDownV2Filters` static predicates and the
+  * `SupportsRuntimeV2Filtering` dynamic-pruning predicates all render
+  * here, including expression filters (arithmetic, casts, a conservative
   * function set). The reference's classifier stopped at columns/literals/
   * binary-ops/cast (`table_provider.rs:241-306`). Conservative by
   * construction: any unrecognized name declines (residual in Spark), and
@@ -517,13 +514,17 @@ object V2PredicateSql {
         for {
           l <- render(g.children()(0), d); r <- render(g.children()(1), d)
         } yield s"($l IS NOT DISTINCT FROM $r)"
-      case "IN" if g.children().length >= 2 =>
+      // `IN ()` is not SQL; Catalyst's In over an empty list is false
+      // (runtime pruning can legitimately produce an empty key set)
+      case "IN" if g.children().length == 1 =>
+        render(g.children()(0), d).map(_ => d.falseLit)
+      case "IN" =>
         val rendered = g.children().toSeq.map(render(_, d))
         if (rendered.exists(_.isEmpty)) None
         else Some(s"(${rendered.head.get} IN (${rendered.tail.flatten.mkString(", ")}))")
       // string-prefix predicates render as LIKE only when the literal is
-      // free of LIKE metacharacters (escape syntax is dialect-divergent —
-      // same guard as the V1 path)
+      // free of LIKE metacharacters (escape syntax is dialect-divergent;
+      // the pattern stays a Spark residual instead of guessing it)
       case "STARTS_WITH" => like(g, d, v => v + "%")
       case "ENDS_WITH" => like(g, d, v => "%" + v)
       case "CONTAINS" => like(g, d, v => "%" + v + "%")
@@ -584,9 +585,9 @@ class GraftScan(val table: String, val backend: SqlBackend,
     val joinedFrom: Option[String] = None,
     val joinSplit: Option[JoinSplit] = None,
     val preRendered: Seq[String] = Nil,
-    pushed: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate] = Nil)
+    pushed: Seq[Predicate] = Nil)
     extends Scan with Batch
-    with SupportsReportStatistics with SupportsRuntimeFiltering {
+    with SupportsReportStatistics with SupportsRuntimeV2Filtering {
 
   override def readSchema(): StructType = required
 
@@ -596,8 +597,7 @@ class GraftScan(val table: String, val backend: SqlBackend,
     * semantics and does not count. [[graft.plans.MvRewriteRule]] re-applies
     * these predicates when it serves the query from a view instead of
     * this scan; any other absorbed state would be silently dropped. */
-  def staticPredicates
-      : Option[Seq[org.apache.spark.sql.connector.expressions.filter.Predicate]] =
+  def staticPredicates: Option[Seq[Predicate]] =
     if (runtimeFilters.isEmpty && aggregation.isEmpty && limit.isEmpty &&
         offset.isEmpty && orderBy.isEmpty && joinedFrom.isEmpty) Some(pushed)
     else None
@@ -634,24 +634,21 @@ class GraftScan(val table: String, val backend: SqlBackend,
     }
   }
 
-  // ---- runtime filtering (SupportsRuntimeFiltering) ----
+  // ---- runtime filtering (SupportsRuntimeV2Filtering) ----
   // Dynamic-pruning filters (the IN-set of join keys observed on the other
-  // side of a join at run time) re-render into the backend SQL, so the
-  // remote scan reads only the keys the join can match — the federated
-  // analog of dynamic partition pruning. Dropping a filter is always safe
-  // here: the values come from the join's build side and the join itself
-  // re-checks equality, so pushing is purely an optimization.
-  private var runtimeFilters: Array[Filter] = Array.empty
+  // side of a join at run time) arrive as V2 predicates and render through
+  // [[V2PredicateSql]], like the static ones, so the remote scan reads only
+  // the keys the join can match — the federated analog of dynamic
+  // partition pruning. Dropping a filter is always safe here: the values
+  // come from the join's build side and the join itself re-checks
+  // equality, so pushing is purely an optimization. Kept as (order-
+  // insensitive key, rendered SQL) pairs in arrival order.
+  private var runtimeFilters = Vector.empty[(String, String)]
 
   /** Upper bound on a runtime IN-list rendered into backend SQL — beyond
     * this the predicate text itself becomes the bottleneck (parse cost on
     * the backend, statement size limits) and scanning wins. */
   private val MaxRuntimeInValues = 1000
-
-  private def runtimeRenderable(f: Filter): Boolean = f match {
-    case sources.In(_, vs) if vs.length > MaxRuntimeInValues => false
-    case other => FilterSql.render(other, backend.dialect).isDefined
-  }
 
   override def filterAttributes(): Array[NamedReference] =
     // only the scan's OUTPUT columns: Spark resolves these refs against the
@@ -669,15 +666,16 @@ class GraftScan(val table: String, val backend: SqlBackend,
     else required.fieldNames
       .map(n => org.apache.spark.sql.connector.expressions.Expressions.column(n))
 
-  /** Order-insensitive identity of a runtime filter (an IN list's value
-    * order is not semantic, and can differ across deliveries). */
-  private def runtimeKey(f: Filter): String = f match {
-    case sources.In(a, vs) =>
-      a + " IN " + vs.map(String.valueOf).sorted.mkString("[", ",", "]")
-    case other => other.toString
+  /** Order-insensitive identity of a runtime filter: an IN list's value
+    * order is not semantic, and can differ across deliveries. */
+  private def runtimeKey(p: Predicate, sql: String): String = p.name() match {
+    case "IN" =>
+      val cs = p.children()
+      s"${cs.head} IN " + cs.tail.map(String.valueOf).sorted.mkString("[", ",", "]")
+    case _ => sql
   }
 
-  override def filter(runtime: Array[Filter]): Unit = {
+  override def filter(runtime: Array[Predicate]): Unit = {
     // IDEMPOTENT by filter identity: AQE re-evaluates runtime filters once
     // per BatchScanExec copy, delivering the same predicate repeatedly.
     // Re-planning on every delivery would mint fresh partition fetch ids
@@ -692,10 +690,12 @@ class GraftScan(val table: String, val backend: SqlBackend,
     // one is silently wrong).
     if (aggregation.isDefined || orderBy.nonEmpty || limit.isDefined ||
         offset.isDefined) return
-    val ok = runtime.filter(runtimeRenderable)
+    val ok = runtime.toSeq
+      .filterNot(p => p.name() == "IN" && p.children().length - 1 > MaxRuntimeInValues)
+      .flatMap(p => V2PredicateSql.render(p, backend.dialect).map(sql => runtimeKey(p, sql) -> sql))
     if (ok.nonEmpty) synchronized {
-      val existing = runtimeFilters.map(runtimeKey).toSet
-      val fresh = ok.filterNot(f => existing.contains(runtimeKey(f)))
+      val existing = runtimeFilters.map(_._1).toSet
+      val fresh = ok.filterNot(f => existing.contains(f._1)).distinctBy(_._1)
       if (fresh.nonEmpty) {
         runtimeFilters ++= fresh
         // the superseded generation's prefetches will never be read — let
@@ -725,8 +725,7 @@ class GraftScan(val table: String, val backend: SqlBackend,
     * val): runtime filters can arrive after the first rendering, and the
     * rendering itself is deterministic string work. */
   private def renderedFilters: Seq[String] =
-    preRendered ++
-      runtimeFilters.flatMap(FilterSql.render(_, backend.dialect)).toSeq
+    preRendered ++ runtimeFilters.map(_._2)
 
   /** Render the scan SQL, optionally AND-ing one extra predicate into the
     * WHERE clause (used by the range split — the predicate references the
@@ -1025,9 +1024,10 @@ class GraftReaderFactory(connection: SqlConnection)
   }
 }
 
-/** sources.Filter → SQL rendering with per-backend dialect — the analog of
-  * the reference's `expr_to_sql` filter rendering (`src/parser.rs:945-1095`)
-  * plus its pushdown classifier: None = not renderable = keep in Spark. */
+/** Literal rendering and the LIKE guard shared by [[V2PredicateSql]],
+  * the fusion generator and the INSERT writer — the literal half of the
+  * reference's `expr_to_sql` (`src/parser.rs:945-1095`): None = not
+  * renderable = keep in Spark. */
 object FilterSql {
   import graft.plans.SqlGen.Dialect
 
@@ -1066,48 +1066,6 @@ object FilterSql {
       case dt: java.time.LocalDate => Some(d.dateLit(dt.toString))
       case _ => None
     }
-
-  def render(f: Filter, d: Dialect): Option[String] = {
-    def lit(v: Any): Option[String] = literal(v, d)
-    def like(attr: String, pattern: String): String =
-      s"${d.quote(attr)} LIKE '${pattern.replace("'", "''")}'"
-
-    f match {
-      case sources.EqualTo(a, v) => lit(v).map(l => s"${d.quote(a)} = $l")
-      case sources.EqualNullSafe(a, v) if d.supportsNullSafeEq =>
-        lit(v).map(l => s"${d.quote(a)} IS NOT DISTINCT FROM $l")
-      case sources.EqualNullSafe(_, _) => None // residual on this backend
-      case sources.GreaterThan(a, v) => lit(v).map(l => s"${d.quote(a)} > $l")
-      case sources.GreaterThanOrEqual(a, v) => lit(v).map(l => s"${d.quote(a)} >= $l")
-      case sources.LessThan(a, v) => lit(v).map(l => s"${d.quote(a)} < $l")
-      case sources.LessThanOrEqual(a, v) => lit(v).map(l => s"${d.quote(a)} <= $l")
-      case sources.In(_, vs) if vs.isEmpty =>
-        // `IN ()` is not SQL; Catalyst's In over an empty list is false
-        // (runtime pruning can legitimately produce an empty key set)
-        Some(d.falseLit)
-      case sources.In(a, vs) =>
-        val ls = vs.toSeq.map(lit)
-        if (ls.forall(_.isDefined))
-          Some(s"${d.quote(a)} IN (${ls.flatten.mkString(", ")})")
-        else None
-      case sources.IsNull(a) => Some(s"${d.quote(a)} IS NULL")
-      case sources.IsNotNull(a) => Some(s"${d.quote(a)} IS NOT NULL")
-      case sources.And(l, r) =>
-        for { ls <- render(l, d); rs <- render(r, d) } yield s"($ls AND $rs)"
-      case sources.Or(l, r) =>
-        for { ls <- render(l, d); rs <- render(r, d) } yield s"($ls OR $rs)"
-      case sources.Not(c) => render(c, d).map(s => s"(NOT $s)")
-      // LIKE escape syntax is dialect-divergent; patterns whose literal
-      // part contains metacharacters stay in Spark (residual) instead of
-      // guessing the backend's escape rules
-      case sources.StringStartsWith(a, v) if likeSafe(v) => Some(like(a, v + "%"))
-      case sources.StringEndsWith(a, v) if likeSafe(v) => Some(like(a, "%" + v))
-      case sources.StringContains(a, v) if likeSafe(v) => Some(like(a, "%" + v + "%"))
-      case sources.AlwaysTrue() => Some(d.trueLit)
-      case sources.AlwaysFalse() => Some(d.falseLit)
-      case _ => None // e.g. nested-column predicates: residual in Spark
-    }
-  }
 
   private[graft] def likeSafe(s: String): Boolean =
     !s.exists(c => c == '%' || c == '_' || c == '\\' || c == '\'')

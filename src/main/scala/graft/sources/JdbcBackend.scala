@@ -354,11 +354,6 @@ object JdbcBackend {
     }
     Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
   }
-
-  /** One ResultSet row → Row, schema-driven (kept for one-off rows; bulk
-    * paths compile [[decoders]] once and loop [[decodeRow]]). */
-  private[sources] def convertRow(rs: ResultSet, schema: StructType): Row =
-    decodeRow(rs, decoders(schema))
 }
 
 class JdbcBackend private (val url: String) extends SqlBackend {

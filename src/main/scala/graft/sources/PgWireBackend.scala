@@ -26,11 +26,12 @@ import graft.plans.SqlGen.Dialect
   * [[PostgresDialect]]) — works over this backend and is protocol-tested
   * against the loopback server in `PgWindowFusionSpec`.
   *
-  * Scale shape: `fetch` opens its socket ON THE TASK and streams
-  * text-format rows through schema-compiled decoders, so result size is
-  * bounded by executor memory (the same executor-side model as
-  * `JdbcTaskConnection`); the driver only ever runs scalar planning
-  * probes.
+  * Scale shape: `fetch` opens its socket ON THE TASK and streams binary
+  * COPY through [[PgCopyDecoder]], so result size is bounded by executor
+  * memory (the same executor-side model as `JdbcTaskConnection`); the
+  * driver only ever runs scalar planning probes, read the same way.
+  * Every typed value this backend returns is decoded by
+  * [[PgCopyDecoder]]; only the catalog reads take simple-query text.
   *
   * Catalog: the table list, each table's columns and its row-count
   * estimate are read once and kept for the backend's lifetime, as the
@@ -126,70 +127,6 @@ object PgWireBackend {
         s"pgwire: unmapped result type oid $other")
     }
   }
-
-  /** Schema-compiled TEXT-format decoders — one closure per column, the
-    * wire-text analog of `JdbcBackend.decoders` (and of the reference's
-    * per-type readers, `binary_reader.rs:351-487`). Postgres text forms
-    * are locale-free and documented: bool as t/f, timestamps as
-    * `yyyy-MM-dd HH:mm:ss[.ffffff][+offset]`, bytea as `\x` hex. */
-  private[graft] def textDecoders(schema: StructType): Array[String => Any] =
-    schema.fields.map { f =>
-      f.dataType match {
-        case BooleanType => (s: String) => s == "t" || s == "true"
-        case ShortType => (s: String) => s.toShort
-        case IntegerType => (s: String) => s.toInt
-        case LongType => (s: String) => s.toLong
-        case FloatType => (s: String) => s.toFloat
-        case DoubleType => (s: String) => s.toDouble
-        case d: DecimalType => (s: String) =>
-          new java.math.BigDecimal(s).setScale(d.scale, java.math.RoundingMode.HALF_UP)
-        case StringType => (s: String) => s
-        case DateType => (s: String) => java.sql.Date.valueOf(java.time.LocalDate.parse(s))
-        case TimestampNTZType => (s: String) => parseLocal(s)
-        case TimestampType => (s: String) => {
-          // timestamptz text carries the session-zone offset suffix
-          // (+HH[:MM]); normalize through Instant
-          val (local, offset) = splitOffset(s)
-          java.sql.Timestamp.from(
-            parseLocal(local).toInstant(java.time.ZoneOffset.of(offset)))
-        }
-        case BinaryType => (s: String) => {
-          require(s.startsWith("\\x"), s"pgwire bytea must be hex form: $s")
-          val hex = s.drop(2)
-          Array.tabulate(hex.length / 2)(i =>
-            Integer.parseInt(hex.substring(i * 2, i * 2 + 2), 16).toByte)
-        }
-        case other => throw new IllegalArgumentException(
-          s"pgwire: column '${f.name}' type $other has no text decoder")
-      }
-    }
-
-  private def parseLocal(s: String): java.time.LocalDateTime =
-    java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-
-  private def splitOffset(s: String): (String, String) = {
-    val i = math.max(s.lastIndexOf('+'), s.lastIndexOf('-'))
-    // the date's own dashes sit before position 8; a real offset is after
-    // the time part
-    if (i > 8) {
-      val off = s.substring(i)
-      val norm = if (off.length == 3) off + ":00" else off
-      (s.substring(0, i), norm)
-    } else (s, "+00:00")
-  }
-
-  private[graft] def decodeRow(values: Array[Option[String]],
-      ds: Array[String => Any]): Row = {
-    require(values.length == ds.length,
-      s"pgwire row width ${values.length} != schema width ${ds.length}")
-    val out = new Array[Any](ds.length)
-    var i = 0
-    while (i < ds.length) {
-      out(i) = values(i) match { case Some(v) => ds(i)(v); case None => null }
-      i += 1
-    }
-    Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-  }
 }
 
 class PgWireBackend private (val address: String) extends SqlBackend {
@@ -200,9 +137,13 @@ class PgWireBackend private (val address: String) extends SqlBackend {
   override def name: String = s"pgwire://$address"
   override def dialect: Dialect = PostgresDialect
 
+  private def withSession[A](f: PgWire.Session => A): A =
+    PgWire.withSession(host, port, database, user, PgWire.configuredPassword)(f)
+
+  /** Catalog reads (information_schema, pg_class): raw text cells over one
+    * simple query; typed values go through [[executeSql]]. */
   private def q(sql: String): (Seq[PgWire.Field], Vector[Array[Option[String]]]) =
-    PgWire.withSession(host, port, database, user,
-      PgWire.configuredPassword)(_.query(sql))
+    withSession(_.query(sql))
 
   /** Discovery-time table list; null until read, and again after
     * [[refresh]]. */
@@ -268,17 +209,16 @@ class PgWireBackend private (val address: String) extends SqlBackend {
     rowCountCache.clear()
   }
 
-  override def executeSql(sql: String): Seq[Row] = {
-    val (fields, rows) = q(sql)
-    val schema = StructType(fields.map(f => StructField(f.name, oidType(f.typeOid))))
-    val ds = textDecoders(schema)
-    rows.map(decodeRow(_, ds))
-  }
+  /** Driver-side probes (slice bounds, counts, view row counts) read the
+    * way a task fetch does, on one session: the schema comes from the
+    * LIMIT-0 probe's type OIDs ([[oidType]]). */
+  override def executeSql(sql: String): Seq[Row] =
+    withSession(PgWireTaskConnection.copyRead(_, sql, None).toVector)
 
   override def connection: SqlConnection = PgWireTaskConnection(address)
 
   override def executeSqlToRdd(sql: String, expected: StructType): RDD[InternalRow] = {
-    val conn = PgWireTaskConnection(address) // driver-side: resolves binaryCopy
+    val conn = connection
     SparkSession.active.sparkContext.parallelize(Seq(sql), 1).mapPartitions { it =>
       val ser = ExpressionEncoder(RowEncoder.encoderFor(expected)).createSerializer()
       it.flatMap(s => conn.fetch(0L, s, expected).map(r => ser(r).copy()))
@@ -286,23 +226,14 @@ class PgWireBackend private (val address: String) extends SqlBackend {
   }
 }
 
-/** Task-side wire connection: `fetch` opens a socket ON THE TASK and —
-  * by default — reads via `COPY (sql) TO STDOUT (FORMAT binary)` decoded
-  * straight through [[PgCopyDecoder]]: the reference's core read
-  * architecture (`binary_reader.rs:24-209` + `mod.rs:133-168`), with no
-  * per-value text parse and exact float/numeric round-trips. The
-  * simple-query TEXT path remains as the fallback
-  * (`-Dgraft.pgwire.binaryCopy=false`) for servers or types without a
-  * binary arm — the flag is resolved DRIVER-side at plan time and rides
-  * the serialized connection, so a driver-only `-D` reaches every
-  * executor (unlike `graft.pgwire.password`, which is per-JVM secret
-  * material and documented to ship via executor extraJavaOptions).
-  * Either way the session closes with the stream's end or the task,
-  * whichever comes first, so partial reads under a Spark-side limit
-  * don't leak sockets. */
-case class PgWireTaskConnection(address: String,
-    binaryCopy: Boolean = PgWireTaskConnection.binaryCopyDefault)
-    extends SqlConnection {
+/** Task-side wire connection: `fetch` opens a socket ON THE TASK and reads
+  * via `COPY (sql) TO STDOUT (FORMAT binary)` decoded straight through
+  * [[PgCopyDecoder]]: the reference's core read architecture
+  * (`binary_reader.rs:24-209` + `mod.rs:133-168`), with no per-value text
+  * parse and exact float/numeric round-trips. The session closes with the
+  * stream's end or the task, whichever comes first, so partial reads under
+  * a Spark-side limit don't leak sockets. */
+case class PgWireTaskConnection(address: String) extends SqlConnection {
   override def fetch(id: Long, sql: String, schema: StructType): Iterator[Row] = {
     val (host, port, db, user) = PgWireBackend.parse(address)
     val session = new PgWire.Session(host, port, db, user,
@@ -317,25 +248,7 @@ case class PgWireTaskConnection(address: String,
         if (!exhausted.get()) session.cancel()
         session.close()
       })
-    if (binaryCopy) binaryFetch(session, sql, schema, exhausted)
-    else textFetch(session, sql, schema, exhausted)
-  }
-
-  /** Binary COPY read. A LIMIT-0 RowDescription probe on the same
-    * session runs first: it checks the result's width and each column's
-    * type OID against the plan's schema ([[PgWireTaskConnection.checkWireTypes]]),
-    * and names the uuid columns, which are StringType Spark-side but ship
-    * as 16 raw bytes (like the JDBC path's Describe probe). */
-  private def binaryFetch(session: PgWire.Session, sql: String,
-      schema: StructType,
-      exhausted: java.util.concurrent.atomic.AtomicBoolean): Iterator[Row] = {
-    val fs = session.fields(s"""SELECT * FROM ($sql) "__graft_probe" LIMIT 0""")
-    PgWireTaskConnection.checkWireTypes(fs, schema, sql)
-    val uuidCols = fs.iterator.zip(schema.fields.iterator).collect {
-      case (f, sf) if f.typeOid == PgWire.Oid.Uuid => sf.name
-    }.toSet
-    val in = session.copyOut(s"COPY ($sql) TO STDOUT (FORMAT binary)")
-    val rows = PgCopyDecoder.rows(in, schema, uuidCols)
+    val rows = PgWireTaskConnection.copyRead(session, sql, Some(schema))
     new Iterator[Row] {
       override def hasNext: Boolean = {
         val h = rows.hasNext
@@ -345,32 +258,30 @@ case class PgWireTaskConnection(address: String,
       override def next(): Row = rows.next()
     }
   }
-
-  private def textFetch(session: PgWire.Session, sql: String,
-      schema: StructType,
-      exhausted: java.util.concurrent.atomic.AtomicBoolean): Iterator[Row] = {
-    val ds = PgWireBackend.textDecoders(schema)
-    val it = session.queryStream(sql) { fields =>
-      require(fields.size == schema.size,
-        s"pgwire result width ${fields.size} != expected ${schema.size} for: $sql")
-    }
-    new Iterator[Row] {
-      override def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h && exhausted.compareAndSet(false, true)) session.close()
-        h
-      }
-      override def next(): Row = PgWireBackend.decodeRow(it.next(), ds)
-    }
-  }
 }
 
 object PgWireTaskConnection {
-  /** Read-path selector, resolved where the connection is CONSTRUCTED
-    * (the driver, for planned scans) and then serialized into the task:
-    * binary COPY by default. */
-  private[graft] def binaryCopyDefault: Boolean =
-    sys.props.getOrElse("graft.pgwire.binaryCopy", "true").toBoolean
+  /** Binary COPY read of `sql` on an open session. A LIMIT-0
+    * RowDescription probe on the same session runs first: it gives the
+    * result schema when the caller imposes none ([[PgWireBackend.oidType]]),
+    * checks the result's width and each column's type OID against an
+    * imposed one ([[checkWireTypes]]), and names the uuid columns, which
+    * are StringType Spark-side but ship as 16 raw bytes (like the JDBC
+    * path's Describe probe). */
+  private[sources] def copyRead(session: PgWire.Session, sql: String,
+      expected: Option[StructType]): Iterator[Row] = {
+    val fs = session.fields(s"""SELECT * FROM ($sql) "__graft_probe" LIMIT 0""")
+    val schema = expected match {
+      case Some(s) => checkWireTypes(fs, s, sql); s
+      case None => StructType(fs.map(f =>
+        StructField(f.name, PgWireBackend.oidType(f.typeOid))))
+    }
+    val uuidCols = fs.iterator.zip(schema.fields.iterator).collect {
+      case (f, sf) if f.typeOid == PgWire.Oid.Uuid => sf.name
+    }.toSet
+    PgCopyDecoder.rows(session.copyOut(s"COPY ($sql) TO STDOUT (FORMAT binary)"),
+      schema, uuidCols)
+  }
 
   /** The RowDescription type OIDs that the [[PgCopyDecoder]] reader of a
     * Spark type decodes; None for types with no entry (arrays, records,

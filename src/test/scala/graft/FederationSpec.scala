@@ -586,6 +586,33 @@ class FederationSpec extends AnyFunSuite {
         backend.sqlLog.asScala.mkString("\n"))
   }
 
+  test("dynamic pruning over an empty build side sends the false literal to the backend") {
+    import scala.jdk.CollectionConverters._
+    val backend = graft.sources.SparkViewBackend.forDir(TestSpark.Sf0001)
+    val confs = Seq(
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
+      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10000",
+      // adaptive execution would see the empty broadcast and drop the join
+      // (and with it the pruned scan) before any runtime filter is handed over
+      "spark.sql.adaptive.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      backend.sqlLog.clear()
+      val fact = remote("lineitem").select("l_orderkey", "l_quantity")
+      // no order has this priority: the runtime IN arrives with no values
+      val dim = Tables.load(spark, TestSpark.Sf0001, "orders")
+        .filter(col("o_orderpriority") === "9-NONE")
+        .select("o_orderkey")
+      val rows = fact.join(dim, col("l_orderkey") === col("o_orderkey")).collect()
+      assert(rows.isEmpty)
+      val pruned = backend.sqlLog.asScala
+        .filter(s => s.contains("`lineitem`") && s.matches("(?s).* WHERE .*\\bFALSE\\b.*"))
+      assert(pruned.nonEmpty, "the empty runtime IN did not reach the backend as FALSE:\n" +
+        backend.sqlLog.asScala.mkString("\n"))
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("runtime filters are refused on a fully-pushed top-N scan (DPP cannot change the top-N)") {
     import scala.jdk.CollectionConverters._
     val backend = graft.sources.SparkViewBackend.forDir(TestSpark.Sf0001)

@@ -375,7 +375,11 @@ class FunctionsSpec extends AnyFunSuite {
       "nearest_centroids" -> nearest_centroids(col("v"), lit(1.0), Seq(7L, 8L),
         Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))),
       "nearest_centroids_f32" -> nearest_centroids_f32(col("vf"), Seq(7L, 8L),
-        Seq(Seq(1f, 0f), Seq(0f, 1f))))
+        Seq(Seq(1f, 0f), Seq(0f, 1f))),
+      // Dedup.incremental's probe: a scalar-subquery bloom over a column
+      "might_contain" -> might_contain(
+        df.agg(bloom_agg(xxhash64(col("text")), 10L, 1024L)).scalar(),
+        xxhash64(col("text"))))
     val cascade = org.apache.spark.sql.GraftSqlBridge.column(
       graft.functions.CascadeVotes(
         org.apache.spark.sql.GraftSqlBridge.expression(col("text")),

@@ -108,10 +108,15 @@ class JdbcFederationSpec extends AnyFunSuite {
     // temporal literal rendering goes through the dialect (Derby has no
     // ANSI typed literals — constructor-function form instead)
     val d = backend.dialect
-    assert(graft.sources.FilterSql.render(
-      org.apache.spark.sql.sources.GreaterThan("c",
-        java.sql.Date.valueOf("2026-01-02")), d)
-      .contains("\"c\" > DATE('2026-01-02')"))
+    val day = new org.apache.spark.sql.connector.expressions.Literal[Int] {
+      override def value: Int = java.time.LocalDate.parse("2026-01-02").toEpochDay.toInt
+      override def dataType: org.apache.spark.sql.types.DataType =
+        org.apache.spark.sql.types.DateType
+    }
+    assert(graft.sources.V2PredicateSql.render(
+      new org.apache.spark.sql.connector.expressions.filter.Predicate(">",
+        Array(org.apache.spark.sql.connector.expressions.Expressions.column("c"), day)), d)
+      .contains("(\"c\" > DATE('2026-01-02'))"))
   }
 
   test("V2 expression predicates reach Derby (ABS, arithmetic)") {

@@ -104,16 +104,18 @@ class PgAuthCancelSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     SparkSession.setActiveSession(spark)
     val srv = new MiniPgServer
-    srv.queryExecutor = _ => Some(MiniPgServer.QueryResult(
-      Seq(("n", PgWire.Oid.Int4)), (1 to 200).map(i => Seq(Some(i.toString)))))
     val schema = StructType(Seq(StructField("n", IntegerType)))
+    // the read's LIMIT-0 probe, then its binary COPY of 200 rows
+    srv.queryExecutor = _ => Some(MiniPgServer.QueryResult(Seq(("n", PgWire.Oid.Int4)), Nil))
+    srv.copyOutExecutor = _ => Some(graft.sources.PgCopyEncoder.bytes(
+      (1 to 200).map(i => org.apache.spark.sql.Row(i)), schema))
     try {
-      sys.props("graft.pgwire.binaryCopy") = "false" // text path = queryExecutor
       val backend = PgWireBackend.forAddress(s"127.0.0.1:${srv.port}/testdb")
       // drained: full collect → NO cancel
       val before1 = srv.eventLog.size
       val all = backend.executeSqlToRdd("SELECT all_rows", schema).collect()
       assert(all.length == 200)
+      assert(srv.eventLog.drop(before1).exists(_.startsWith("COPY (SELECT all_rows)")))
       Thread.sleep(100)
       assert(!srv.eventLog.drop(before1).exists(_.startsWith("CANCEL")),
         "a fully-drained stream must not fire a cancel")
@@ -124,9 +126,6 @@ class PgAuthCancelSpec extends AnyFunSuite {
       val cancels = awaitCancelLogged(srv, before2)
       assert(cancels.nonEmpty && cancels.head.contains("MATCH"),
         s"abandoned stream must cancel server-side: ${srv.eventLog.drop(before2)}")
-    } finally {
-      sys.props.remove("graft.pgwire.binaryCopy")
-      srv.stop()
-    }
+    } finally srv.stop()
   }
 }

@@ -509,26 +509,60 @@ class PgWindowFusionSpec extends AnyFunSuite {
     } finally server.noticeEveryNRows = 0
   }
 
-  test("binary COPY read ≡ text read ≡ local Spark across the discoverable type matrix") {
-    // the SAME scan collected over both read paths: byte-framed COPY
-    // (default) and simple-query text (-Dgraft.pgwire.binaryCopy=false),
-    // both equal to the delegate's own local answer — nulls included
-    def collectRemote(): Seq[Seq[Any]] = remote("typed").collect()
+  test("binary COPY read ≡ local Spark across the discoverable type matrix") {
+    // the scan's byte-framed COPY read equals the delegate's own local
+    // answer — nulls included
+    def collect(df: DataFrame): Seq[Seq[Any]] = df.collect()
       .map(r => (0 until 9).map(i => r.get(i)).toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
-    val viaBinary = collectRemote()
+    val viaBinary = collect(remote("typed"))
     assert(server.eventLog.exists(_.startsWith("COPY (")),
-      "default read must issue a COPY statement")
-    val viaText =
-      try { sys.props("graft.pgwire.binaryCopy") = "false"; collectRemote() }
-      finally sys.props.remove("graft.pgwire.binaryCopy")
-    val local = delegate.table("typed").collect()
-      .map(r => (0 until 9).map(i => r.get(i)).toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
-    assert(viaBinary == local, "binary path must equal local execution")
-    assert(viaText == local, "text path must equal local execution")
+      "the read must issue a COPY statement")
+    assert(viaBinary == collect(delegate.table("typed")),
+      "binary path must equal local execution")
     assert(viaBinary.size == 40)
   }
 
-  test("binary COPY decodes arrays and intervals the text path has no arm for") {
+  test("executeSql decodes probe rows through binary COPY as oidType promises") {
+    import graft.sources.PgCopyEncoder
+    import org.apache.spark.sql.Row
+    // what the server sends: int8, a numeric with more fractional digits
+    // than the probe schema's Decimal(38,4), timestamptz, uuid, and a
+    // column that is NULL in every row
+    val wire = StructType(Seq(StructField("n", LongType),
+      StructField("m", DecimalType(20, 5)), StructField("ts", TimestampType),
+      StructField("u", StringType), StructField("z", LongType)))
+    val ts = java.sql.Timestamp.valueOf("2024-02-29 23:59:58.123456")
+    val u = "123e4567-e89b-12d3-a456-426614174000"
+    val sent = Seq(
+      Row(1234567890123L, new java.math.BigDecimal("1.23465"), ts, u, null),
+      Row(-7L, new java.math.BigDecimal("-2.00005"), null, null, null))
+    server.copyOut.put("COPY (SELECT probe_matrix) TO STDOUT (FORMAT binary)",
+      PgCopyEncoder.bytes(sent, wire, uuidCols = Set("u")))
+    val old = server.queryExecutor
+    server.queryExecutor = sql =>
+      if (sql.contains("__graft_probe") && sql.contains("SELECT probe_matrix"))
+        Some(MiniPgServer.QueryResult(Seq(("n", PgWire.Oid.Int8),
+          ("m", PgWire.Oid.Numeric), ("ts", PgWire.Oid.Timestamptz),
+          ("u", PgWire.Oid.Uuid), ("z", PgWire.Oid.Int8)), Nil))
+      else old(sql)
+    val before = server.eventLog.size
+    val got = try PgWireBackend.forAddress(s"127.0.0.1:${server.port}/testdb")
+      .executeSql("SELECT probe_matrix")
+      finally server.queryExecutor = old
+    // numeric lands at scale 4, rounded HALF_UP (HALF_EVEN would give
+    // 1.2346 and -2.0000)
+    assert(got == Seq(
+      Row(1234567890123L, new java.math.BigDecimal("1.2347"), ts, u, null),
+      Row(-7L, new java.math.BigDecimal("-2.0001"), null, null, null)))
+    assert(got.head.get(1).asInstanceOf[java.math.BigDecimal].scale == 4)
+    // one probe, then the COPY; the statement itself never runs as text
+    val sent2 = server.eventLog.drop(before)
+    assert(sent2.count(_.contains("__graft_probe")) == 1, sent2)
+    assert(sent2.contains("COPY (SELECT probe_matrix) TO STDOUT (FORMAT binary)"), sent2)
+    assert(!sent2.contains("SELECT probe_matrix"), sent2)
+  }
+
+  test("binary COPY decodes arrays and intervals") {
     import graft.sources.{PgCopyEncoder, PgWireTaskConnection}
     import org.apache.spark.sql.Row
     val schema = StructType(Seq(
@@ -561,19 +595,6 @@ class PgWindowFusionSpec extends AnyFunSuite {
     assert(got(1).getSeq[Seq[Any]](1).map(_.toSeq) == Seq(Seq(7, null), Seq(9, 10)))
     assert(got(1).get(2) == java.time.Duration.ofDays(2).plusSeconds(90))
     assert(got(2).isNullAt(0) && got(2).isNullAt(1) && got(2).isNullAt(2))
-    // the text path has no decoder for these types — loud decline, not a
-    // silent wrong answer. The flag resolves at CONSTRUCTION (driver
-    // side, r14): an already-built connection keeps its read path, a
-    // re-planned one picks up the changed prop.
-    try {
-      sys.props("graft.pgwire.binaryCopy") = "false"
-      assert(conn.binaryCopy, "existing connection must keep its frozen read path")
-      val e = intercept[IllegalArgumentException] {
-        PgWireTaskConnection(s"127.0.0.1:${server.port}/testdb")
-          .fetch(0L, "SELECT array_fixture", schema).toVector
-      }
-      assert(e.getMessage.contains("no text decoder"), e.getMessage)
-    } finally sys.props.remove("graft.pgwire.binaryCopy")
   }
 
   test("uuid columns are detected by the LIMIT-0 probe and decoded from 16 wire bytes") {

@@ -1,19 +1,18 @@
 package graft
 
 import graft.plans.SqlGen
-import graft.sources.{ConservativeAnsiDialect, DerbyDialect, FilterSql, JdbcBackend, PostgresDialect, V2PredicateSql}
+import graft.sources.{ConservativeAnsiDialect, DerbyDialect, JdbcBackend, PostgresDialect, V2PredicateSql}
 import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expressions, Literal => V2Literal}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Rendering tests for the Postgres dialect — the backend the reference
   * engine targets (`src/sqldb/postgres/mod.rs`). No live server exists in
   * the sandbox, so every JdbcFederationSpec pushdown scenario is covered
-  * here at the SQL-TEXT level: the same FilterSql / V2PredicateSql /
+  * here at the SQL-TEXT level: the same V2PredicateSql /
   * SqlGen surfaces the scan builder drives, pointed at [[PostgresDialect]],
   * asserting the exact SQL a Postgres server would receive. */
 class PostgresDialectSpec extends AnyFunSuite {
@@ -25,6 +24,13 @@ class PostgresDialectSpec extends AnyFunSuite {
     override def value: T = v
     override def dataType: DataType = dt
   }
+  private def pred(name: String,
+      cs: org.apache.spark.sql.connector.expressions.Expression*) =
+    new Predicate(name, cs.toArray)
+  private def str(v: String) =
+    lit(org.apache.spark.unsafe.types.UTF8String.fromString(v), StringType)
+  private def date(v: String) =
+    lit(java.time.LocalDate.parse(v).toEpochDay.toInt, DateType)
 
   test("dialectFor routes postgresql URLs; unknown drivers get the conservative tier") {
     assert(JdbcBackend.forUrl("jdbc:postgresql://host/db").dialect == PostgresDialect)
@@ -42,30 +48,34 @@ class PostgresDialectSpec extends AnyFunSuite {
 
   // ---- scenario: "filters render in the dialect" (JdbcFederationSpec) ----
 
-  test("V1 filters: comparisons, LIKE prefixes, IN, temporal literals") {
-    assert(FilterSql.render(sources.GreaterThan("bal", 30.0), d)
-      .contains("\"bal\" > 30.0"))
-    assert(FilterSql.render(sources.StringStartsWith("name", "acct"), d)
+  test("scan filters: comparisons, LIKE prefixes, IN, temporal literals") {
+    assert(V2PredicateSql.render(pred(">", colRef("bal"), lit(30.0, DoubleType)), d)
+      .contains("(\"bal\" > 30.0)"))
+    assert(V2PredicateSql.render(pred("STARTS_WITH", colRef("name"), str("acct")), d)
       .contains("\"name\" LIKE 'acct%'"))
     // LIKE metachars stay residual (same guard as every dialect)
-    assert(FilterSql.render(sources.StringStartsWith("name", "acct_2"), d).isEmpty)
-    assert(FilterSql.render(sources.In("id", Array(1, 2, 3)), d)
-      .contains("\"id\" IN (1, 2, 3)"))
+    assert(V2PredicateSql.render(pred("STARTS_WITH", colRef("name"), str("acct_2")), d).isEmpty)
+    assert(V2PredicateSql.render(pred("IN", colRef("id"),
+      lit(1, IntegerType), lit(2, IntegerType), lit(3, IntegerType)), d)
+      .contains("(\"id\" IN (1, 2, 3))"))
+    // dynamic pruning over an empty build side: `IN ()` is not SQL
+    assert(V2PredicateSql.render(pred("IN", colRef("id")), d).contains("FALSE"))
     // ANSI typed temporal literals are native Postgres
-    assert(FilterSql.render(sources.GreaterThan("c",
-      java.sql.Date.valueOf("2026-01-02")), d)
-      .contains("\"c\" > DATE '2026-01-02'"))
-    assert(FilterSql.render(sources.EqualTo("t",
-      java.sql.Timestamp.valueOf("2026-01-02 03:04:05")), d).get
+    assert(V2PredicateSql.render(pred(">", colRef("c"), date("2026-01-02")), d)
+      .contains("(\"c\" > DATE '2026-01-02')"))
+    assert(V2PredicateSql.render(pred("=", colRef("t"),
+      lit(org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(
+        java.sql.Timestamp.valueOf("2026-01-02 03:04:05")), TimestampType)), d).get
       .contains("TIMESTAMP '2026-01-02 03:04:05.000000'"))
   }
 
   test("null-safe equality renders (Postgres parses IS NOT DISTINCT FROM)") {
-    assert(FilterSql.render(sources.EqualNullSafe("name", "x"), d)
-      .contains("\"name\" IS NOT DISTINCT FROM 'x'"))
+    val ns = pred("<=>", colRef("name"), str("x"))
+    assert(V2PredicateSql.render(ns, d)
+      .contains("(\"name\" IS NOT DISTINCT FROM 'x')"))
     // ...while Derby and unknown drivers keep it residual
-    assert(FilterSql.render(sources.EqualNullSafe("name", "x"), DerbyDialect).isEmpty)
-    assert(FilterSql.render(sources.EqualNullSafe("name", "x"), ConservativeAnsiDialect).isEmpty)
+    assert(V2PredicateSql.render(ns, DerbyDialect).isEmpty)
+    assert(V2PredicateSql.render(ns, ConservativeAnsiDialect).isEmpty)
   }
 
   // ---- scenario: "V2 expression predicates reach the backend" ----

@@ -17,7 +17,7 @@
 #    POSTGRES_DB=bench, port 5432); runs every step. Needs docker.
 #  - GRAFT_PG_LIVE=host:port/database[?user=name]: an existing server
 #    with trust auth for that user (default user "graft"), for example the
-#    benchmark's fixture; runs steps 2, 3 and 3b only (the later steps
+#    benchmark's fixture; runs steps 2, 3, 3b and 3c only (the later steps
 #    re-provision the container). The user must be able to CREATE TABLE.
 #
 # Scala scripts run with `scala` when it is on PATH, else `spark-shell`.
@@ -141,8 +141,55 @@ sys.exit(0)
 SCALA
 run_scala /tmp/graft_pg_stale.scala
 
+echo "== 3c. driver-side probes decode the server's own bytes =="
+# PgWireBackend.executeSql (slice bounds, counts, view row counts) takes
+# its schema from the probe's type OIDs. The loopback specs encode their
+# bytes with PgCopyEncoder, so only a real server shows that each type
+# decodes to the value oidType promises: one row of every discoverable
+# type, then a NULL of each.
+cat > /tmp/graft_pg_probe_types.scala <<'SCALA'
+try {
+val b = graft.sources.PgWireBackend.forAddress(sys.env("GRAFT_PG_ADDR"))
+val cols = Seq(
+  "bool" -> "true", "int2" -> "7", "int4" -> "123456", "int8" -> "1234567890123",
+  "float4" -> "1.5", "float8" -> "2.25", "numeric" -> "1.23465",
+  "text" -> "'h\u00e9llo \u2713'", "date" -> "'2024-02-29'",
+  "timestamp" -> "'2024-02-29 23:59:58.123456'",
+  "timestamptz" -> "'2024-02-29 23:59:58.123456+00'",
+  "bytea" -> "'\\x00ff10'", "uuid" -> "'123e4567-e89b-12d3-a456-426614174000'")
+val want: Seq[Any] = Seq(true, 7.toShort, 123456, 1234567890123L, 1.5f, 2.25,
+  new java.math.BigDecimal("1.2347"), "h\u00e9llo \u2713", java.sql.Date.valueOf("2024-02-29"),
+  java.time.LocalDateTime.parse("2024-02-29T23:59:58.123456"),
+  java.time.Instant.parse("2024-02-29T23:59:58.123456Z"),
+  Seq[Byte](0, -1, 16), "123e4567-e89b-12d3-a456-426614174000")
+def norm(v: Any): Any = v match {
+  case t: java.sql.Timestamp => t.toInstant
+  case a: Array[Byte] => a.toSeq
+  case d: java.math.BigDecimal => assert(d.scale == 4, s"numeric scale ${d.scale}"); d
+  case o => o
+}
+def select(lit: String => String) = cols.map { case (t, v) => s"CAST(${lit(v)} AS $t) AS c_$t" }
+  .mkString("SELECT ", ", ", "")
+// non-ASCII printed as \\uXXXX: the JVM's stdout charset may not be UTF-8
+def show(v: Any): String = String.valueOf(v).flatMap(c =>
+  if (c < 128) c.toString else f"\\u${c.toInt}%04x")
+val row = b.executeSql(select(identity)).head
+cols.indices.foreach { i =>
+  val got = norm(row.get(i))
+  println(f"  ${cols(i)._1}%-12s ${row.get(i).getClass.getSimpleName}%-14s ${show(got)}")
+  assert(got == want(i), s"${cols(i)._1}: got $got, want ${want(i)}")
+}
+val nulls = b.executeSql(select(_ => "NULL")).head
+assert(nulls.length == cols.length && cols.indices.forall(nulls.isNullAt),
+  s"a NULL of each type must decode as null: $nulls")
+println(s"executeSql decodes ${cols.length} types and their NULLs over live Postgres: OK")
+} catch { case e: Throwable => e.printStackTrace(); sys.exit(1) }
+sys.exit(0)
+SCALA
+run_scala /tmp/graft_pg_probe_types.scala
+
 if [ -n "${GRAFT_PG_LIVE:-}" ]; then
-  echo "runbook complete (existing server: steps 2, 3, 3b)"
+  echo "runbook complete (existing server: steps 2, 3, 3b, 3c)"
   exit 0
 fi
 
