@@ -73,11 +73,6 @@ object Engine {
       // registering the conf up front costs nothing until first use)
       spark.conf.set("spark.sql.catalog.graft_db",
         classOf[graft.sources.GraftCatalog].getName)
-      // DSv2 join pushdown (SupportsPushDownJoin): whole equi-joins over
-      // same-backend scans — and the aggregate/top-N above them — run as
-      // one backend query. Off by default in Spark; the engine's scans
-      // negotiate it safely, so the engine turns it on.
-      spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
     }
     spark
   }

@@ -572,10 +572,13 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     * [[DataSourceV2ScanRelation]] may have absorbed some of them: its
     * [[GraftScan]] hands back the static predicates it pushed, which join
     * the visible ones, so the dims-only check below sees the complete
-    * predicate set either way. The scan declines when it absorbed anything
-    * else (aggregate, limit/offset/top-N, join, runtime filter), and so
-    * does any absorbed predicate that does not convert back
-    * ([[absorbed]]): dropping one would silently widen the result. */
+    * predicate set either way. The aggregate itself is always a visible
+    * node here: the scan never absorbs one (joins and aggregates reach a
+    * backend only by fusion, which runs after this rule). The scan
+    * declines when it absorbed anything besides predicates (limit/offset/
+    * top-N, runtime filter), and so does any absorbed predicate that does
+    * not convert back ([[absorbed]]): dropping one would silently widen
+    * the result. */
   private def destructure(p: LogicalPlan,
       filters: List[Expression]): Option[(List[Expression], Set[String])] =
     p match {

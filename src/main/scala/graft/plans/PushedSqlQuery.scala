@@ -71,8 +71,7 @@ case class PushedSqlExec(output: Seq[Attribute], sql: String,
     * execution probes at most once. */
   lazy val slices: Seq[String] = sliceGen()
   override protected def doExecute(): RDD[InternalRow] =
-    if (slices.size > 1) backend.executeSqlsToRdd(slices, schema)
-    else backend.executeSqlToRdd(sql, schema)
+    backend.executeSqlsToRdd(if (slices.size > 1) slices else Seq(sql), schema)
   override def simpleString(maxFields: Int): String =
     s"PushedSqlExec [${sql.take(120)}…] backend=${backend.name}" +
       (if (sliceGen ne PushedSqlQuery.noSlices) " sliceable" else "")

@@ -68,7 +68,8 @@ object SqlGen {
     def regexpMatch(subject: String, pattern: String): Option[String] = None
     /** Whether [[SqlGen]] may target this dialect for whole-plan fusion
       * (the generator emits ANSI plus a few portable idioms; dialects that
-      * diverge further still get full scan-level pushdown). */
+      * diverge further keep scan-level pushdown only: projection, filters,
+      * limit, top-N and offset). */
     def fullSqlGen: Boolean = true
     /** DDL column type for CREATE TABLE; None = not creatable on this
       * backend — callers must reject, not guess. No default mapping: type
@@ -150,11 +151,11 @@ object SqlGen {
       Some(s"STRING_AGG($d$arg, $delim$o)")
     }
     /** True for remote backends whose DSv2 scan path (partitioned parallel
-      * reads, runtime filtering, statistics) should keep every subtree the
-      * scan surface can already express; whole-plan fusion then triggers
-      * only for shapes the scan path cannot push (semi/anti joins, set
-      * ops, DISTINCT/exotic aggregates). The in-process view backend keeps
-      * false: its "fetch" is a local exchange, so fusion is pure win. */
+      * reads, runtime filtering, statistics) should keep a bare
+      * project/filter/sort/limit chain over one scan; joins, aggregates,
+      * subqueries and set ops above the scans fuse within the fetch
+      * budget. The in-process view backend keeps false: its "fetch" is a
+      * local exchange, so fusion is pure win. */
     def scanPreferred: Boolean = false
   }
   case object Ansi extends Dialect {
@@ -203,14 +204,22 @@ object SqlGen {
     currentResolver.set(resolve)
     gen(plan, resolve).map { inner =>
       // top level: restore user-facing attribute names (disambiguated)
-      val seen = scala.collection.mutable.Map.empty[String, Int]
-      val items = plan.output.map { a =>
-        val n = seen.getOrElse(a.name, 0)
-        seen(a.name) = n + 1
-        val outName = if (n == 0) a.name else s"${a.name}_$n"
-        s"${ref(a)} AS ${quote(outName)}"
+      val items = plan.output.zip(outputNames(plan.output)).map {
+        case (a, n) => s"${ref(a)} AS ${quote(n)}"
       }
       s"SELECT ${items.mkString(", ")} FROM ($inner) gq_out"
+    }
+  }
+
+  /** The column names a generated query exposes for `output`: each
+    * attribute's own name, a repeat suffixed `_<n>`. A leaf that is itself
+    * a generated query is read back under the same names. */
+  def outputNames(output: Seq[Attribute]): Seq[String] = {
+    val seen = scala.collection.mutable.Map.empty[String, Int]
+    output.map { a =>
+      val n = seen.getOrElse(a.name, 0)
+      seen(a.name) = n + 1
+      if (n == 0) a.name else s"${a.name}_$n"
     }
   }
 
@@ -233,10 +242,13 @@ object SqlGen {
   private def gen(plan: LogicalPlan, R: TableResolver): Res[String] = plan match {
     case p if R(p).isDefined =>
       // resolver returns a table name, or a parenthesized SQL fragment
-      // (e.g. a DSv2 scan's own negotiated SQL) used verbatim
+      // (a DSv2 scan's own negotiated SQL, or an already fused query)
+      // used verbatim
       val t = R(p).get
       val from = if (t.startsWith("(")) s"$t ${nextAlias()}" else quote(t)
-      val cols = p.output.map(a => s"${quote(a.name)} AS ${ref(a)}")
+      val cols = p.output.zip(outputNames(p.output)).map {
+        case (a, n) => s"${quote(n)} AS ${ref(a)}"
+      }
       val sel = if (cols.isEmpty) "1 AS gq_dummy" else cols.mkString(", ")
       Right(s"SELECT $sel FROM $from")
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.{GraftScan, SqlBackend}
+import graft.sources.{GraftScan, KeyRanges, SqlBackend}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.PredicateHelper
@@ -20,16 +20,21 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * filters + limit), so column/filter pushdown composes with whole-query
   * fusion instead of being lost (the reference recovers its connector by
   * downcasting the scan's TableSource, `src/parser.rs:96-109,404-419` —
-  * here the scan object itself carries the SQL).
+  * here the scan object itself carries the SQL). A [[PushedSqlQuery]] of
+  * the same backend is a leaf too, read as a derived table: the optimizer
+  * runs this rule over each subquery plan before the outer plan, so a
+  * subquery may arrive already fused.
   *
-  * The rule runs in one placement, `extraOptimizations`
-  * ([[GraftExtensions.install]]), after V2 scan pushdown and dynamic
-  * pruning, so its leaves are `DataSourceV2ScanRelation`s. For
-  * `scanPreferred` (remote) backends the scan has already taken what it
-  * can: every Aggregate, Join or subquery still above it is a piece the
-  * scan declined, and it fuses within the fetch budget. Only a bare
-  * Project/Filter/Sort/Limit chain over one scan, or a Union with such a
-  * branch, keeps the partitioned read ([[scanChain]]).
+  * This rule is the only way a join or an aggregate reaches the backend:
+  * the DSv2 scan takes projection, filters, limit, top-N, offset and
+  * runtime filters, nothing more. The rule runs in one placement,
+  * `extraOptimizations` ([[GraftExtensions.install]]), after V2 scan
+  * pushdown and dynamic pruning, so its leaves are
+  * `DataSourceV2ScanRelation`s. For `scanPreferred` (remote) backends
+  * every Aggregate, Join or subquery above the scans fuses within the
+  * fetch budget. Only a bare Project/Filter/Sort/Limit chain over one
+  * scan, or a Union with such a branch, keeps the partitioned read
+  * ([[scanChain]]).
   */
 object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -42,9 +47,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     *
     * Its job is making a federated FULL join expressible on dialects
     * WITHOUT native FULL JOIN (Derby): the anti branch renders as one
-    * NOT-EXISTS query. The rule runs after V2 scan pushdown, where the
-    * scan has already declined the join, so both branches fuse within the
-    * fetch budget. */
+    * NOT-EXISTS query. Both branches fuse within the fetch budget. */
   private def rewriteFullJoins(plan: LogicalPlan): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter}
@@ -83,12 +86,13 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** A pushable leaf: (backend, FROM-fragment). The scan's own negotiated
-    * SQL becomes the leaf subquery. */
+    * SQL, or an already fused query's SQL, becomes the leaf subquery. */
   private def leafOf(p: LogicalPlan): Option[(graft.sources.SqlBackend, String)] = p match {
     case r: DataSourceV2ScanRelation => r.scan match {
       case g: GraftScan => Some((g.backend, s"(${g.renderedSql})"))
       case _ => None
     }
+    case q: PushedSqlQuery => Some((q.backend, s"(${q.sql})"))
     case _ => None
   }
 
@@ -163,10 +167,6 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
           .reduceOption(And).fold(child)(Filter(_, child))
     }
   }
-
-  private def debug(p: LogicalPlan, msg: => String): Unit =
-    if (sys.props.contains("graft.pushdown.debug"))
-      System.err.println(s"[pushdown] ${p.nodeName} $msg")
 
   /** Root chain is only NON-REDUCING nodes (projections, aliases, global
     * sorts) over a Window (or its group-limit hint): full-cardinality
@@ -273,11 +273,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def convert(p: LogicalPlan): Option[LogicalPlan] = {
-    if (dsv2AlreadyExpresses(p)) {
-      if (!p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode])
-        debug(p, "declined: scan path: project/filter/limit over one relation")
-      return None
-    }
+    if (dsv2AlreadyExpresses(p)) return None
     // include plans nested in subquery EXPRESSIONS (EXISTS / IN / scalar):
     // they are not plan children, but SqlGen renders them into the same
     // SQL string, so their leaves must satisfy the same single-backend rule
@@ -290,48 +286,35 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     // dialects the generator can't target at all keep scan-level pushdown
     // only (unrecognized JDBC drivers)
     if (!backend.dialect.fullSqlGen) return None
-    if (backend.dialect.scanPreferred) {
-      val declined =
-        // remote backends with partitioned scan reads: leave the scan what
-        // it expresses, a bare chain over one scan (see scanChain); fusion
-        // there would downgrade a parallel read to a single-stream fetch
-        if (scanChain(p)) Some("scan path: a bare chain over one scan")
-        // same economics for a BARE window root: its output cardinality is
-        // its full input, so fusing ships every row through one stream AND
-        // serializes the window compute backend-side — strictly worse at
-        // scale than the partitioned scan + Spark's distributed window.
-        // Window fusion stays worthwhile exactly when something REDUCING
-        // (rank filter, limit, aggregate) sits above — and then THAT node
-        // roots the attempted subtree, so this gate never fires for it
-        // (attempt() walks top-down).
-        else if (bareWindowRoot(p)) Some("bare window: full-cardinality output")
-        // statistics gate (see fitsFetchBudget): even a reducing, grammar-
-        // eligible subtree stays on the partitioned scan path when catalog
-        // stats bound its result above the single-stream fetch budget
-        else if (!fitsFetchBudget(p)) Some("fetch budget: estimated result too large")
-        else None
-      if (declined.isDefined) {
-        debug(p, s"declined: ${declined.get}")
-        return None
-      }
-    }
+    // remote backends with partitioned scan reads: leave the scan what
+    // it expresses, a bare chain over one scan (see scanChain); fusion
+    // there would downgrade a parallel read to a single-stream fetch.
+    // Same economics for a BARE window root: its output cardinality is
+    // its full input, so fusing ships every row through one stream AND
+    // serializes the window compute backend-side — strictly worse at
+    // scale than the partitioned scan + Spark's distributed window.
+    // Window fusion stays worthwhile exactly when something REDUCING
+    // (rank filter, limit, aggregate) sits above — and then THAT node
+    // roots the attempted subtree, so this gate never fires for it
+    // (attempt() walks top-down). Last, the statistics gate (see
+    // fitsFetchBudget): even a reducing, grammar-eligible subtree stays
+    // on the partitioned scan path when catalog stats bound its result
+    // above the single-stream fetch budget.
+    if (backend.dialect.scanPreferred &&
+        (scanChain(p) || bareWindowRoot(p) || !fitsFetchBudget(p))) return None
 
     val resolver: SqlGen.TableResolver = pl => leafOf(pl).map(_._2)
     val fused = withoutPruningHints(p)
 
-    SqlGen(fused, resolver, backend.dialect) match {
-      case Right(sql) =>
-        // a fused WINDOW query over a scan-preferred backend may still get
-        // a partitioned parallel read: N disjoint slice queries whose
-        // union is the result (see windowSlices)
-        val sliceGen =
-          if (backend.dialect.scanPreferred) {
-            windowSlices(fused, resolver, backend).getOrElse(PushedSqlQuery.noSlices)
-          } else PushedSqlQuery.noSlices
-        Some(PushedSqlQuery(p.output, sql, backend)(sliceGen))
-      case Left(why) =>
-        debug(p, s"not converted: $why")
-        None
+    SqlGen(fused, resolver, backend.dialect).toOption.map { sql =>
+      // a fused WINDOW query over a scan-preferred backend may still get
+      // a partitioned parallel read: N disjoint slice queries whose
+      // union is the result (see windowSlices)
+      val sliceGen =
+        if (backend.dialect.scanPreferred) {
+          windowSlices(fused, resolver, backend).getOrElse(PushedSqlQuery.noSlices)
+        } else PushedSqlQuery.noSlices
+      PushedSqlQuery(p.output, sql, backend)(sliceGen)
     }
   }
 
@@ -344,8 +327,9 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     * single-stream result — each window partition (one column value) lies
     * entirely inside one slice, filters and projections distribute over
     * row-disjoint inputs, and a conditioned INNER/LEFT/RIGHT join
-    * distributes over slices of its preserved/driving side (the same side
-    * rule as the DSv2 join split, `GraftSqlSource.planPartitions`).
+    * distributes over slices of its preserved/driving side: each slice of
+    * that side joins the whole other side, and no row of the other side is
+    * NULL-extended once per slice.
     *
     * Declines (returns Nil → single stream, today's behavior) when:
     * subquery expressions are present; any node outside
@@ -355,23 +339,18 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     * common bare partition column exists; the column is non-integral or
     * aliased anywhere on its path; or the probe finds no rows.
     *
-    * Range construction: one COUNT/MIN/MAX probe on the base table, then
-    * uniform value strides with UNBOUNDED outer edges — slice 0 is
+    * Range construction is the scan's ([[KeyRanges]]) over the leaf's
+    * negotiated SQL, split [[WindowSliceParts]] ways: slice 0 is
     * `col < q1 OR col IS NULL` and the last slice `col >= q_last`, so
     * every value (including NULL window partitions and values outside the
     * probed span) lands in exactly one slice by construction. */
   private def windowSlices(p: LogicalPlan, resolver: SqlGen.TableResolver,
       backend: SqlBackend): Option[() => Seq[String]] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, GreaterThanOrEqual, IsNull, LessThan, Literal, Or}
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
     import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Project, SubqueryAlias, Window, WindowGroupLimit}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-    // malformed conf values decline slicing (default 4) instead of
-    // throwing NumberFormatException out of the optimizer
-    val parts = conf.getConfString("spark.graft.fusion.windowSliceParts", "4")
-      .trim.toIntOption.getOrElse(4)
-    if (parts <= 1) return None
     if (p.subqueriesAll.nonEmpty) return None
 
     val partitionSpecs = scala.collection.mutable.ArrayBuffer.empty[Seq[Expression]]
@@ -431,60 +410,32 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     // failure returns Nil = single-stream degradation, today's behavior,
     // decided where the read actually happens.
     val frag = leafOf(leaf).map(_._2).getOrElse(return None)
-    Some(() => probeSlices(p, resolver, backend, leaf, attr, frag, parts))
+    Some(() => probeSlices(p, resolver, backend, leaf, attr, frag))
   }
+
+  /** Slices per sliced fused window query. */
+  private val WindowSliceParts = 4
 
   /** Execution-time half of [[windowSlices]]: the live range probes and
     * slice-SQL rendering, run when [[PushedSqlExec]] first forces its
-    * slice list. Nil = degrade to the single stream. */
+    * slice list. Nil = degrade to the single stream, also when a probe
+    * fails. */
   private def probeSlices(p: LogicalPlan, resolver: SqlGen.TableResolver,
       backend: SqlBackend, leaf: LogicalPlan,
       attr: org.apache.spark.sql.catalyst.expressions.AttributeReference,
-      frag: String, parts: Int): Seq[String] = {
+      frag: String): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, IsNull, LessThan, Literal, Or}
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-    // COUNT/MIN/MAX probe on the base table's FROM fragment (a plain table
-    // name or the scan's negotiated subquery — aliased for dialects that
-    // require one)
+    // the probes read the base table's FROM fragment (the scan's
+    // negotiated subquery, aliased for dialects that require one)
     val d = backend.dialect
-    val qa = d.quote(attr.name)
-    val probeAlias = d.quote("__graft_slice_probe")
-    val bounds =
-      try backend.executeSql(
-        s"SELECT COUNT($qa), MIN($qa), MAX($qa) FROM $frag $probeAlias").head
-      catch { case _: Exception => return Nil } // probe failure: single stream
-    if (bounds.isNullAt(1)) return Nil
-    val n = BigInt(bounds.get(0).asInstanceOf[Number].longValue)
-    val lo = BigInt(bounds.get(1).asInstanceOf[Number].longValue)
-    val hi = BigInt(bounds.get(2).asInstanceOf[Number].longValue)
-    // Interior boundaries, each range = [b_i, b_{i+1}) with unbounded
-    // outer edges. DENSE values (span within 10× the row count) take
-    // uniform strides from one probe — the Spark-JDBC strategy. SPARSE
-    // values (snowflake-ish ids) would pile every row into one or two
-    // strides, so they probe the ACTUAL column quantiles instead — one
-    // ORDER BY k LIMIT 1 OFFSET i·per index seek per interior boundary,
-    // the same discipline as the scan path's keyRangeSqls; duplicate
-    // quantiles (heavy values) collapse a cut, never split one value
-    // across slices.
-    val sparse = (hi - lo + 1) > n * 10
-    val boundaries: Seq[BigInt] =
-      if (!sparse) {
-        val stride = ((hi - lo) / parts + 1) max BigInt(1)
-        val nParts = (((hi - lo) / stride) + 1).toInt
-        (1 until nParts).map(i => lo + stride * i)
-      } else {
-        val per = (n + parts - 1) / parts
-        try (1 until parts).map(i => BigInt(i) * per).filter(_ < n).map { off =>
-          BigInt(backend.executeSql(
-            s"SELECT $qa FROM $frag $probeAlias WHERE $qa IS NOT NULL ORDER BY $qa" +
-              d.limitOffset(Some(1L), Some(off.toLong))).head
-            .get(0).asInstanceOf[Number].longValue)
-        }.distinct
-        catch { case _: Exception => return Nil }
-      }
-    if (boundaries.isEmpty) return Nil
+    val cuts =
+      try KeyRanges.cuts(backend, s"$frag ${d.quote("__graft_slice_probe")}", Nil,
+        d.quote(attr.name), WindowSliceParts)
+      catch { case _: Exception => return Nil }
+    if (cuts.isEmpty) return Nil
 
     def lit(v: BigInt): Literal = attr.dataType match {
       case LongType => Literal(v.toLong)
@@ -493,31 +444,17 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
       case ByteType => Literal(v.toByte)
       case other => throw new IllegalStateException(s"unreachable: $other")
     }
-    // unbounded outer edges: slice 0 takes everything below b_1 plus NULL
-    // keys, the last slice everything at/above its last boundary — total
-    // coverage holds even for values outside the probed [lo, hi] span
-    val edges: Seq[(Option[BigInt], Option[BigInt])] =
-      ((None +: boundaries.map(Option(_))) :+ None).sliding(2)
-        .map(pair => (pair.head, pair.last)).toSeq
-    val preds: Seq[Expression] = edges.zipWithIndex.map { case ((from, until), i) =>
-      val lower = from.map(f => GreaterThanOrEqual(attr, lit(f)))
-      val upper = until.map(u => LessThan(attr, lit(u)))
-      val range: Expression = (lower, upper) match {
-        case (Some(a), Some(b)) => And(a, b)
-        case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case (None, None) => Literal.TrueLiteral
-      }
-      if (i == 0) Or(range, IsNull(attr)) else range
+    val preds: Seq[Expression] = KeyRanges.edges(cuts).zipWithIndex.map {
+      case ((from, until), i) =>
+        val range = (from.map(f => GreaterThanOrEqual(attr, lit(f))) ++
+          until.map(u => LessThan(attr, lit(u)))).reduce[Expression](And)
+        if (i == 0) Or(range, IsNull(attr)) else range
     }
-    val slices = preds.map { pred =>
+    preds.map { pred =>
       val sliced = p.transformUp { case l if l eq leaf => Filter(pred, l) }
-      SqlGen(sliced, resolver, d) match {
-        case Right(s) => s
-        case Left(_) => return Nil // any unrenderable slice: single stream
-      }
+      // any unrenderable slice: single stream
+      SqlGen(sliced, resolver, d).getOrElse(return Nil)
     }
-    slices
   }
 }
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `SHOW TABLES` ([[listTables]]) make it read them again. Tables load
   * through [[GraftSqlTable]] — the same DSv2 path as
   * `spark.read.format("graft-sqldb")`, so column pruning,
-  * filter/limit/aggregate pushdown, and whole-subtree SQL fusion
+  * filter/limit pushdown, and whole-subtree SQL fusion
   * ([[graft.plans.SqlPushdownRule]]) all apply to catalog-resolved scans.
   *
   * Read-only by design, like the reference's (its catalog registers

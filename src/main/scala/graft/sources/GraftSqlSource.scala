@@ -27,8 +27,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    reference's classifier, `table_provider.rs:241-306`); unsupported
   *    predicates stay in Spark as residuals
   *  - limit pushdown   → `SupportsPushDownLimit` (`table_provider.rs:110-113`),
-  *    plus complete top-N/offset, aggregates, and whole equi-joins
-  *    (`SupportsPushDownJoin`) with parallel key-range-sliced reads
+  *    plus complete top-N/offset. Joins and aggregates are not the scan's:
+  *    they reach the backend only through whole-subtree fusion
+  *    ([[graft.plans.SqlPushdownRule]])
   *  - partitioned read → key-range or COUNT+OFFSET/FETCH splits, one SQL
   *    query per partition (reference `table_provider.rs:123-156`; its
   *    fixed 4-way split is an option here)
@@ -86,11 +87,10 @@ class GraftSqlTable(val tableName: String, val backend: SqlBackend,
 }
 
 class GraftScanBuilder(private val table: String, private val backend: SqlBackend,
-    private var full: StructType, numPartitions: Int) extends ScanBuilder
+    full: StructType, numPartitions: Int) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownV2Filters
     with SupportsPushDownLimit with SupportsPushDownTopN
-    with SupportsPushDownOffset with SupportsPushDownAggregates
-    with SupportsPushDownJoin {
+    with SupportsPushDownOffset {
 
   private var required: StructType = full
   private var pushedV2: Array[Predicate] = Array.empty
@@ -98,287 +98,9 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
   private var limit: Option[Int] = None
   private var offset: Option[Int] = None
   private var orderBy: Seq[String] = Nil
-  private var aggSql: Option[(Seq[String], StructType)] = None
-  // when set, this builder represents a backend-side JOIN and the fragment
-  // replaces the plain table as the FROM source (SupportsPushDownJoin)
-  private var joinedFrom: Option[String] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    if (aggSql.isEmpty) required = requiredSchema
-
-  // ---- join pushdown (SupportsPushDownJoin): the whole equi-join — and,
-  // via the phase order of V2ScanRelationPushDown, any aggregate/top-N
-  // above it — collapses into ONE backend query. This is the
-  // Spark-idiomatic form of the reference's whole-query pushdown
-  // (`src/optimizer.rs:16-39` rewrote the plan itself); dialect-safe, so
-  // it fuses joins into backends SqlGen can't target (Derby). Enabled by
-  // spark.sql.optimizer.datasourceV2JoinPushdown. ----
-
-  override def isOtherSideCompatibleForJoin(
-      other: SupportsPushDownJoin): Boolean = other match {
-    // same backend INSTANCE: one database, one dialect, one connection
-    // config (instances are cached per dir/url, so eq is exact identity)
-    case o: GraftScanBuilder => (o.backend eq backend) &&
-      aggSql.isEmpty && o.aggSql.isEmpty &&
-      limit.isEmpty && o.limit.isEmpty &&
-      // offset mirrors the limit/orderBy guards: sideSql never renders a
-      // pushed offset, so accepting one here would silently drop it
-      // (unreachable under current phase ordering — defense in depth)
-      offset.isEmpty && o.offset.isEmpty &&
-      orderBy.isEmpty && o.orderBy.isEmpty
-    case _ => false
-  }
-
-  /** Aliased SELECT list for this side of a join. */
-  private def selectList(cols: Array[SupportsPushDownJoin.ColumnWithAlias]): String = {
-    val d = backend.dialect
-    cols.map { cwa =>
-      val src = d.quote(cwa.colName)
-      Option(cwa.alias) match {
-        case Some(a) if a != cwa.colName => s"$src AS ${d.quote(a)}"
-        case _ => src
-      }
-    }.mkString(", ")
-  }
-
-  /** This side rendered as a join subquery: its current pushed filters are
-    * baked in, every column selected under its (collision-free) alias. */
-  private def sideSql(cols: Array[SupportsPushDownJoin.ColumnWithAlias]): String = {
-    val d = backend.dialect
-    val preds = staticPredSql
-    val where = if (preds.isEmpty) "" else " WHERE " + preds.mkString(" AND ")
-    s"SELECT ${selectList(cols)} FROM ${joinedFrom.getOrElse(d.quote(table))}$where"
-  }
-
-  /** Parallel-read machinery for a pushed join: slicing ONE base table —
-    * the innermost LEFT table for INNER/LEFT joins, the RIGHT table for
-    * RIGHT joins — splits the whole join, because each slice of that side
-    * joins independently against the full other side and the union of
-    * disjoint slices is exactly the join. (Slicing the left side of a
-    * RIGHT join would repeat unmatched right rows per slice, and vice
-    * versa — hence the side flip. FULL joins can slice neither side.)
-    * Everything is captured BY VALUE at join time, since the builder's
-    * fields mutate afterwards. */
-  private var joinSplit: Option[JoinSplit] = None
-
-  /** Output fields contributed by one side, in Spark's requested order,
-    * renamed per alias. `forceNullable` widens the outer side of an outer
-    * join — the reader decodes against this schema, and a non-nullable
-    * field that the join NULL-extends would corrupt silently. */
-  private def sideFields(cols: Array[SupportsPushDownJoin.ColumnWithAlias],
-      schema: StructType, forceNullable: Boolean): Seq[org.apache.spark.sql.types.StructField] =
-    cols.toSeq.map { cwa =>
-      val f = schema.fields.find(_.name == cwa.colName).getOrElse(
-        throw new IllegalArgumentException(s"join column ${cwa.colName} not in $schema"))
-      val name = Option(cwa.alias).getOrElse(cwa.colName)
-      f.copy(name = name, nullable = f.nullable || forceNullable)
-    }
-
-  override def pushDownJoin(other: SupportsPushDownJoin,
-      joinType: org.apache.spark.sql.connector.join.JoinType,
-      leftCols: Array[SupportsPushDownJoin.ColumnWithAlias],
-      rightCols: Array[SupportsPushDownJoin.ColumnWithAlias],
-      condition: Predicate): Boolean = {
-    import org.apache.spark.sql.connector.join.JoinType
-    val o = other.asInstanceOf[GraftScanBuilder]
-    val kw = joinType match {
-      case JoinType.INNER_JOIN => Some("JOIN")
-      case JoinType.LEFT_OUTER_JOIN => Some("LEFT JOIN")
-      case JoinType.RIGHT_OUTER_JOIN => Some("RIGHT JOIN")
-      case _ => None
-    }
-    val cond = V2PredicateSql.render(condition, backend.dialect)
-    if (kw.isEmpty || cond.isEmpty) return false
-    // condition references the POST-alias names, which are exactly the two
-    // subqueries' output columns — disjoint by construction, no qualifiers
-    val d = backend.dialect
-    val leftSql = sideSql(leftCols)
-    val rightSql = o.sideSql(rightCols)
-    val fragment = s"($leftSql) gj_l ${kw.get} ($rightSql) gj_r ON ${cond.get}"
-
-    // capture the split machinery BY VALUE before any field mutates: an
-    // extra predicate (key-range slice) or tail clause (deterministic
-    // ORDER BY + OFFSET/FETCH window) lands on the innermost base-table
-    // subquery of the sliced side — where every base column is in scope,
-    // projected or not — either appended to the side subquery just
-    // rendered, or threaded through the previous join level's own
-    // rewriters
-    val leftSel = selectList(leftCols)
-    val leftPreds = staticPredSql
-    // left-side rewriters (INNER/LEFT joins slice the innermost left table)
-    val mkLeft: Option[JoinSplit.Inner] = joinedFrom match {
-      case None => Some(JoinSplit.Inner(
-        table,
-        leftPreds,
-        e => leftSql + (if (leftPreds.nonEmpty) s" AND $e" else s" WHERE $e"),
-        sfx => leftSql + sfx))
-      case Some(_) =>
-        joinSplit.map { js =>
-          // must mirror sideSql exactly: predicates pushed onto the
-          // already-joined builder (none under today's phase order, but
-          // a future phase-order change must not silently widen the
-          // range-split fragments relative to the single-stream one)
-          val where =
-            if (leftPreds.isEmpty) "" else " WHERE " + leftPreds.mkString(" AND ")
-          JoinSplit.Inner(
-            js.probeTable,
-            js.probePreds,
-            e => s"SELECT $leftSel FROM ${js.mkPred(e)}$where",
-            sfx => s"SELECT $leftSel FROM ${js.mkSuffix(sfx)}$where")
-        }
-    }
-    // right-side rewriters (RIGHT joins slice the right table; only a
-    // plain right side — a right-side join chain stays single-stream)
-    val rightPreds = o.staticPredSql
-    val mkRight: Option[JoinSplit.Inner] =
-      if (o.joinedFrom.isEmpty) Some(JoinSplit.Inner(
-        o.table,
-        rightPreds,
-        e => rightSql + (if (rightPreds.nonEmpty) s" AND $e" else s" WHERE $e"),
-        sfx => rightSql + sfx))
-      else None
-
-    val merged = StructType(
-      sideFields(leftCols, full, forceNullable = joinType == JoinType.RIGHT_OUTER_JOIN) ++
-        o.sideFields(rightCols, o.full, forceNullable = joinType == JoinType.LEFT_OUTER_JOIN))
-    joinSplit = joinType match {
-      case JoinType.INNER_JOIN | JoinType.LEFT_OUTER_JOIN =>
-        mkLeft.map(in => JoinSplit(in.probeTable, in.probePreds,
-          e => s"(${in.mkPred(e)}) gj_l ${kw.get} ($rightSql) gj_r ON ${cond.get}",
-          sfx => s"(${in.mkSuffix(sfx)}) gj_l ${kw.get} ($rightSql) gj_r ON ${cond.get}"))
-      case JoinType.RIGHT_OUTER_JOIN =>
-        mkRight.map(in => JoinSplit(in.probeTable, in.probePreds,
-          e => s"($leftSql) gj_l ${kw.get} (${in.mkPred(e)}) gj_r ON ${cond.get}",
-          sfx => s"($leftSql) gj_l ${kw.get} (${in.mkSuffix(sfx)}) gj_r ON ${cond.get}"))
-      case _ => None
-    }
-    joinedFrom = Some(fragment)
-    full = merged
-    required = merged
-    // baked into the left subquery above
-    pushedV2 = Array.empty
-    pushedV2Sql = Nil
-    true
-  }
-
-  // ---- aggregate pushdown (whole GROUP BY answered by the backend — the
-  // reference's aggregate-pushdown scenario, tests/aggregate.rs:25-44) ----
-
-  private def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case f: NamedReference if f.fieldNames.length == 1 => Some(f.fieldNames()(0))
-      case _ => None
-    }
-
-  private def fieldType(n: String): Option[org.apache.spark.sql.types.DataType] =
-    full.fields.find(_.name == n).map(_.dataType)
-
-  private def sumType(dt: org.apache.spark.sql.types.DataType) = dt match {
-    case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-         org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType =>
-      Some(org.apache.spark.sql.types.LongType)
-    case org.apache.spark.sql.types.FloatType | org.apache.spark.sql.types.DoubleType =>
-      Some(org.apache.spark.sql.types.DoubleType)
-    case _ => None
-  }
-
-  /** Statistical V2 aggregates with a shared SQL spelling; availability is
-    * still per-dialect via `supportsFunction` (Derby lacks CORR/COVAR). */
-  private val StatAggNames = Set("STDDEV_SAMP", "STDDEV_POP", "VAR_SAMP",
-    "VAR_POP", "CORR", "COVAR_SAMP", "COVAR_POP")
-
-  /** Translate a V2 Aggregation to (select items, GROUP BY items, result
-    * schema); None if any piece is beyond the backend's negotiated
-    * surface. Memoized per Aggregation instance: Spark calls
-    * supportCompletePushDown then pushAggregation with the same object. */
-  private var aggCacheKey: Aggregation = _
-  private var aggCacheVal: Option[(Seq[String], Seq[String], StructType)] = None
-  private def translateAggCached(agg: Aggregation): Option[(Seq[String], Seq[String], StructType)] = {
-    if (!(aggCacheKey eq agg)) { aggCacheKey = agg; aggCacheVal = translateAgg(agg) }
-    aggCacheVal
-  }
-
-  private def translateAgg(agg: Aggregation): Option[(Seq[String], Seq[String], StructType)] = {
-    val d = backend.dialect
-    val groups = agg.groupByExpressions.toSeq.map(fieldOf)
-    if (groups.exists(_.isEmpty)) return None
-    val groupItems = groups.flatten.map(n => (d.quote(n), full.fields.find(_.name == n)))
-    if (groupItems.exists(_._2.isEmpty)) return None
-    val aggItems: Seq[Option[(String, org.apache.spark.sql.types.DataType)]] =
-      agg.aggregateExpressions.toSeq.zipWithIndex.map {
-        case (_: CountStar, _) => Some(("COUNT(*)", org.apache.spark.sql.types.LongType))
-        case (c: Count, _) =>
-          fieldOf(c.column).map { n =>
-            val dist = if (c.isDistinct) "DISTINCT " else ""
-            (s"COUNT($dist${d.quote(n)})", org.apache.spark.sql.types.LongType)
-          }
-        case (m: Min, _) =>
-          for { n <- fieldOf(m.column); t <- fieldType(n) } yield (s"MIN(${d.quote(n)})", t)
-        case (m: Max, _) =>
-          for { n <- fieldOf(m.column); t <- fieldType(n) } yield (s"MAX(${d.quote(n)})", t)
-        case (sm: Sum, _) =>
-          for {
-            n <- fieldOf(sm.column); t <- fieldType(n); st <- sumType(t)
-          } yield {
-            val dist = if (sm.isDistinct) "DISTINCT " else ""
-            (s"SUM($dist${d.quote(n)})", st)
-          }
-        case (a: Avg, _) =>
-          // DOUBLE input only: every backend then agrees the result is
-          // DOUBLE computed in double arithmetic. Integer/float inputs
-          // diverge (Derby's AVG(INT) truncates to INT, AVG(REAL) stays
-          // single-precision) — those stay in Spark.
-          for {
-            n <- fieldOf(a.column); t <- fieldType(n)
-            if t == org.apache.spark.sql.types.DoubleType
-          } yield {
-            val dist = if (a.isDistinct) "DISTINCT " else ""
-            (s"AVG($dist${d.quote(n)})", org.apache.spark.sql.types.DoubleType)
-          }
-        // statistical aggregates, name-gated per dialect (Derby 10.16 has
-        // the STDDEV/VAR family but not CORR/COVAR — probed; Spark offers
-        // these only under complete pushdown, so there is no partial-agg
-        // merge problem). DOUBLE columns only: on integer inputs Spark
-        // wraps the child in a cast, which fieldOf declines anyway.
-        case (g: GeneralAggregateFunc, _)
-            if StatAggNames(g.name) && !g.isDistinct &&
-              g.orderingWithinGroups.isEmpty && d.supportsFunction(g.name) =>
-          val cols = g.children.toSeq.map(fieldOf)
-          for {
-            ns <- if (cols.exists(_.isEmpty)) None else Some(cols.flatten)
-            if ns.nonEmpty &&
-              ns.forall(n => fieldType(n).contains(org.apache.spark.sql.types.DoubleType))
-          } yield (s"${g.name}(${ns.map(d.quote).mkString(", ")})",
-            org.apache.spark.sql.types.DoubleType)
-        case _ => None
-      }
-    if (aggItems.exists(_.isEmpty)) return None
-    // aggregates are aliased to their readSchema names so whole-query
-    // fusion can reference the scan's output columns by name
-    val selects = groupItems.map(_._1) ++
-      aggItems.flatten.zipWithIndex.map { case ((sql, _), i) =>
-        s"$sql AS ${d.quote(s"agg_func_$i")}"
-      }
-    val fields = groupItems.map(_._2.get) ++
-      aggItems.flatten.zipWithIndex.map { case ((_, t), i) =>
-        org.apache.spark.sql.types.StructField(s"agg_func_$i", t)
-      }
-    Some((selects, groupItems.map(_._1), StructType(fields)))
-  }
-
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    translateAggCached(aggregation).isDefined
-
-  override def pushAggregation(aggregation: Aggregation): Boolean =
-    translateAggCached(aggregation) match {
-      case Some((selects, groupCols, schema)) =>
-        aggSql = Some((selects, schema))
-        aggGroupBy = groupCols
-        required = schema
-        true
-      case None => false
-    }
-  private var aggGroupBy: Seq[String] = Nil
+    required = requiredSchema
 
   /** Capability negotiation over V2 predicates (Spark prefers V1
     * `SupportsPushDownFilters` when a source implements both, so ONLY the
@@ -397,9 +119,6 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
     rendered.collect { case (p, None) => p } // residuals
   }
   override def pushedPredicates(): Array[Predicate] = pushedV2
-
-  /** Every static predicate this builder has accepted, rendered. */
-  private def staticPredSql: Seq[String] = pushedV2Sql
 
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
 
@@ -443,20 +162,13 @@ class GraftScanBuilder(private val table: String, private val backend: SqlBacken
   }
 
   override def build(): Scan =
-    new GraftScan(table, backend, required, limit,
-      // aggregated scans answer in one backend query (the reference's
-      // whole-query DatabaseExec was likewise single-stream,
-      // src/physical_plan.rs:28-132); plain scans split by key range, and
-      // joined scans split via joinSplit's probe-table rewriters (key
-      // range, or ordered windows when that table is keyless)
-      if (aggSql.isDefined) 1 else numPartitions,
-      aggSql.map { case (selects, _) => (selects, aggGroupBy) },
-      orderBy, offset, joinedFrom, joinSplit, pushedV2Sql, pushedV2.toSeq)
+    new GraftScan(table, backend, required, limit, numPartitions,
+      orderBy, offset, pushedV2Sql, pushedV2.toSeq)
 }
 
-/** V2 expression → backend SQL — the one scan-filter form: join-pushdown
-  * conditions, the `SupportsPushDownV2Filters` static predicates and the
-  * `SupportsRuntimeV2Filtering` dynamic-pruning predicates all render
+/** V2 expression → backend SQL — the one scan-filter form: the
+  * `SupportsPushDownV2Filters` static predicates and the
+  * `SupportsRuntimeV2Filtering` dynamic-pruning predicates both render
   * here, including expression filters (arithmetic, casts, a conservative
   * function set). The reference's classifier stopped at columns/literals/
   * binary-ops/cast (`table_provider.rs:241-306`). Conservative by
@@ -557,33 +269,10 @@ object V2PredicateSql {
     } yield s"($l $op $r)"
 }
 
-/** By-value carrier of a pushed join's parallel-split machinery.
-  * `probeTable` is the base table whose key range / row count the split
-  * probe hits (under `probePreds`, that table's own pushed filters);
-  * `mkPred` renders the full join FROM-fragment with a key-range
-  * predicate spliced into that table's innermost subquery, `mkSuffix`
-  * with an ORDER BY + OFFSET/FETCH window clause appended to it (the
-  * deterministic fallback when the table declares no integral key). */
-private[sources] case class JoinSplit(probeTable: String,
-    probePreds: Seq[String],
-    mkPred: String => String,
-    mkSuffix: String => String)
-
-private[sources] object JoinSplit {
-  /** One side's innermost-subquery rewriters, before the fragment that
-    * wraps them in the join is assembled. Same fields as [[JoinSplit]],
-    * but the rewriters return the side SUBQUERY, not the FROM fragment. */
-  case class Inner(probeTable: String, probePreds: Seq[String],
-      mkPred: String => String, mkSuffix: String => String)
-}
-
 class GraftScan(val table: String, val backend: SqlBackend,
     val required: StructType,
     val limit: Option[Int], numPartitions: Int,
-    val aggregation: Option[(Seq[String], Seq[String])] = None,
     val orderBy: Seq[String] = Nil, val offset: Option[Int] = None,
-    val joinedFrom: Option[String] = None,
-    val joinSplit: Option[JoinSplit] = None,
     val preRendered: Seq[String] = Nil,
     pushed: Seq[Predicate] = Nil)
     extends Scan with Batch
@@ -592,14 +281,14 @@ class GraftScan(val table: String, val backend: SqlBackend,
   override def readSchema(): StructType = required
 
   /** The static predicates this scan absorbed, when they are ALL it
-    * absorbed: None once an aggregate, limit/offset/top-N, join fragment
-    * or runtime filter was pushed too. Column pruning changes no row
+    * absorbed: None once a limit/offset/top-N or runtime filter was
+    * pushed too. Column pruning changes no row
     * semantics and does not count. [[graft.plans.MvRewriteRule]] re-applies
     * these predicates when it serves the query from a view instead of
     * this scan; any other absorbed state would be silently dropped. */
   def staticPredicates: Option[Seq[Predicate]] =
-    if (runtimeFilters.isEmpty && aggregation.isEmpty && limit.isEmpty &&
-        offset.isEmpty && orderBy.isEmpty && joinedFrom.isEmpty) Some(pushed)
+    if (runtimeFilters.isEmpty && limit.isEmpty && offset.isEmpty &&
+        orderBy.isEmpty) Some(pushed)
     else None
 
   // ---- statistics (SupportsReportStatistics) ----
@@ -611,17 +300,12 @@ class GraftScan(val table: String, val backend: SqlBackend,
   // bound; V2 stats are consulted after pushdown, so there is no
   // double-discounting) and caps at a pushed LIMIT.
   override def estimateStatistics(): Statistics = {
-    // a joined scan's cardinality is not a catalog fact — report unknown
-    val catalogRows =
-      if (joinedFrom.isDefined) None else backend.estimatedRowCount(table)
-    val rows = (catalogRows, limit) match {
+    val rows = (backend.estimatedRowCount(table), limit) match {
       case (Some(n), Some(l)) => Some(n min l.toLong)
       case (Some(n), None) => Some(n)
       case (None, Some(l)) => Some(l.toLong)
       case _ => None
     }
-    // aggregated scans emit at most one row per group — unknowable from
-    // catalog stats; the input bound still serves as a conservative cap
     val width = math.max(1,
       (if (required.isEmpty) 1 else required.defaultSize))
     new Statistics {
@@ -652,17 +336,14 @@ class GraftScan(val table: String, val backend: SqlBackend,
 
   override def filterAttributes(): Array[NamedReference] =
     // only the scan's OUTPUT columns: Spark resolves these refs against the
-    // pruned read schema. Aggregated scans expose none — the WHERE clause
-    // a runtime filter lands in runs before the pushed GROUP BY, and the
-    // renamed agg outputs don't name base columns anyway. Top-N/offset
-    // scans expose none either: with isPartiallyPushed()=false Spark has
+    // pruned read schema. Top-N/offset scans expose none: with
+    // isPartiallyPushed()=false Spark has
     // deleted its own Sort/Limit/Offset, so the backend query's result IS
     // the final answer — a runtime filter rendered into its WHERE clause
     // would run before the ORDER BY/LIMIT and change which rows enter the
     // top-N (a join above a fully-pushed `orderBy(c).limit(5)` with DPP
     // would silently return rows beyond the true top 5).
-    if (aggregation.isDefined || orderBy.nonEmpty || limit.isDefined ||
-        offset.isDefined) Array.empty
+    if (orderBy.nonEmpty || limit.isDefined || offset.isDefined) Array.empty
     else required.fieldNames
       .map(n => org.apache.spark.sql.connector.expressions.Expressions.column(n))
 
@@ -685,11 +366,10 @@ class GraftScan(val table: String, val backend: SqlBackend,
     // ViewBackendConnection). Only a genuinely NEW predicate re-plans.
     // Defense-in-depth mirror of filterAttributes(): never accept a
     // delivery that would land a WHERE clause before a pushed top-N/
-    // offset/aggregate (Spark shouldn't send one — the attribute list is
-    // empty — but a dropped runtime filter is always safe, a misplaced
-    // one is silently wrong).
-    if (aggregation.isDefined || orderBy.nonEmpty || limit.isDefined ||
-        offset.isDefined) return
+    // offset (Spark shouldn't send one — the attribute list is empty —
+    // but a dropped runtime filter is always safe, a misplaced one is
+    // silently wrong).
+    if (orderBy.nonEmpty || limit.isDefined || offset.isDefined) return
     val ok = runtime.toSeq
       .filterNot(p => p.name() == "IN" && p.children().length - 1 > MaxRuntimeInValues)
       .flatMap(p => V2PredicateSql.render(p, backend.dialect).map(sql => runtimeKey(p, sql) -> sql))
@@ -731,107 +411,28 @@ class GraftScan(val table: String, val backend: SqlBackend,
     * WHERE clause (used by the range split — the predicate references the
     * table's key column directly, so it works even when the key is pruned
     * from the projection). */
-  private def sqlWith(extra: Option[String],
-      srcOverride: Option[String] = None): String = {
-    val cols = aggregation match {
-      case Some((selects, _)) => selects.mkString(", ")
-      case None =>
-        if (required.isEmpty) "1" // COUNT(*)-only scans prune every column
-        else required.fieldNames.map(q).mkString(", ")
-    }
-    val src = srcOverride.getOrElse(joinedFrom.getOrElse(q(table)))
+  private def sqlWith(extra: Option[String]): String = {
+    val cols =
+      if (required.isEmpty) "1" // COUNT(*)-only scans prune every column
+      else required.fieldNames.map(q).mkString(", ")
     val preds = renderedFilters ++ extra
     val where = if (preds.isEmpty) "" else " WHERE " + preds.mkString(" AND ")
-    val group = aggregation match {
-      case Some((_, g)) if g.nonEmpty => " GROUP BY " + g.mkString(", ")
-      case _ => ""
-    }
     val order = if (orderBy.isEmpty) "" else " ORDER BY " + orderBy.mkString(", ")
     val sel = backend.dialect.limitOffset(limit.map(_.toLong), offset.map(_.toLong))
-    s"SELECT $cols FROM $src$where$group$order$sel"
+    s"SELECT $cols FROM ${q(table)}$where$order$sel"
   }
 
-  /** The split column: a declared single-column integral unique key of
-    * `t` — the scanned table for plain scans, [[JoinSplit.probeTable]]
-    * (the table the split rewriters splice into) for joined scans. */
-  private def rangeKeyOf(t: String): Option[String] = backend.uniqueKey(t) match {
+  /** The split column: a declared single-column integral unique key of the
+    * scanned table. */
+  private def rangeKey: Option[String] = backend.uniqueKey(table) match {
     case Some(Seq(k)) =>
-      backend.schema(t).fields.find(_.name == k).map(_.dataType) match {
+      backend.schema(table).fields.find(_.name == k).map(_.dataType) match {
         case Some(org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
                   org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType) =>
           Some(k)
         case _ => None
       }
     case _ => None
-  }
-
-  /** Disjoint key-range partition SQLs on table `t`'s key under
-    * `probeWhere`, one query per range via `mkSql`.
-    *
-    * DENSE keys (value span within 10× the row count) take a single
-    * COUNT/MIN/MAX probe and uniform value strides — Spark's own JDBC
-    * strategy, and the reference's spirit. SPARSE keys are where that
-    * strategy collapses: a table keyed by, say, snowflake ids spanning
-    * 2^40 values piles every row into one or two strides and leaves the
-    * rest empty. Those instead probe the ACTUAL key quantiles — one
-    * `ORDER BY k OFFSET i·per FETCH 1` per interior boundary, an index
-    * seek on any real RDBMS's unique key — and slice [q_i, q_{i+1})
-    * between them: balanced partitions under ANY key distribution, at
-    * the price of numPartitions-1 scalar probes at planning. */
-  private def keyRangeSqls(t: String, k: String, probeWhere: String,
-      mkSql: String => String): Seq[String] = {
-    val bounds = backend.executeSql(
-      s"SELECT COUNT(${q(k)}), MIN(${q(k)}), MAX(${q(k)}) FROM ${q(t)}$probeWhere").head
-    if (bounds.isNullAt(1)) Seq(baseSql) // empty table (or all-NULL keys)
-    else {
-      // BigInt arithmetic: hi - lo on sentinel-valued Long keys
-      // overflows and would silently plan zero partitions
-      val n = BigInt(bounds.get(0).asInstanceOf[Number].longValue)
-      val lo = BigInt(bounds.get(1).asInstanceOf[Number].longValue)
-      val hi = BigInt(bounds.get(2).asInstanceOf[Number].longValue)
-      val sparse = (hi - lo + 1) > n * 10
-      if (!sparse) {
-        val stride = ((hi - lo) / numPartitions + 1) max BigInt(1)
-        val nParts = (((hi - lo) / stride) + 1).toInt
-        (0 until nParts).map { i =>
-          val from = lo + stride * i
-          val until = from + stride
-          // SQL UNIQUE permits NULLs and a NULL key matches no range
-          // predicate — partition 0 sweeps them up
-          val nulls = if (i == 0) s" OR ${q(k)} IS NULL" else ""
-          mkSql(s"(${q(k)} >= $from AND ${q(k)} < $until$nulls)")
-        }
-      } else {
-        val per = (n + numPartitions - 1) / numPartitions
-        // probes exclude NULL keys explicitly: COUNT(k) counted only
-        // non-nulls, and dialects disagree on where NULLs sort
-        val pw = if (probeWhere.isEmpty) s" WHERE ${q(k)} IS NOT NULL"
-          else s"$probeWhere AND ${q(k)} IS NOT NULL"
-        val cuts = (1 until numPartitions)
-          .map(i => BigInt(i) * per).filter(_ < n)
-          .map { off =>
-            BigInt(backend.executeSql(
-              s"SELECT ${q(k)} FROM ${q(t)}$pw ORDER BY ${q(k)}" +
-                backend.dialect.limitOffset(Some(1L), Some(off.toLong)))
-              .head.get(0).asInstanceOf[Number].longValue)
-          }.distinct // duplicate quantiles (heavy keys) collapse a cut
-        val edges: Seq[(Option[BigInt], Option[BigInt])] =
-          ((None +: cuts.map(Some(_))) :+ None).sliding(2).map {
-            pair => (pair.head, pair.last)
-          }.toSeq
-        edges.zipWithIndex.map { case ((from, until), i) =>
-          val range = (from.map(f => s"${q(k)} >= $f"),
-              until.map(u => s"${q(k)} < $u")) match {
-            case (Some(l), Some(h)) => s"$l AND $h"
-            case (Some(l), None) => l
-            case (None, Some(h)) => h
-            case (None, None) => s"${q(k)} IS NOT NULL" // single cutless range
-          }
-          val nulls = if (i == 0) s" OR ${q(k)} IS NULL" else ""
-          mkSql(s"($range$nulls)")
-        }
-      }
-    }
   }
 
   override def toBatch: Batch = this
@@ -853,17 +454,14 @@ class GraftScan(val table: String, val backend: SqlBackend,
 
   private def planPartitions(): Array[InputPartition] = {
     // Split strategy, in preference order — every branch is exactly-once,
-    // and the one planning round-trip (a scalar probe) is the only backend
+    // and the planning round-trips (scalar probes) are the only backend
     // work before execution (partitions carry SQL text, never rows;
     // reference `PostgresExec::execute` likewise defers each fetch):
     //
-    //  1. Declared single integral unique key → COUNT/MIN/MAX probe +
-    //     disjoint key-range predicates (the strategy of Spark's own JDBC
-    //     partitioning): index-friendly range seeks on a real RDBMS, no
-    //     backend sorts. Where Spark's JDBC source stops — uniform value
-    //     strides skew under sparse keys — a key whose span exceeds 10×
-    //     the row count switches to probed QUANTILE boundaries
-    //     (keyRangeSqls): balanced partitions under any distribution.
+    //  1. Declared single integral unique key → disjoint key ranges
+    //     ([[KeyRanges]]: the strategy of Spark's own JDBC partitioning,
+    //     with probed quantile cuts for sparse keys): index-friendly range
+    //     seeks on a real RDBMS, no backend sorts.
     //  2. Composite / non-integral key → COUNT probe + key-ordered
     //     LIMIT/OFFSET ranges (the reference's split, made deterministic:
     //     its unordered LIMIT/OFFSET can duplicate or drop rows). Costs
@@ -877,55 +475,20 @@ class GraftScan(val table: String, val backend: SqlBackend,
       // global ORDER BY/OFFSET only means anything in one backend query
       if (numPartitions <= 1 || limit.isDefined || offset.isDefined ||
           orderBy.nonEmpty) Seq(baseSql)
-      else if (joinedFrom.isDefined) joinSplit match {
-        // a pushed join parallelizes by slicing ONE base table INSIDE the
-        // join fragment (innermost left for INNER/LEFT, right for RIGHT)
-        // — each slice joins independently against the full other side,
-        // so the union of disjoint slices is exactly the join. The probe
-        // runs under that table's own pushed filters (outer/runtime
-        // filters apply per partition at the outer level via sqlWith).
-        // The reference's whole-query DatabaseExec stayed single-stream
-        // here (src/physical_plan.rs:28-132).
-        case Some(js) =>
-          val pw = if (js.probePreds.isEmpty) ""
-            else " WHERE " + js.probePreds.mkString(" AND ")
-          rangeKeyOf(js.probeTable) match {
-            case Some(k) =>
-              keyRangeSqls(js.probeTable, k, pw,
-                pred => sqlWith(None, Some(js.mkPred(pred))))
-            case None =>
-              // keyless probe side: deterministic ORDER BY + OFFSET/FETCH
-              // windows at the innermost-subquery level. Sort columns are
-              // the declared unique key if any, else EVERY base column —
-              // all in scope at that level whether projected or not
-              // (unlike the plain-scan fallback below, which sorts the
-              // outer projected level), and the table-qualified spelling
-              // can never be captured by a side alias. Ties are then
-              // full-row duplicates, whose window assignment is
-              // interchangeable: the joined multiset stays exact.
-              val n = backend.executeSql(
-                s"SELECT COUNT(*) FROM ${q(js.probeTable)}$pw")
-                .head.get(0).asInstanceOf[Number].longValue
-              if (n == 0) Seq(baseSql)
-              else {
-                val per = (n + numPartitions - 1) / numPartitions
-                val orderCols = backend.uniqueKey(js.probeTable)
-                  .getOrElse(backend.schema(js.probeTable).fieldNames.toSeq)
-                val order = " ORDER BY " +
-                  orderCols.map(c => s"${q(js.probeTable)}.${q(c)}").mkString(", ")
-                (0L until numPartitions.toLong)
-                  .filter(i => i * per < n)
-                  .map(i => sqlWith(None, Some(js.mkSuffix(
-                    order + backend.dialect.limitOffset(Some(per), Some(i * per))))))
-              }
-          }
-        case None => Seq(baseSql)
-      }
-      else rangeKeyOf(table) match {
+      else rangeKey match {
         case Some(k) =>
           // the probe shares the pushed filters, so the bounds (and hence
           // the ranges) reflect the filtered data, not the whole table
-          keyRangeSqls(table, k, probeWhere, pred => sqlWith(Some(pred)))
+          val cuts = KeyRanges.cuts(backend, q(table), renderedFilters, q(k), numPartitions)
+          if (cuts.isEmpty) Seq(baseSql)
+          else KeyRanges.edges(cuts).zipWithIndex.map { case ((from, until), i) =>
+            val range = (from.map(f => s"${q(k)} >= $f") ++
+              until.map(u => s"${q(k)} < $u")).mkString(" AND ")
+            // SQL UNIQUE permits NULLs and a NULL key matches no range
+            // predicate — partition 0 sweeps them up
+            val nulls = if (i == 0) s" OR ${q(k)} IS NULL" else ""
+            sqlWith(Some(s"($range$nulls)"))
+          }
         case None =>
           // Number, not getLong: COUNT's result type is dialect-specific
           // (Derby says INTEGER, most others BIGINT)
@@ -995,6 +558,68 @@ class GraftScan(val table: String, val backend: SqlBackend,
     conn.awaitPrefetched()
     new GraftReaderFactory(conn)
   }
+}
+
+/** The one key-range splitter, shared by the partitioned scan
+  * ([[GraftScan]]) and the sliced fused window query
+  * (`graft.plans.SqlPushdownRule.windowSlices`): disjoint ranges of one
+  * integral column whose union covers every row exactly once.
+  *
+  * DENSE keys (value span within 10× the row count) take a single
+  * COUNT/MIN/MAX probe and uniform value strides — Spark's own JDBC
+  * strategy, and the reference's spirit. SPARSE keys are where that
+  * strategy collapses: a table keyed by, say, snowflake ids spanning
+  * 2^40 values piles every row into one or two strides and leaves the
+  * rest empty. Those instead probe the ACTUAL key quantiles — one
+  * `ORDER BY k OFFSET i·per FETCH 1` per interior boundary, an index
+  * seek on any real RDBMS's unique key — at the price of parts-1 scalar
+  * probes. Duplicate quantiles (heavy values) collapse a cut, never split
+  * one value across ranges.
+  *
+  * Probe failures propagate; each caller owns its failure policy. */
+object KeyRanges {
+
+  /** Ascending interior cut points for `key` (a quoted column) over
+    * `from` (a FROM item) under the conjunction `where`. Empty when the
+    * probe finds no non-NULL key or the span admits one range only: the
+    * caller then reads one stream. */
+  def cuts(backend: SqlBackend, from: String, where: Seq[String], key: String,
+      parts: Int): Seq[BigInt] = {
+    def whereSql(ps: Seq[String]) = if (ps.isEmpty) "" else " WHERE " + ps.mkString(" AND ")
+    val bounds = backend.executeSql(
+      s"SELECT COUNT($key), MIN($key), MAX($key) FROM $from${whereSql(where)}").head
+    if (bounds.isNullAt(1)) return Nil // empty (or all-NULL keys)
+    // BigInt arithmetic: hi - lo on sentinel-valued Long keys overflows
+    // and would silently plan zero ranges
+    val n = BigInt(bounds.get(0).asInstanceOf[Number].longValue)
+    val lo = BigInt(bounds.get(1).asInstanceOf[Number].longValue)
+    val hi = BigInt(bounds.get(2).asInstanceOf[Number].longValue)
+    if ((hi - lo + 1) <= n * 10) {
+      val stride = ((hi - lo) / parts + 1) max BigInt(1)
+      val nParts = (((hi - lo) / stride) + 1).toInt
+      (1 until nParts).map(i => lo + stride * i)
+    } else {
+      val per = (n + parts - 1) / parts
+      // probes exclude NULL keys explicitly: COUNT(k) counted only
+      // non-nulls, and dialects disagree on where NULLs sort
+      val pw = whereSql(where :+ s"$key IS NOT NULL")
+      (1 until parts).map(i => BigInt(i) * per).filter(_ < n).map { off =>
+        BigInt(backend.executeSql(s"SELECT $key FROM $from$pw ORDER BY $key" +
+          backend.dialect.limitOffset(Some(1L), Some(off.toLong)))
+          .head.get(0).asInstanceOf[Number].longValue)
+      }.distinct
+    }
+  }
+
+  /** Each range as (inclusive lower, exclusive upper) bounds, with
+    * UNBOUNDED outer edges: the first range takes everything below the
+    * first cut, the last everything at or above the last cut, so values
+    * outside the probed span (and runtime-narrowed data) still land in
+    * exactly one range. NULL keys match no range; the caller adds them to
+    * range 0. */
+  def edges(cuts: Seq[BigInt]): Seq[(Option[BigInt], Option[BigInt])] =
+    ((None +: cuts.map(Option(_))) :+ None).sliding(2)
+      .map(pair => (pair.head, pair.last)).toSeq
 }
 
 /** One partition = one backend SQL query. Rows are fetched by the reader on

@@ -3,10 +3,7 @@ package graft.sources
 import java.sql.{Connection, DriverManager, ResultSet, Types}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.plans.SqlGen.Dialect
@@ -19,10 +16,9 @@ import graft.plans.SqlGen.Dialect
   * (`fullSqlGen = true`) behind those capability gates — every hook below
   * was probed against embedded Derby 10.16, so what renders parses, and
   * what doesn't parse declines at plan time (stays a Spark residual)
-  * instead of erroring at run time. With `scanPreferred = true` the fusion
-  * path triggers only for shapes the DSv2 scan surface cannot push
-  * (semi/anti joins, set ops, DISTINCT/statistical aggregates); plain
-  * project/filter/agg/equi-join trees keep the partitioned parallel scan. */
+  * instead of erroring at run time. With `scanPreferred = true` a bare
+  * project/filter/sort/limit chain over one table keeps the partitioned
+  * parallel scan; joins and aggregates fuse within the fetch budget. */
 case object DerbyDialect extends Dialect {
   def quote(n: String): String = "\"" + n.replace("\"", "\"\"") + "\""
   override def limitOffset(limit: Option[Long], offset: Option[Long]): String =
@@ -125,8 +121,9 @@ case object DerbyDialect extends Dialect {
 
 /** Default dialect for UNRECOGNIZED JDBC drivers: ANSI double-quote
   * rendering for the scan-level surface (projection/filter/limit — every
-  * piece is plain ANSI and failures are loud), but no whole-plan fusion,
-  * no null-safe-eq, no DDL/CAST type names. Known-compatible drivers opt
+  * piece is plain ANSI and failures are loud), but no whole-plan fusion
+  * (so joins and aggregates run in Spark), no null-safe-eq, no DDL/CAST
+  * type names. Known-compatible drivers opt
   * in to more via their own dialect ([[DerbyDialect]], [[PostgresDialect]]). */
 case object ConservativeAnsiDialect extends Dialect {
   def quote(n: String): String = "\"" + n.replace("\"", "\"\"") + "\""
@@ -455,16 +452,6 @@ class JdbcBackend private (val url: String) extends SqlBackend {
   override def supportsMerge: Boolean =
     dialect == DerbyDialect || dialect == PostgresDialect
   override def connection: SqlConnection = JdbcTaskConnection(url)
-
-  override def executeSqlToRdd(sql: String, expected: StructType): RDD[InternalRow] = {
-    // single-stream fallback (whole-plan fusion is dialect-gated off for
-    // Derby; an Ansi JDBC backend reaching here still streams task-side)
-    val u = url
-    SparkSession.active.sparkContext.parallelize(Seq(sql), 1).mapPartitions { it =>
-      val ser = ExpressionEncoder(RowEncoder.encoderFor(expected)).createSerializer()
-      it.flatMap(s => JdbcTaskConnection(u).fetch(0L, s, expected).map(r => ser(r).copy()))
-    }
-  }
 }
 
 /** Task-side JDBC connection: `fetch` opens a connection ON THE TASK and

@@ -1,9 +1,6 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.plans.SqlGen.Dialect
@@ -216,14 +213,6 @@ class PgWireBackend private (val address: String) extends SqlBackend {
     withSession(PgWireTaskConnection.copyRead(_, sql, None).toVector)
 
   override def connection: SqlConnection = PgWireTaskConnection(address)
-
-  override def executeSqlToRdd(sql: String, expected: StructType): RDD[InternalRow] = {
-    val conn = connection
-    SparkSession.active.sparkContext.parallelize(Seq(sql), 1).mapPartitions { it =>
-      val ser = ExpressionEncoder(RowEncoder.encoderFor(expected)).createSerializer()
-      it.flatMap(s => conn.fetch(0L, s, expected).map(r => ser(r).copy()))
-    }
-  }
 }
 
 /** Task-side wire connection: `fetch` opens a socket ON THE TASK and reads

@@ -34,9 +34,9 @@ import graft.plans.SqlGen.Dialect
 case object PostgresDialect extends Dialect {
   def quote(n: String): String = "\"" + n.replace("\"", "\"\"") + "\""
 
-  /** A remote JDBC backend: subtrees the DSv2 scan surface can express
-    * keep the partitioned parallel read; whole-plan fusion handles the
-    * rest (semi/anti, set ops, DISTINCT aggregates, windows…). */
+  /** A remote backend: a bare chain over one scan keeps the partitioned
+    * parallel read; whole-plan fusion handles the rest (joins, aggregates,
+    * semi/anti, set ops, windows under a reducer…). */
   override def scanPreferred: Boolean = true
   /** Postgres has no TRY_CAST spelling. */
   override def supportsTryCast: Boolean = false

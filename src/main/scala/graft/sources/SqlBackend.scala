@@ -72,28 +72,20 @@ trait SqlBackend extends Serializable {
     * by materialized data: it ships inside every InputPartition. */
   def connection: SqlConnection
   /** Whole-query execution returning a distributed handle — the analog of
-    * `DatabaseExec` streaming Arrow batches (`src/physical_plan.rs:28-132`). */
-  def executeSqlToRdd(sql: String, expected: StructType): RDD[InternalRow]
-
-  /** N disjoint backend queries as one N-partition read — the PARALLEL
-    * form of [[executeSqlToRdd]] for fused queries the pushdown rule could
-    * slice (window-partition alignment, [[graft.plans.SqlPushdownRule]]):
-    * each task opens its own connection and streams one slice, exactly the
-    * partitioned-scan execution model. Default rides [[connection]]
-    * task-side; in-process doubles whose fetches must not run inside tasks
-    * keep the single-stream path (the pushdown rule only slices
-    * scanPreferred backends, which stream task-side by construction). */
+    * `DatabaseExec` streaming Arrow batches (`src/physical_plan.rs:28-132`):
+    * N disjoint backend queries (one fused query, or the slices the
+    * pushdown rule cut from it, [[graft.plans.SqlPushdownRule]]) as one
+    * N-partition read. Each task opens its own connection through
+    * [[connection]] and streams one query, exactly the partitioned-scan
+    * execution model. */
   def executeSqlsToRdd(sqls: Seq[String], expected: StructType): RDD[InternalRow] = {
     require(sqls.nonEmpty, "executeSqlsToRdd needs at least one query")
-    if (sqls.size == 1) executeSqlToRdd(sqls.head, expected)
-    else {
-      val conn = connection
-      SparkSession.active.sparkContext.parallelize(sqls, sqls.size).mapPartitions { it =>
-        val ser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-          org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(expected))
-          .createSerializer()
-        it.flatMap(q => conn.fetch(0L, q, expected).map(r => ser(r).copy()))
-      }
+    val conn = connection
+    SparkSession.active.sparkContext.parallelize(sqls, sqls.size).mapPartitions { it =>
+      val ser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
+        org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(expected))
+        .createSerializer()
+      it.flatMap(q => conn.fetch(0L, q, expected).map(r => ser(r).copy()))
     }
   }
 }
@@ -367,13 +359,18 @@ class SparkViewBackend(dir: String) extends SqlBackend {
     executeSql(sql)
     rowCounts.clear()
   }
-  override def executeSqlToRdd(sql: String, expected: StructType): RDD[InternalRow] = {
-    val df = session.sql(sql)
-    // types, not just arity: InternalRows decoded against a mismatched
-    // schema read wrong offsets/widths — silent corruption, not an error
-    require(df.schema.map(_.dataType) == expected.map(_.dataType),
-      s"backend schema ${df.schema.map(_.dataType).mkString(",")} != " +
-        s"expected ${expected.map(_.dataType).mkString(",")} for: $sql")
-    df.queryExecution.toRdd
+  /** Each query runs as the backend session's own plan, never as a task-
+    * side fetch (see [[ViewBackendConnection]]). */
+  override def executeSqlsToRdd(sqls: Seq[String], expected: StructType): RDD[InternalRow] = {
+    val rdds = sqls.map { sql =>
+      val df = session.sql(sql)
+      // types, not just arity: InternalRows decoded against a mismatched
+      // schema read wrong offsets/widths — silent corruption, not an error
+      require(df.schema.map(_.dataType) == expected.map(_.dataType),
+        s"backend schema ${df.schema.map(_.dataType).mkString(",")} != " +
+          s"expected ${expected.map(_.dataType).mkString(",")} for: $sql")
+      df.queryExecution.toRdd
+    }
+    if (rdds.size == 1) rdds.head else session.sparkContext.union(rdds)
   }
 }

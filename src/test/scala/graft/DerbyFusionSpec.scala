@@ -9,12 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{GraftExtensions, PushedSqlExec}
 
-/** Whole-plan fusion against a LIVE embedded Derby backend — the shapes the
-  * DSv2 scan surface cannot push (Spark's connector JoinType enum stops at
-  * INNER/LEFT/RIGHT, so semi/anti joins can never reach
-  * `SupportsPushDownJoin`): semi/anti joins render as (NOT) EXISTS and — with
-  * any aggregate above them — collapse into ONE backend query, while shapes
-  * the scan surface already expresses (equi-joins, basic aggregates) keep
+/** Whole-plan fusion against a LIVE embedded Derby backend — the only way a
+  * join or an aggregate reaches it (the DSv2 scan takes neither): equi-
+  * and semi/anti joins (rendered as (NOT) EXISTS) with any aggregate above
+  * them collapse into ONE backend query, a bare chain over one scan keeps
   * the partitioned parallel scan path, and constructs Derby lacks (FULL
   * JOIN, ROUND) stay in Spark. The reference REJECTS semi/anti outright
   * (`src/parser.rs:1180-1190`) — this surface is beyond-reference.
@@ -93,15 +91,11 @@ class DerbyFusionSpec extends AnyFunSuite {
     assert(row.getLong(1) == hits.sum.toLong)
   }
 
-  test("COUNT(DISTINCT) directly over a table pushes SCAN-level, one query") {
-    // Spark's complete aggregate pushdown already carries the distinct
-    // flag, so this never needs whole-plan fusion — and must not get it
-    // (the scan path keeps statistics + runtime-filter support)
+  test("COUNT(DISTINCT) directly over a table fuses into one backend query") {
     val df = remote("emp").agg(countDistinct(col("dept")).as("n"))
-    assert(pushed(df).isEmpty, df.queryExecution.executedPlan.toString)
-    val s = scans(df)
-    assert(s.size == 1 && s.head.toString.contains("COUNT(DISTINCT"),
-      df.queryExecution.executedPlan.toString)
+    val p = pushed(df)
+    assert(p.size == 1 && scans(df).isEmpty, df.queryExecution.executedPlan.toString)
+    assert(p.head.sql.contains("COUNT(DISTINCT"), p.head.sql)
     assert(df.collect().head.getLong(0) == 5L)
   }
 
@@ -116,52 +110,26 @@ class DerbyFusionSpec extends AnyFunSuite {
     assert(rows.count(_.isNullAt(1)) == 2) // 3,4 NULL-extended
   }
 
-  /** Runs `f` with DSv2 join pushdown set as given (the shared test
-    * session leaves it at Spark's default, off; `Engine.create` turns it
-    * on). */
-  private def withJoinPushdown[A](on: Boolean)(f: => A): A = {
-    val key = "spark.sql.optimizer.datasourceV2JoinPushdown"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, on.toString)
-    try f finally spark.conf.set(key, prev)
-  }
-
   private val salByDname = Map(
     "eng" -> (1 to 40).filter(_ % 5 == 0).map(_ * 10.0).sum,
     "ops" -> (1 to 40).filter(_ % 5 == 1).map(_ * 10.0).sum,
     "fin" -> (1 to 40).filter(_ % 5 == 2).map(_ * 10.0).sum)
 
-  test("scan-expressible shapes keep the partitioned scan path, not fusion") {
-    // join pushdown on, as Engine.create ships it: the scan absorbs the
-    // equi-join and the aggregate above it, so nothing is left to fuse
-    withJoinPushdown(on = true) {
-      val e = remote("emp"); val d = remote("dep")
-      val df = e.join(d, e("dept") === d("id"))
-        .groupBy(col("dname")).agg(sum(col("sal")).as("s"))
-      assert(pushed(df).isEmpty,
-        "equi-join + basic agg belongs to the DSv2 scan path:\n" +
-          df.queryExecution.executedPlan)
-      assert(df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == salByDname)
-    }
-  }
-
   test("a join + aggregate the scan declined fuses into one backend query") {
-    // join pushdown off: the scan declines the join, so the join and the
-    // aggregate above it are left over the two scans and fuse whole
-    withJoinPushdown(on = false) {
-      val e = remote("emp"); val d = remote("dep")
-      val df = e.join(d, e("dept") === d("id"))
-        .groupBy(col("dname")).agg(sum(col("sal")).as("s"))
-      val p = pushed(df)
-      assert(p.size == 1 && scans(df).isEmpty, df.queryExecution.executedPlan.toString)
-      assert(p.head.sql.contains(" JOIN ") && p.head.sql.contains("GROUP BY"), p.head.sql)
-      assert(df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == salByDname)
-    }
+    // the scan takes no join and no aggregate, so both are left over the
+    // two scans and fuse whole
+    val e = remote("emp"); val d = remote("dep")
+    val df = e.join(d, e("dept") === d("id"))
+      .groupBy(col("dname")).agg(sum(col("sal")).as("s"))
+    val p = pushed(df)
+    assert(p.size == 1 && scans(df).isEmpty, df.queryExecution.executedPlan.toString)
+    assert(p.head.sql.contains(" JOIN ") && p.head.sql.contains("GROUP BY"), p.head.sql)
+    assert(df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == salByDname)
   }
 
   test("an aggregate over an expression the scan declined fuses into one query") {
-    // the scan's aggregate pushdown takes bare columns only, so
-    // SUM(sal * (1 - bonus)) stays above the scan; the rule fuses it
+    // the scan takes no aggregate, so SUM(sal * (1 - bonus)) stays above
+    // the scan; the rule fuses it
     val df = remote("emp").groupBy(col("dept"))
       .agg(sum(col("sal") * (lit(1) - col("bonus"))).as("s"))
     val p = pushed(df)
@@ -176,8 +144,7 @@ class DerbyFusionSpec extends AnyFunSuite {
 
   test("a same-backend join carrying a dynamic-pruning filter fuses without it") {
     // the aggregated side keeps its HAVING-style filter in Spark, which is
-    // what makes dynamic pruning plant a runtime filter on the dep scan;
-    // the scan cannot join an aggregated side, so the join is left over
+    // what makes dynamic pruning plant a runtime filter on the dep scan
     def query(s: org.apache.spark.sql.SparkSession) = {
       def rd(t: String) = s.read.format("graft-sqldb").option("url", Url)
         .option("table", t).load()

@@ -28,18 +28,20 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("the product-default config answers a catalog join+aggregate correctly") {
-    // s31's shape under Engine.create's defaults: DSv2 join pushdown ON
-    // (the engine enables it) coexisting with the whole-plan SqlPushdownRule
+    // s31's shape under Engine.create's defaults: the whole-plan
+    // SqlPushdownRule fuses the join and the aggregate into one query
     val spark = Engine.create(master = "local[4]")
     Engine.attach(spark, TestSpark.Sf0001)
-    assert(spark.conf.get("spark.sql.optimizer.datasourceV2JoinPushdown") == "true")
-    val got = spark.sql(
+    val df = spark.sql(
       """SELECT o_orderpriority, COUNT(*) AS n, SUM(l_quantity) AS sum_qty
         |FROM graft_db.main.lineitem JOIN graft_db.main.orders
         |  ON l_orderkey = o_orderkey
         |WHERE l_shipdate > TIMESTAMP '1995-01-01 00:00:00'
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(df.queryExecution.executedPlan.collect {
+      case p: graft.plans.PushedSqlExec => p
+    }.size == 1, df.queryExecution.executedPlan.toString)
+    val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     val li = Tables.load(spark, TestSpark.Sf0001, "lineitem")
     val o = Tables.load(spark, TestSpark.Sf0001, "orders")
     import org.apache.spark.sql.functions._

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{GraftExtensions, PushedSqlQuery}
+import graft.plans.{GraftExtensions, PushedSqlExec, PushedSqlQuery}
 import graft.sources.GraftScan
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
@@ -25,6 +25,20 @@ class FederationSpec extends AnyFunSuite {
     }
     assert(scans.nonEmpty, "no graft scan in plan:\n" + df.queryExecution.executedPlan)
     scans.head
+  }
+
+  /** The one fused backend query `df` executes (subqueries included); no
+    * graft scan may be left beside it. */
+  private def fused(df: DataFrame): PushedSqlExec = {
+    val nodes = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) { case x => x }
+    val pushed = nodes.collect { case x: PushedSqlExec => x }
+    val scans = nodes.collect {
+      case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
+    }
+    assert(pushed.size == 1 && scans.isEmpty,
+      "expected one fused backend query:\n" + df.queryExecution.executedPlan)
+    pushed.head
   }
 
   test("DSv2 read returns the same rows as a direct parquet read") {
@@ -168,8 +182,12 @@ class FederationSpec extends AnyFunSuite {
     val parts = graftScan(df).planInputPartitions()
       .map(_.asInstanceOf[graft.sources.GraftInputPartition])
     assert(parts.length > 1)
-    parts.foreach { p =>
-      assert(p.sql.contains("`o_orderkey` >=") && p.sql.contains("`o_orderkey` <"), p.sql)
+    // unbounded outer edges: the first range has no lower bound (and
+    // takes NULL keys), the last no upper bound, every other range both
+    parts.zipWithIndex.foreach { case (p, i) =>
+      assert(p.sql.contains("`o_orderkey` >=") == (i > 0), p.sql)
+      assert(p.sql.contains("`o_orderkey` <") == (i < parts.length - 1), p.sql)
+      assert(p.sql.contains("`o_orderkey` IS NULL") == (i == 0), p.sql)
       assert(!p.sql.contains("ORDER BY") && !p.sql.contains("OFFSET"), p.sql)
     }
     // disjoint ranges cover everything exactly once
@@ -191,16 +209,17 @@ class FederationSpec extends AnyFunSuite {
   }
 
   test("aggregate pushdown: whole GROUP BY answered by the backend") {
+    GraftExtensions.install(spark)
     val df = remote("lineitem")
       .filter(col("l_quantity") > 10)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sq"),
         max(col("l_extendedprice")).as("mx"))
-    val scan = graftScan(df)
-    assert(scan.renderedSql.contains("GROUP BY"), scan.renderedSql)
-    assert(scan.renderedSql.contains("COUNT(*)"))
-    assert(scan.renderedSql.contains("SUM(`l_quantity`)"))
-    assert(scan.renderedSql.contains("WHERE"))
+    val sql = fused(df).sql
+    assert(sql.contains("GROUP BY"), sql)
+    assert(sql.contains("COUNT(*)"), sql)
+    assert(sql.contains("SUM("), sql)
+    assert(sql.contains("(`l_quantity` > 10.0)"), sql) // the scan's own filter
     // no Spark-side hash aggregate remains (complete pushdown)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("HashAggregate"), plan)
@@ -214,14 +233,10 @@ class FederationSpec extends AnyFunSuite {
   }
 
   test("unsupported aggregate (avg distinct over expression) stays in Spark") {
-    // the contract under test is the SCAN level: DSv2 aggregate pushdown
-    // declines expression arguments, so a HashAggregate must remain. The
-    // whole-plan FUSION rule can legally absorb this aggregate instead
-    // (SqlGen renders AVG over expressions) — whether it is installed on
-    // the shared session depends on which suites ran first, which made
-    // this assertion order-dependent (pre-round-12 latent flake).
-    // Suspend the fusion rule for the probe's scope so the test pins the
-    // scan-level behavior deterministically.
+    // the contract under test is the SCAN level: the scan takes no
+    // aggregate, so without the fusion rule a HashAggregate must remain.
+    // Whether the rule is installed on the shared session depends on
+    // which suites ran first, so it is suspended for the probe's scope.
     val prevOpt = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
       prevOpt.filterNot(_ == graft.plans.SqlPushdownRule)
@@ -652,46 +667,70 @@ class FederationSpec extends AnyFunSuite {
   }
 
   test("AVG over a double column pushes as a complete backend aggregate") {
+    GraftExtensions.install(spark)
     val df = remote("orders").groupBy("o_orderpriority")
       .agg(avg("o_totalprice").as("ap"), count(lit(1)).as("n"))
-    val scan = graftScan(df)
-    assert(scan.renderedSql.contains("AVG(`o_totalprice`)"), scan.renderedSql)
-    assert(scan.renderedSql.contains("GROUP BY `o_orderpriority`"), scan.renderedSql)
+    val sql = fused(df).sql
+    assert(sql.contains("AVG("), sql)
+    assert(sql.contains("GROUP BY"), sql)
     val want = Tables.load(spark, TestSpark.Sf0001, "orders")
       .groupBy("o_orderpriority").agg(avg("o_totalprice").as("ap"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val got = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got.keySet == want.keySet)
     got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-9, k) }
-    // AVG over an integer column must NOT push (backend arithmetic
-    // diverges); Spark computes it from its own partial aggregates
+    // AVG over an integer column fuses too (the dialect owns the
+    // argument's widening) and answers like Spark's own
     val intAvg = remote("orders").groupBy("o_orderpriority")
       .agg(avg("o_custkey").as("ac"))
-    assert(!graftScan(intAvg).renderedSql.contains("AVG"),
-      graftScan(intAvg).renderedSql)
-    intAvg.collect() // still answers
+    val intWant = Tables.load(spark, TestSpark.Sf0001, "orders")
+      .groupBy("o_orderpriority").agg(avg("o_custkey").as("ac"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val intGot = intAvg.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(intGot.keySet == intWant.keySet)
+    intGot.foreach { case (k, v) => assert(math.abs(v - intWant(k)) < 1e-9, k) }
   }
 
-  test("DSv2 join pushdown collapses a join into one scan on the double too") {
-    val prevJoinConf = spark.conf.get("spark.sql.optimizer.datasourceV2JoinPushdown")
-    spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
-    try {
-      val n = remote("nation")
-      val r = remote("region")
-      val joined = n.join(r, n("n_regionkey") === r("r_regionkey"))
-        .select("n_name", "r_name")
-      val scans = joined.queryExecution.executedPlan.collect {
-        case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] =>
-          b.scan.asInstanceOf[GraftScan]
-      }
-      assert(scans.size == 1, joined.queryExecution.executedPlan.toString)
-      assert(scans.head.renderedSql.contains(" JOIN "), scans.head.renderedSql)
-      val got = joined.collect().map(_.toString).sorted.toSeq
-      val want = Tables.load(spark, TestSpark.Sf0001, "nation")
-        .join(Tables.load(spark, TestSpark.Sf0001, "region"), col("n_regionkey") === col("r_regionkey"))
-        .select("n_name", "r_name").collect().map(_.toString).sorted.toSeq
-      assert(got == want)
-    } finally spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", prevJoinConf)
+  test("a same-backend join collapses into one fused backend query on the double too") {
+    GraftExtensions.install(spark)
+    val n = remote("nation")
+    val r = remote("region")
+    val joined = n.join(r, n("n_regionkey") === r("r_regionkey"))
+      .select("n_name", "r_name")
+    val sql = fused(joined).sql
+    assert(sql.contains(" JOIN "), sql)
+    val got = joined.collect().map(_.toString).sorted.toSeq
+    val want = Tables.load(spark, TestSpark.Sf0001, "nation")
+      .join(Tables.load(spark, TestSpark.Sf0001, "region"), col("n_regionkey") === col("r_regionkey"))
+      .select("n_name", "r_name").collect().map(_.toString).sorted.toSeq
+    assert(got == want)
+  }
+
+  test("an IN or scalar subquery the scan declined fuses with its outer query into one backend query") {
+    // the subquery plan is optimized, and fused, in its own run before
+    // the outer plan; the outer fusion then reads it as a derived table
+    GraftExtensions.install(spark)
+    remote("orders").createOrReplaceTempView("fed_sq_orders")
+    remote("customer").createOrReplaceTempView("fed_sq_customer")
+    Tables.load(spark, TestSpark.Sf0001, "orders").createOrReplaceTempView("loc_sq_orders")
+    Tables.load(spark, TestSpark.Sf0001, "customer").createOrReplaceTempView("loc_sq_customer")
+    val queries = Seq(
+      """SELECT o_orderpriority, COUNT(*) AS n FROM %1$s_orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM %1$s_customer GROUP BY c_custkey
+        |                    HAVING SUM(c_acctbal * 2) > 5000)
+        |GROUP BY o_orderpriority""".stripMargin,
+      """SELECT o_orderpriority, COUNT(*) AS n FROM %1$s_orders
+        |GROUP BY o_orderpriority
+        |HAVING AVG(o_custkey) > (SELECT AVG(c_nationkey) FROM %1$s_customer)""".stripMargin)
+    queries.foreach { q =>
+      val df = spark.sql(q.format("fed_sq"))
+      val sql = fused(df).sql
+      // the subquery's table and the outer one, in the same statement
+      assert(sql.contains("FROM `customer`") && sql.contains("FROM `orders`"), sql)
+      val want = spark.sql(q.format("loc_sq")).collect().map(_.toString).sorted.toSeq
+      assert(want.nonEmpty)
+      assert(df.collect().map(_.toString).sorted.toSeq == want)
+    }
   }
 
   test("null-safe join condition fuses into one backend query") {

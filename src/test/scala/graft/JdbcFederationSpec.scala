@@ -52,6 +52,17 @@ class JdbcFederationSpec extends AnyFunSuite {
     scans.head
   }
 
+  /** The one fused backend query `df` executes; no graft scan may be left
+    * beside it. */
+  private def fused(df: DataFrame): graft.plans.PushedSqlExec = {
+    val plan = df.queryExecution.executedPlan
+    val pushed = plan.collect { case p: graft.plans.PushedSqlExec => p }
+    assert(pushed.size == 1 && plan.collect {
+      case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
+    }.isEmpty, "expected one fused backend query:\n" + plan)
+    pushed.head
+  }
+
   private def backend = JdbcBackend.forUrl(Url)
 
   test("catalog discovery: tables, schema, primary key from JDBC metadata") {
@@ -80,7 +91,12 @@ class JdbcFederationSpec extends AnyFunSuite {
     val parts = graftScan(df).planInputPartitions()
       .map(_.asInstanceOf[graft.sources.GraftInputPartition])
     assert(parts.length > 1)
-    parts.foreach(p => assert(p.sql.contains("\"id\" >=") && p.sql.contains("\"id\" <"), p.sql))
+    // unbounded outer edges: the first range has no lower bound, the last
+    // no upper bound, every other range both
+    parts.zipWithIndex.foreach { case (p, i) =>
+      assert(p.sql.contains("\"id\" >=") == (i > 0), p.sql)
+      assert(p.sql.contains("\"id\" <") == (i < parts.length - 1), p.sql)
+    }
     assert(df.rdd.getNumPartitions == parts.length)
     assert(df.select(sum("id")).collect().head.getLong(0) == (1 to 101).sum.toLong)
   }
@@ -165,21 +181,23 @@ class JdbcFederationSpec extends AnyFunSuite {
   }
 
   test("aggregate pushdown: whole GROUP BY answered by Derby") {
+    graft.plans.GraftExtensions.install(spark)
     val df = remote("acct").groupBy("flag").agg(count(lit(1)).as("n"))
-    val sql = graftScan(df).renderedSql
-    assert(sql.contains("COUNT(*)") && sql.contains("GROUP BY \"flag\""), sql)
+    val sql = fused(df).sql
+    assert(sql.contains("COUNT(*)") && sql.contains("GROUP BY"), sql)
     val got = df.collect().map(r =>
       (if (r.isNullAt(0)) None else Some(r.getBoolean(0))) -> r.getLong(1)).toMap
     assert(got == Map(Some(true) -> 50L, Some(false) -> 50L, None -> 1L))
   }
 
-  test("statistical aggregates push scan-level where the dialect has them") {
+  test("statistical aggregates push to the backend where the dialect has them") {
     // Derby 10.16 has the STDDEV/VAR family (probed) but not CORR/COVAR —
     // the per-name dialect gate decides per aggregate
+    graft.plans.GraftExtensions.install(spark)
     val df = remote("acct").agg(stddev_samp(col("bal")).as("sd"),
       var_pop(col("bal")).as("vp"))
-    val sql = graftScan(df).renderedSql
-    assert(sql.contains("STDDEV_SAMP(\"bal\")") && sql.contains("VAR_POP(\"bal\")"), sql)
+    val sql = fused(df).sql
+    assert(sql.contains("STDDEV_SAMP(") && sql.contains("VAR_POP("), sql)
     val want = spark.range(1, 101).select((col("id") * 1.5).as("bal"))
       .agg(stddev_samp(col("bal")), var_pop(col("bal"))).collect().head
     val got = df.collect().head
@@ -335,123 +353,83 @@ class JdbcFederationSpec extends AnyFunSuite {
     } finally backend.executeUpdate("""DROP TABLE "sak"""")
   }
 
-  test("DSv2 join pushdown: the whole join (and the aggregate above it) runs in Derby") {
+  test("join fusion: the whole join (and the aggregate above it) runs in Derby") {
+    graft.plans.GraftExtensions.install(spark)
     backend.executeUpdate(
       """CREATE TABLE "bonus" ("id" INTEGER NOT NULL PRIMARY KEY, "extra" DOUBLE)""")
     (1 to 50).grouped(25).foreach { g =>
       backend.executeUpdate(
         s"""INSERT INTO "bonus" VALUES ${g.map(i => s"($i, ${i * 0.25})").mkString(", ")}""")
     }
-    val prevJoinConf = spark.conf.get("spark.sql.optimizer.datasourceV2JoinPushdown")
-    spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
+    // plain join: ONE backend query joins the two scans' subqueries
+    // ("id" collides across sides — exercises the aliasing)
+    val acct = remote("acct")
+    val bonus = remote("bonus")
+    val joined = acct.join(bonus, acct("id") === bonus("id"))
+    assert(fused(joined).sql.contains(" JOIN "), fused(joined).sql)
+    assert(joined.count() == 50)
+
+    // join + filter + aggregate: one Derby query answers all of it
+    val agg = acct.join(bonus, acct("id") === bonus("id"))
+      .filter(col("bal") > 10.0)
+      .groupBy("flag").agg(count(lit(1)).as("n"))
+    val sql = fused(agg).sql
+    assert(sql.contains(" JOIN ") && sql.contains("GROUP BY"), sql)
+    val got = agg.collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    // ids 7..50 (bal=1.5*i>10 => i>=7), evens have flag=true
+    val want = (7 to 50).groupBy(_ % 2 == 0).map { case (k, v) => k -> v.size.toLong }
+    assert(got == want)
+
+    // left join NULL-extends the right side without corrupting decode
+    val left = acct.join(bonus, acct("id") === bonus("id"), "left")
+    assert(left.count() == 101)
+    assert(left.filter(col("extra").isNull).count() == 51)
+
+    // top-N above the join: ORDER BY + FETCH land in the SAME backend
+    // query as the join
+    val top = acct.join(bonus, acct("id") === bonus("id"))
+      .orderBy(col("extra").desc).limit(4)
+    val topSql = fused(top).sql
+    assert(topSql.contains(" JOIN "), topSql)
+    assert(topSql.contains("ORDER BY"), topSql)
+    assert(topSql.contains("FETCH NEXT 4 ROWS ONLY"), topSql)
+    assert(top.select("extra").collect().map(_.getDouble(0)).toSeq ==
+      Seq(12.5, 12.25, 12.0, 11.75))
+
+    // a RIGHT join keeps every right row exactly once
+    val right = acct.join(bonus, acct("id") === bonus("id"), "right")
+    assert(right.count() == 50)
+    assert(fused(right).sql.contains("RIGHT OUTER JOIN"), fused(right).sql)
+    val rIds = right.select(bonus("id")).collect().map(_.getInt(0)).sorted.toSeq
+    assert(rIds == (1 to 50), "right join dropped/duplicated rows")
+
+    // 3-table chain: both joins in one backend query
+    backend.executeUpdate(
+      """CREATE TABLE "tier" ("id" INTEGER NOT NULL PRIMARY KEY, "t" INTEGER)""")
     try {
-      // plain join: collapses to ONE backend scan whose SQL joins the two
-      // subqueries ("id" collides across sides — exercises the aliasing)
-      val acct = remote("acct")
-      val bonus = remote("bonus")
-      val joined = acct.join(bonus, acct("id") === bonus("id"))
-      val scans = joined.queryExecution.executedPlan.collect {
-        case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b.scan.asInstanceOf[GraftScan]
-      }
-      assert(scans.size == 1, joined.queryExecution.executedPlan.toString)
-      assert(scans.head.renderedSql.contains(" JOIN "), scans.head.renderedSql)
-      assert(joined.count() == 50)
-
-      // join + filter + aggregate: one Derby query answers all of it
-      val agg = acct.join(bonus, acct("id") === bonus("id"))
-        .filter(col("bal") > 10.0)
-        .groupBy("flag").agg(count(lit(1)).as("n"))
-      val aggScan = graftScan(agg)
-      val sql = aggScan.renderedSql
-      assert(sql.contains(" JOIN ") && sql.contains("GROUP BY"), sql)
-      val got = agg.collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      // ids 7..50 (bal=1.5*i>10 => i>=7), evens have flag=true
-      val want = (7 to 50).groupBy(_ % 2 == 0).map { case (k, v) => k -> v.size.toLong }
-      assert(got == want)
-
-      // left join NULL-extends the right side without corrupting decode
-      val left = acct.join(bonus, acct("id") === bonus("id"), "left")
-      assert(left.count() == 101)
-      assert(left.filter(col("extra").isNull).count() == 51)
-
-      // the pushed join READS IN PARALLEL: the left base table's key range
-      // slices the join fragment, each slice joining independently
-      val parts = graftScan(joined).planInputPartitions()
-        .map(_.asInstanceOf[graft.sources.GraftInputPartition])
-      assert(parts.length > 1, "pushed join did not split")
-      parts.foreach(p => assert(p.sql.contains("\"id\" >=") && p.sql.contains(" JOIN "), p.sql))
-
-      // top-N above the join: ORDER BY + FETCH land in the SAME backend
-      // query as the join (single partition by construction)
-      val top = acct.join(bonus, acct("id") === bonus("id"))
-        .orderBy(col("extra").desc).limit(4)
-      val topScan = graftScan(top)
-      assert(topScan.renderedSql.contains(" JOIN "), topScan.renderedSql)
-      assert(topScan.renderedSql.contains("ORDER BY \"extra\" DESC"), topScan.renderedSql)
-      assert(topScan.renderedSql.contains("FETCH NEXT 4 ROWS ONLY"), topScan.renderedSql)
-      assert(top.select("extra").collect().map(_.getDouble(0)).toSeq ==
-        Seq(12.5, 12.25, 12.0, 11.75))
-
-      // a RIGHT join must NOT split on the LEFT key (unmatched right rows
-      // would repeat per slice) — it splits on the RIGHT table's key
-      // instead: every right row lands in exactly one slice, and each
-      // slice right-joins the full left side, so the union is exact
-      val right = acct.join(bonus, acct("id") === bonus("id"), "right")
-      assert(right.count() == 50)
-      val rScans = right.queryExecution.executedPlan.collect {
-        case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b.scan.asInstanceOf[GraftScan]
-      }
-      assert(rScans.size == 1 && rScans.head.joinedFrom.isDefined,
-        "RIGHT join did not push: " + right.queryExecution.executedPlan)
-      val rParts = rScans.head.planInputPartitions()
-        .map(_.asInstanceOf[graft.sources.GraftInputPartition])
-      assert(rParts.length > 1, "pushed RIGHT join did not split")
-      rParts.foreach(p =>
-        assert(p.sql.contains("RIGHT JOIN") && p.sql.contains("\"id\" >="), p.sql))
-      val rIds = right.select(bonus("id")).collect().map(_.getInt(0)).sorted.toSeq
-      assert(rIds == (1 to 50), "right-key slices dropped/duplicated rows")
-
-      // 3-table chain: the split threads through nested fragments to the
-      // innermost left base table
-      backend.executeUpdate(
-        """CREATE TABLE "tier" ("id" INTEGER NOT NULL PRIMARY KEY, "t" INTEGER)""")
-      try {
-        backend.executeUpdate(s"""INSERT INTO "tier" VALUES ${
-          (1 to 30).map(i => s"($i, ${i % 3})").mkString(", ")}""")
-        val tier = remote("tier")
-        val chain = acct.join(bonus, acct("id") === bonus("id"))
-          .join(tier, bonus("id") === tier("id"))
-        val cScans = chain.queryExecution.executedPlan.collect {
-          case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b.scan.asInstanceOf[GraftScan]
-        }
-        assert(cScans.size == 1, chain.queryExecution.executedPlan.toString)
-        assert(chain.count() == 30)
-        val cParts = cScans.head.planInputPartitions()
-          .map(_.asInstanceOf[graft.sources.GraftInputPartition])
-        assert(cParts.length > 1, "nested pushed join did not split")
-        // two JOINs in every partition query, range predicate included
-        cParts.foreach { p =>
-          assert(p.sql.sliding(6).count(_ == " JOIN ") == 2, p.sql)
-          assert(p.sql.contains("\"id\" >="), p.sql)
-        }
-        val ids = chain.select(acct("id")).collect().map(_.getInt(0)).sorted.toSeq
-        assert(ids == (1 to 30).toSeq)
-      } finally backend.executeUpdate("""DROP TABLE "tier"""")
-    } finally spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", prevJoinConf)
+      backend.executeUpdate(s"""INSERT INTO "tier" VALUES ${
+        (1 to 30).map(i => s"($i, ${i % 3})").mkString(", ")}""")
+      val tier = remote("tier")
+      val chain = acct.join(bonus, acct("id") === bonus("id"))
+        .join(tier, bonus("id") === tier("id"))
+      val chainSql = fused(chain).sql
+      assert(chainSql.sliding(6).count(_ == " JOIN ") == 2, chainSql)
+      assert(chain.count() == 30)
+      val ids = chain.select(acct("id")).collect().map(_.getInt(0)).sorted.toSeq
+      assert(ids == (1 to 30).toSeq)
+    } finally backend.executeUpdate("""DROP TABLE "tier"""")
   }
 
   test("FULL joins decompose into a LEFT join plus a NOT-EXISTS anti join on Derby") {
     // FULL = (A LEFT JOIN B) ∪ALL (NULLs ++ (B ANTI A)), on a backend
-    // (Derby) that has no FULL JOIN of its own: the scan declines the
-    // FULL join, and the anti branch renders as NOT EXISTS
+    // (Derby) that has no FULL JOIN of its own: the anti branch renders
+    // as NOT EXISTS
     backend.executeUpdate(
       """CREATE TABLE "fl" ("id" INTEGER NOT NULL PRIMARY KEY, "lv" DOUBLE)""")
     backend.executeUpdate(
       """CREATE TABLE "fr" ("rid" INTEGER NOT NULL PRIMARY KEY, "rv" DOUBLE)""")
     val s = TestSpark.spark.newSession()
     graft.plans.GraftExtensions.install(s)
-    val prevJoinConf = s.conf.get("spark.sql.optimizer.datasourceV2JoinPushdown")
-    s.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
     try {
       backend.executeUpdate(s"""INSERT INTO "fl" VALUES ${
         (1 to 100).map(i => s"($i, ${i * 1.0})").mkString(", ")}""")
@@ -483,21 +461,17 @@ class JdbcFederationSpec extends AnyFunSuite {
         (101 to 150).map(i => (-1, i))).sorted
       assert(rows == want, "partition union differs from FULL join semantics")
     } finally {
-      s.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", prevJoinConf)
       backend.executeUpdate("""DROP TABLE "fl"""")
       backend.executeUpdate("""DROP TABLE "fr"""")
     }
   }
 
-  test("pushed-join slicing: a KEYLESS left table splits via ordered windows inside the fragment") {
-    // no PK anywhere: the key-range strategy has nothing to slice on, so
-    // the join falls back to deterministic ORDER BY + OFFSET/FETCH windows
-    // over the left base table INSIDE the join fragment. Duplicate rows
-    // included on purpose: window exactness must hold for multisets.
+  test("a join over KEYLESS tables with duplicate rows fuses multiset-exact") {
+    // no PK anywhere, and duplicate rows on purpose: the fused join must
+    // keep every copy
+    graft.plans.GraftExtensions.install(spark)
     backend.executeUpdate("""CREATE TABLE "nk" ("id" INTEGER NOT NULL, "w" DOUBLE)""")
     backend.executeUpdate("""CREATE TABLE "nkdim" ("id" INTEGER NOT NULL, "lab" VARCHAR(8))""")
-    val prevJoinConf = spark.conf.get("spark.sql.optimizer.datasourceV2JoinPushdown")
-    spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
     try {
       backend.executeUpdate(s"""INSERT INTO "nk" VALUES ${
         ((1 to 40) ++ Seq(5, 5, 17)).map(i => s"($i, ${i * 0.5})").mkString(", ")}""")
@@ -506,25 +480,13 @@ class JdbcFederationSpec extends AnyFunSuite {
       val nk = remote("nk")
       val dim = remote("nkdim")
       val j = nk.join(dim, nk("id") === dim("id"))
-      val scan = graftScan(j)
-      assert(scan.joinedFrom.isDefined, "join did not push")
-      val parts = scan.planInputPartitions()
-        .map(_.asInstanceOf[graft.sources.GraftInputPartition])
-      assert(parts.length > 1, "keyless pushed join did not split")
-      parts.foreach { p =>
-        assert(p.sql.contains(" JOIN "), p.sql)
-        assert(p.sql.contains("OFFSET") || p.sql.contains("FETCH"), p.sql)
-        // the window's sort is table-qualified so a side alias can never
-        // shadow the base column it orders by
-        assert(p.sql.contains("\"nk\".\"id\""), p.sql)
-      }
+      assert(fused(j).sql.contains(" JOIN "), fused(j).sql)
       // multiset-exact union: the duplicated ids join once per copy
       val got = j.select(nk("id"), col("lab")).collect()
         .map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
       val want = ((1 to 40) ++ Seq(5, 5, 17)).sorted.map(i => (i, s"d_$i")).toSeq
       assert(got == want)
     } finally {
-      spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", prevJoinConf)
       backend.executeUpdate("""DROP TABLE "nk"""")
       backend.executeUpdate("""DROP TABLE "nkdim"""")
     }

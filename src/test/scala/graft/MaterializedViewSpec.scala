@@ -484,12 +484,35 @@ class MaterializedViewSpec extends AnyFunSuite {
       declines(_.orderBy("l_orderkey", "l_linenumber").limit(50)
         .groupBy("l_returnflag").agg(count(lit(1)).as("n"), sum(discPrice).as("s")),
         _.limit.contains(50))
-      // an aggregated scan: one row per (flag, linenumber) group
-      declines(_.groupBy("l_returnflag", "l_linenumber")
+      // a nested aggregate: the scan takes no aggregate, the optimizer
+      // prunes the SUM nothing reads, and the view answers the inner
+      // group-by over its two dims
+      def nested(t: DataFrame): DataFrame = t.groupBy("l_returnflag", "l_linenumber")
         .agg(sum("l_quantity").as("q"))
-        .groupBy("l_returnflag").agg(count(lit(1)).as("n")),
-        _.aggregation.isDefined)
+        .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
+      val df = nested(fed)
+      assert(scansView(df), df.queryExecution.optimizedPlan.toString)
+      assert(rounded(df) == rounded(baseline(nested)))
     } finally MaterializedViews.drop("spec_fed_decline")
+  }
+
+  test("federated base: a plain-column SUM roll-up is served by the view") {
+    // the scan takes no aggregate, so the Aggregate node the rewrite
+    // matches is still in the plan with the graft rules installed
+    val s = TestSpark.spark.newSession()
+    GraftExtensions.install(s)
+    val fed = fedLineitem(s)
+    MaterializedViews.ensure(s, "spec_fed_sum", fed,
+      dims = Seq("l_returnflag", "l_linestatus"),
+      measures = Seq("qty" -> col("l_quantity")))
+    try {
+      def q(t: DataFrame): DataFrame =
+        t.groupBy("l_returnflag").agg(sum("l_quantity").as("s"))
+      val df = q(fed)
+      assert(scansView(df), df.queryExecution.optimizedPlan.toString)
+      assert(graftScans(df).isEmpty, df.queryExecution.optimizedPlan.toString)
+      assert(rounded(df) == rounded(baseline(q)))
+    } finally MaterializedViews.drop("spec_fed_sum")
   }
 
   test("oracle entry mv_rollup_fed serves from the view and matches the parquet baseline") {

@@ -113,7 +113,7 @@ class PgAuthCancelSpec extends AnyFunSuite {
       val backend = PgWireBackend.forAddress(s"127.0.0.1:${srv.port}/testdb")
       // drained: full collect → NO cancel
       val before1 = srv.eventLog.size
-      val all = backend.executeSqlToRdd("SELECT all_rows", schema).collect()
+      val all = backend.executeSqlsToRdd(Seq("SELECT all_rows"), schema).collect()
       assert(all.length == 200)
       assert(srv.eventLog.drop(before1).exists(_.startsWith("COPY (SELECT all_rows)")))
       Thread.sleep(100)
@@ -121,7 +121,7 @@ class PgAuthCancelSpec extends AnyFunSuite {
         "a fully-drained stream must not fire a cancel")
       // abandoned: take(1) ends the task mid-stream → CancelRequest
       val before2 = srv.eventLog.size
-      val one = backend.executeSqlToRdd("SELECT all_rows", schema).take(1)
+      val one = backend.executeSqlsToRdd(Seq("SELECT all_rows"), schema).take(1)
       assert(one.length == 1)
       val cancels = awaitCancelLogged(srv, before2)
       assert(cancels.nonEmpty && cancels.head.contains("MATCH"),

@@ -242,22 +242,20 @@ class PgWindowFusionSpec extends AnyFunSuite {
     // grp spans 1e9..5e9 over 40 rows — uniform strides of that span would
     // pile every row into one or two slices; the quantile path probes the
     // ACTUAL values (ORDER BY grp LIMIT 1 OFFSET i·per) and slices between
-    // them. 3 parts (the shared-scheduler cap — see the header note: N
-    // engine tasks block on sockets while the delegate needs a slot) over
-    // 5 heavy values → distinct cuts, ≥ 2 real slices.
+    // them: 4 parts over 5 heavy values → distinct cuts, ≥ 2 real slices.
+    // The slices run one by one from the driver: as many engine tasks as
+    // local[4] has slots would block on their sockets while the delegate
+    // needs a slot (see the header note).
     val w = Window.partitionBy("grp").orderBy(desc("v"))
-    spark.conf.set("spark.graft.fusion.windowSliceParts", "3")
-    val (p, got) =
-      try {
-        val df = remote("sparse")
-          .select(col("id"), col("grp"), row_number().over(w).as("rn"))
-          .filter(col("rn") <= 2)
-        val p = pushed(df) // forces planning (conf read here)
-        (p, df.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet)
-      } finally spark.conf.unset("spark.graft.fusion.windowSliceParts")
+    val df = remote("sparse")
+      .select(col("id"), col("grp"), row_number().over(w).as("rn"))
+      .filter(col("rn") <= 2)
+    val p = pushed(df)
     assert(p.size == 1)
     assert(p.head.slices.size >= 2,
       s"sparse keys must still slice:\n${p.head.slices.mkString("\n")}")
+    val got = p.head.slices.flatMap(p.head.backend.executeSql)
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
     // the quantile probes traveled the wire (OFFSET index seeks)
     assert(server.eventLog.exists(q =>
       q.contains("ORDER BY \"grp\"") && q.contains("OFFSET")),
@@ -301,20 +299,6 @@ class PgWindowFusionSpec extends AnyFunSuite {
       "forcing slices must run the range probe")
   }
 
-  test("a malformed windowSliceParts value declines slicing instead of throwing (r14)") {
-    spark.conf.set("spark.graft.fusion.windowSliceParts", "banana")
-    try {
-      val w = Window.partitionBy("dept").orderBy(desc("sal"))
-      val df = remote("emp")
-        .select(col("id"), col("dept"), row_number().over(w).as("rn"))
-        .filter(col("rn") <= 2)
-      val p = pushed(df) // must not throw NumberFormatException from the optimizer
-      assert(p.size == 1)
-      // falls back to the DEFAULT parts (4), not to no-slicing
-      assert(p.head.slices.size == 3, p.head.slices.mkString("\n"))
-    } finally spark.conf.unset("spark.graft.fusion.windowSliceParts")
-  }
-
   test("window slicing declines when the partition key does not align") {
     // (a) partition key is on the NON-preserved side of the join path /
     //     non-integral: the window-above-join shape partitions by dname
@@ -335,16 +319,6 @@ class PgWindowFusionSpec extends AnyFunSuite {
     val pe = pushed(dfExpr)
     assert(pe.size == 1 && pe.head.slices.isEmpty,
       "computed partition keys must decline slicing")
-    // (c) turning the knob off keeps the aligned shape single-stream too
-    spark.conf.set("spark.graft.fusion.windowSliceParts", "1")
-    try {
-      val w2 = Window.partitionBy("dept").orderBy(desc("sal"))
-      val df2 = remote("emp")
-        .select(col("id"), col("dept"), row_number().over(w2).as("rn"))
-        .filter(col("rn") <= 2)
-      val p2 = pushed(df2)
-      assert(p2.size == 1 && p2.head.slices.isEmpty)
-    } finally spark.conf.unset("spark.graft.fusion.windowSliceParts")
   }
 
   test("rank and framed running sum fuse with explicit frames under a reducing filter") {
