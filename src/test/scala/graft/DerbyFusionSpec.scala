@@ -115,6 +115,20 @@ class DerbyFusionSpec extends AnyFunSuite {
     "ops" -> (1 to 40).filter(_ % 5 == 1).map(_ * 10.0).sum,
     "fin" -> (1 to 40).filter(_ % 5 == 2).map(_ * 10.0).sum)
 
+  test("scan-expressible shapes keep the partitioned scan path, not fusion") {
+    // a filter + projection over one table is what the DSv2 scan still
+    // expresses, so nothing is left to fuse
+    val df = remote("emp").filter(col("dept") === 2 && col("sal") > 100.0)
+      .select("id", "sal")
+    assert(pushed(df).isEmpty,
+      "a bare chain over one scan belongs to the DSv2 scan path:\n" +
+        df.queryExecution.executedPlan)
+    assert(scans(df).nonEmpty, df.queryExecution.executedPlan.toString)
+    val want = (1 to 40).filter(i => i % 5 == 2 && i * 10.0 > 100.0)
+      .map(i => i -> i * 10.0).toSet
+    assert(df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toSet == want)
+  }
+
   test("a join + aggregate the scan declined fuses into one backend query") {
     // the scan takes no join and no aggregate, so both are left over the
     // two scans and fuse whole
