@@ -27,12 +27,18 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
   * thunk would defeat case-class equality — two logically identical pushed
   * plans (same sql + backend, whose sliceGen is derived deterministically
   * from them) must still compare equal under canonicalization/sameResult
-  * for ReuseExchange/ReuseSubquery to dedup them (r14 advisory). */
+  * for ReuseExchange/ReuseSubquery to dedup them (r14 advisory).
+  *
+  * `estRows` is the fetch-budget estimate of the subtree this leaf
+  * replaced (None = unestimable). The pushdown rule runs to a fixed point,
+  * so a later pass weighs a parent over this leaf by the same estimate it
+  * declined the parent on, instead of treating the leaf as unknown. */
 case class PushedSqlQuery(output: Seq[Attribute], sql: String,
     backend: SqlBackend)(
-    val sliceGen: () => Seq[String] = PushedSqlQuery.noSlices)
+    val sliceGen: () => Seq[String] = PushedSqlQuery.noSlices,
+    val estRows: Option[BigInt] = None)
     extends LeafNode {
-  override def otherCopyArgs: Seq[AnyRef] = sliceGen :: Nil
+  override def otherCopyArgs: Seq[AnyRef] = sliceGen :: estRows :: Nil
   /** LeafNode's default THROWS — without this, any residual Spark operator
     * above the pushed leaf (e.g. a join with a non-graft table) crashes in
     * physical planning when JoinSelection asks for stats. The backend can't

@@ -210,14 +210,16 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     * planner has without NDV/histogram data, accepted here because the
     * strict alternative (multiplying conditioned joins too) would veto
     * virtually every multi-table fusion the gate exists to permit.
-    * None as soon as any leaf or node is unestimable — the caller then
-    * falls back to the structural gates alone. */
+    * A leaf fused in an earlier pass gives the estimate of the subtree it
+    * replaced. None as soon as any leaf or node is unestimable — the
+    * caller then falls back to the structural gates alone. */
   private def estimateRows(p: LogicalPlan): Option[BigInt] = {
     import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
     import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
     import org.apache.spark.sql.catalyst.plans.logical._
     def est(q: LogicalPlan): Option[BigInt] = q match {
       case leaf: DataSourceV2ScanRelation => leafRows(leaf).map(BigInt(_))
+      case fused: PushedSqlQuery => fused.estRows
       case Project(_, c) => est(c)
       case SubqueryAlias(_, c) => est(c)
       case Filter(_, c) => est(c)
@@ -259,7 +261,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     * (`spark.graft.fusion.maxFetchRows`, default 5M ≈ seconds of
     * single-stream fetch); unknown estimates keep the structural
     * decision — the grammar gates are already conservative. */
-  private def fitsFetchBudget(p: LogicalPlan): Boolean = {
+  private def fitsFetchBudget(estimate: Option[BigInt]): Boolean = {
     val raw = conf.getConfString("spark.graft.fusion.maxFetchRows", "5000000")
     val budget =
       try BigInt(raw.trim)
@@ -269,7 +271,7 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
       }
     require(budget >= 0,
       s"spark.graft.fusion.maxFetchRows must be non-negative, got '$raw'")
-    estimateRows(p).forall(_ <= budget)
+    estimate.forall(_ <= budget)
   }
 
   private def convert(p: LogicalPlan): Option[LogicalPlan] = {
@@ -300,8 +302,9 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     // fitsFetchBudget): even a reducing, grammar-eligible subtree stays
     // on the partitioned scan path when catalog stats bound its result
     // above the single-stream fetch budget.
+    lazy val rows = estimateRows(p)
     if (backend.dialect.scanPreferred &&
-        (scanChain(p) || bareWindowRoot(p) || !fitsFetchBudget(p))) return None
+        (scanChain(p) || bareWindowRoot(p) || !fitsFetchBudget(rows))) return None
 
     val resolver: SqlGen.TableResolver = pl => leafOf(pl).map(_._2)
     val fused = withoutPruningHints(p)
@@ -309,12 +312,13 @@ object SqlPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
     SqlGen(fused, resolver, backend.dialect).toOption.map { sql =>
       // a fused WINDOW query over a scan-preferred backend may still get
       // a partitioned parallel read: N disjoint slice queries whose
-      // union is the result (see windowSlices)
-      val sliceGen =
-        if (backend.dialect.scanPreferred) {
+      // union is the result (see windowSlices). The leaf keeps the
+      // budget estimate for later passes over its parent.
+      if (backend.dialect.scanPreferred) {
+        val sliceGen =
           windowSlices(fused, resolver, backend).getOrElse(PushedSqlQuery.noSlices)
-        } else PushedSqlQuery.noSlices
-      PushedSqlQuery(p.output, sql, backend)(sliceGen)
+        PushedSqlQuery(p.output, sql, backend)(sliceGen, rows)
+      } else PushedSqlQuery(p.output, sql, backend)()
     }
   }
 

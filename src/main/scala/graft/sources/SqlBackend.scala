@@ -359,18 +359,17 @@ class SparkViewBackend(dir: String) extends SqlBackend {
     executeSql(sql)
     rowCounts.clear()
   }
-  /** Each query runs as the backend session's own plan, never as a task-
-    * side fetch (see [[ViewBackendConnection]]). */
+  /** The query runs as the backend session's own plan, never as a task-
+    * side fetch (see [[ViewBackendConnection]]). It is always one query:
+    * only `scanPreferred` backends get window slices. */
   override def executeSqlsToRdd(sqls: Seq[String], expected: StructType): RDD[InternalRow] = {
-    val rdds = sqls.map { sql =>
-      val df = session.sql(sql)
-      // types, not just arity: InternalRows decoded against a mismatched
-      // schema read wrong offsets/widths — silent corruption, not an error
-      require(df.schema.map(_.dataType) == expected.map(_.dataType),
-        s"backend schema ${df.schema.map(_.dataType).mkString(",")} != " +
-          s"expected ${expected.map(_.dataType).mkString(",")} for: $sql")
-      df.queryExecution.toRdd
-    }
-    if (rdds.size == 1) rdds.head else session.sparkContext.union(rdds)
+    require(sqls.size == 1, s"the view backend runs one query, got ${sqls.size}")
+    val df = session.sql(sqls.head)
+    // types, not just arity: InternalRows decoded against a mismatched
+    // schema read wrong offsets/widths — silent corruption, not an error
+    require(df.schema.map(_.dataType) == expected.map(_.dataType),
+      s"backend schema ${df.schema.map(_.dataType).mkString(",")} != " +
+        s"expected ${expected.map(_.dataType).mkString(",")} for: ${sqls.head}")
+    df.queryExecution.toRdd
   }
 }

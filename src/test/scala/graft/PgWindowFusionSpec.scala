@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pgwire.MiniPgServer
-import graft.plans.{GraftExtensions, PushedSqlExec}
+import graft.plans.{GraftExtensions, PushedSqlExec, PushedSqlQuery}
 import graft.sources.{PgWire, PgWireBackend}
 
 /** PARTITIONED window fusion on the Postgres dialect, end-to-end over a
@@ -443,6 +443,23 @@ class PgWindowFusionSpec extends AnyFunSuite {
         agg.queryExecution.executedPlan.toString)
       assert(agg.collect().head.getDouble(0) ==
         (1 to 40).filter(i => i % 5 <= 2).map(i => i * 10.0).sum)
+      // the 3-row grouped aggregate over dep fits and fuses on its own; the
+      // optimizer re-runs the rule to a fixed point, so the 40-row join
+      // above it meets that fused leaf on the next pass and must weigh it
+      // by its estimate, not as unknown, or it fuses whole
+      val overFused = {
+        val e = remote("emp")
+        val d = remote("dep").groupBy("id").agg(count(lit(1)).as("n"))
+        e.join(d, e("dept") === d("id")).select(e("id"), col("n"))
+      }
+      val plan = overFused.queryExecution.optimizedPlan
+      assert(plan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
+      }.size == 1, s"emp must keep its partitioned scan:\n$plan")
+      assert(plan.collect { case q: PushedSqlQuery => q.sql.contains("JOIN") } == Seq(false),
+        s"only the aggregate fuses:\n$plan")
+      assert(overFused.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
+        (1 to 40).filter(i => i % 5 <= 2).map(i => (i, 1L)).toSet)
     } finally spark.conf.unset("spark.graft.fusion.maxFetchRows")
     // default budget (5M): the same semi join fuses into one wire query
     val fused = shaped()

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Diff two `graft.PlanDump` output directories.
 
-    python3 tools/plan_diff.py <dirA> <dirB> [--context N] [--max-lines N]
+    python3 tools/plan_diff.py <dirA> <dirB>
 
 PlanDump writes one `<entry>_<suffix>.txt` per entry (one suffix per run).
 Entries are matched by name across the two directories. Before comparing,
@@ -14,11 +14,10 @@ each plan is normalized for what differs between two runs of the same code:
   - source line numbers       `Dedup.scala:822`       -> `Dedup.scala:N`
   - fused-SQL names           `gq_17`, `"c1234"`      -> `gq_N`, `"cN"`
 
-Prints each entry that differs (a unified diff of the normalized text),
-each entry present on one side only, and a summary line. Exit status is
-0 when nothing differs, 1 otherwise.
+Prints each entry that differs (the whole unified diff of the normalized
+text, 2 lines of context per hunk), each entry present on one side only,
+and a summary line. Exit status is 0 when nothing differs, 1 otherwise.
 """
-import argparse
 import difflib
 import os
 import re
@@ -60,17 +59,10 @@ def read(path):
         return normalize(fh.read()).splitlines()
 
 
-def main(argv=None):
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("dir_a")
-    ap.add_argument("dir_b")
-    ap.add_argument("--context", type=int, default=2,
-                    help="lines of context per hunk (default 2)")
-    ap.add_argument("--max-lines", type=int, default=80,
-                    help="diff lines printed per entry (default 80, 0 = all)")
-    args = ap.parse_args(argv)
-
-    a, b = entries(args.dir_a), entries(args.dir_b)
+def main(argv):
+    if len(argv) != 2:
+        sys.exit("usage: plan_diff.py <dirA> <dirB>")
+    a, b = entries(argv[0]), entries(argv[1])
     differing = 0
     for name in sorted(a.keys() - b.keys()):
         print(f"ONLY-A {name}")
@@ -81,14 +73,10 @@ def main(argv=None):
         if la == lb:
             continue
         differing += 1
-        diff = list(difflib.unified_diff(la, lb, a[name], b[name],
-                                         n=args.context, lineterm=""))
         print(f"DIFF {name}")
-        shown = diff if args.max_lines == 0 else diff[:args.max_lines]
-        for line in shown:
+        for line in difflib.unified_diff(la, lb, a[name], b[name],
+                                         n=2, lineterm=""):
             print("  " + line)
-        if len(shown) < len(diff):
-            print(f"  ... {len(diff) - len(shown)} more diff lines")
     common = len(a.keys() & b.keys())
     only = len(a.keys() ^ b.keys())
     print(f"{common} common entries, {differing} differ, {only} on one side only")
@@ -96,4 +84,4 @@ def main(argv=None):
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))
